@@ -858,16 +858,10 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         feats.groupBy("doc_id", "__tgt", "bucket").agg(F.count("*").alias("c")),
         eager=True,
     )
-    # r14: the bucket model is referenced by totals AND model_l —
-    # unpinned, each reference re-read the 37 MB doc_buckets pin and
-    # re-ran the bucket aggregate (two identical 0.16 MB-output stages
-    # in the r14 stage profile). The model is DSIR_BUCKETS rows (2^14)
-    # at ANY corpus size — pinning it is free and saves one full pass
-    # over the featurized table per evaluation.
-    model = stage_pin(doc_buckets.groupBy("bucket").agg(
+    model = doc_buckets.groupBy("bucket").agg(
         F.sum(F.when(F.col("__tgt"), F.col("c")).otherwise(0)).alias("c_t"),
         F.sum(F.when(~F.col("__tgt"), F.col("c")).otherwise(0)).alias("c_r"),
-    ))
+    )
     totals = model.agg(
         F.sum("c_t").cast("long").alias("n_t"),
         F.sum("c_r").cast("long").alias("n_r"),
@@ -909,14 +903,6 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_score = with_u.withColumn(
         "gumbel_score", F.round(F.col("log_importance") + gumbel, 4)
     ).drop("__u", "__gu_in_ln", "__gu_out_ln")
-    # r14 (guide §2.4/§5): with_score feeds BOTH the top-k selection
-    # and the final tag-back join; unpinned, each consumer re-read the
-    # 37 MB doc_buckets pin and re-ran the model broadcast + scoring
-    # aggregate (4 consumer stages in plans/r14 stage profile). The
-    # pin is doc-cardinality with 4 numeric columns — strictly smaller
-    # than the doc_buckets pin this operator already carries, so the
-    # scale posture is unchanged; values identical (pure barrier).
-    with_score = stage_pin(with_score)
     topk = (
         with_score.orderBy(F.desc("gumbel_score"), F.asc("doc_id"))
         .limit(DSIR_SELECT_K)

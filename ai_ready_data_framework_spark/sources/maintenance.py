@@ -20,8 +20,10 @@ production lake needs that the reference implies but never specifies:
 
 from __future__ import annotations
 
+import json
 import math
 import os
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -299,11 +301,65 @@ def write_audit_publish(
     return path
 
 
-# LSH band-index maintenance (VERDICT r3 missing #3): q_dedup_incremental's
-# docstring promises a PERSISTED (band, bk)-bucketed index; this is the
-# writer that maintains it. Bucket count sizes the probe join's
-# parallelism — on a real cluster set it like shuffle partitions.
-BAND_INDEX_BUCKETS = 32
+# ---------------------------------------------------------------------------
+# Persisted bucketed indexes: the layout of all three in one place. The
+# epoch-delta lifecycle over them (probe view, compaction, maintenance,
+# forget, stream driver) is streaming/lifecycle.py. Bucket count sizes
+# the probe join's parallelism — on a real cluster set it like shuffle
+# partitions.
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class IndexSpec:
+    """Physical layout of one persisted bucketed index: the bucket (and
+    sort) columns, the bucket count, and the key column that erasure
+    and tombstones match on. ``subdir`` names the directory under the
+    index path that holds the bucketed table (IVF keeps ``vectors``
+    beside its centroid side table)."""
+
+    bucket_cols: "tuple[str, ...]"
+    n_buckets: int
+    key_col: str
+    subdir: str | None = None
+
+    def table_dir(self, path: str) -> str:
+        return f"{path}/{self.subdir}" if self.subdir else path
+
+
+BAND_INDEX = IndexSpec(("band", "bk"), 32, "doc_id")
+GRAM_INDEX = IndexSpec(("h",), 32, "doc_id")
+IVF_INDEX = IndexSpec(("cell",), 16, "vec_id", subdir="vectors")
+BAND_INDEX_BUCKETS = BAND_INDEX.n_buckets
+IVF_INDEX_BUCKETS = IVF_INDEX.n_buckets
+
+
+def write_bucketed(
+    df: DataFrame,
+    table_name: str,
+    location: str,
+    bucket_cols: "tuple[str, ...]",
+    n_buckets: int,
+) -> None:
+    """The one bucketed index write, under every build and every
+    generation publish. A bucketed scan reports HashPartitioning on the
+    bucket columns, so the corpus-sized index side of a probe join
+    needs no exchange; the sort keeps parquet min/max stats tight so
+    point probes prune files. The write repartitions onto the bucket
+    columns first — Spark's bucket id and repartition's
+    hashpartitioning share the same murmur3-pmod, so partition id ==
+    bucket id and each task writes EXACTLY one bucket file; without it
+    a bucketed write emits up to tasks × buckets files and compaction
+    would not consolidate."""
+    (
+        df.repartition(n_buckets, *bucket_cols)
+        .write.mode("overwrite")
+        .bucketBy(n_buckets, *bucket_cols)
+        .sortBy(*bucket_cols)
+        .option("path", location)
+        .format("parquet")
+        .saveAsTable(table_name)
+    )
 
 
 def write_band_index(
@@ -314,37 +370,10 @@ def write_band_index(
 ) -> None:
     """Materialize an LSH band index (functions/text.py::minhash_bands
     output: doc_id, __sig, band, bk) as a parquet table BUCKETED and
-    SORTED by (band, bk).
-
-    Why bucketed: a bucketed scan reports HashPartitioning(band, bk),
-    which satisfies the probe join's clustering requirement — the
-    CORPUS-sized index side joins with NO exchange and NO sort; only
-    the (small) new-batch side shuffles to align. The hot-bucket
-    window in the probe (count/min over (band, bk)) rides the same
-    partitioning for free. Incremental maintenance appends each
-    ingested batch's bands to the same table (bucket spec keeps
-    appended files aligned); the sort keeps parquet min/max stats
-    tight so point probes prune files.
-
-    r9: the build repartitions onto the bucket columns first —
-    Spark's bucket id and repartition's hashpartitioning share the
-    same murmur3-pmod, so partition id == bucket id and each task
-    writes EXACTLY one bucket file. Without it a bucketed write emits
-    one file per (task, bucket) — up to tasks × buckets files — and
-    compaction (streaming/dedup.py::compact_band_index, which rewrites
-    through this function) wouldn't actually consolidate. One extra
-    exchange at build time buys the read-optimized layout every probe
-    reads forever (the same rule the IVF generation publish
-    applies to its cell buckets)."""
-    (
-        bands.repartition(n_buckets, "band", "bk")
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "band", "bk")
-        .sortBy("band", "bk")
-        .option("path", path)
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
+    SORTED by (band, bk); the hot-bucket window in the probe
+    (count/min over (band, bk)) rides the same partitioning for
+    free."""
+    write_bucketed(bands, table_name, path, BAND_INDEX.bucket_cols, n_buckets)
 
 
 def read_band_index(spark: SparkSession, table_name: str) -> DataFrame:
@@ -354,29 +383,11 @@ def read_band_index(spark: SparkSession, table_name: str) -> DataFrame:
     return spark.table(table_name)
 
 
-def append_band_index(bands: DataFrame, table_name: str) -> None:
-    """Fold a new batch's bands INTO the persisted index (the
-    incremental-maintenance half write_band_index's docstring
-    promises). Append with the SAME bucket spec: Spark verifies it
-    against the table's metadata, and each appended file set stays
-    aligned to the (band, bk) buckets so the probe join's exchange-free
-    property survives ingestion after ingestion."""
-    (
-        bands.write.mode("append")
-        .bucketBy(BAND_INDEX_BUCKETS, "band", "bk")
-        .sortBy("band", "bk")
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Persisted IVF vector index (r8): the band-index recipe applied to
 # ANN — fit once, write the cell assignments bucketed by cell, probe
 # forever without refitting the quantizer.
 # ---------------------------------------------------------------------------
-
-IVF_INDEX_BUCKETS = 16
 
 
 def write_ivf_index(
@@ -388,28 +399,18 @@ def write_ivf_index(
 ) -> None:
     """Materialize an IVF index (operators/ai.py::ivf_fit_assign
     output) as a parquet table BUCKETED and SORTED by cell plus a tiny
-    centroid side table under ``path``/centroids.
-
-    Why bucketed: the probe's candidate-pruning equi-join clusters on
-    cell — a bucketed scan reports HashPartitioning(cell), so the
-    CORPUS-sized vector side joins with NO exchange; only the
-    probes-sized query side shuffles to align. The sort keeps parquet
-    min/max stats tight so an nprobe-cell lookup prunes files. The
-    KMeans fit (the expensive, driver-coordinated step) runs exactly
-    once, at WRITE time — probes never refit, which is the difference
-    between an index and a cache. r10: the build repartitions onto the
-    bucket column first (write_band_index symmetry — partition id ==
-    bucket id, one file per bucket from day one instead of one per
-    task × bucket; the input is a fresh KMeans.transform output, so
-    the exchange is never planner-elided)."""
-    (
-        assigned.repartition(n_buckets, "cell")
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "cell")
-        .sortBy("cell")
-        .option("path", f"{path}/vectors")
-        .format("parquet")
-        .saveAsTable(table_name)
+    centroid side table under ``path``/centroids. The probe's
+    candidate-pruning equi-join clusters on cell, so only the
+    probes-sized query side shuffles. The KMeans fit (the expensive,
+    driver-coordinated step) runs exactly once, at WRITE time — probes
+    never refit, which is the difference between an index and a
+    cache."""
+    write_bucketed(
+        assigned,
+        table_name,
+        IVF_INDEX.table_dir(path),
+        IVF_INDEX.bucket_cols,
+        n_buckets,
     )
     centroids.write.mode("overwrite").parquet(f"{path}/centroids")
 
@@ -493,7 +494,7 @@ def append_ivf_index(
     n_buckets: int = IVF_INDEX_BUCKETS,
 ) -> None:
     """Fold an ingested batch into the persisted IVF index — the
-    incremental-maintenance half, mirroring append_band_index: assign
+    incremental-maintenance half: assign
     cells from the SAVED centroid table (no refit — the quantizer is
     frozen at build time, the standard IVF ingestion contract;
     ``ivf_refit_needed`` is the drift gate that says when to re-fit),
@@ -508,8 +509,8 @@ def append_ivf_index(
     (
         assign_cells(new_vectors, centroids)
         .write.mode("append")
-        .bucketBy(n_buckets, "cell")
-        .sortBy("cell")
+        .bucketBy(n_buckets, *IVF_INDEX.bucket_cols)
+        .sortBy(*IVF_INDEX.bucket_cols)
         .format("parquet")
         .saveAsTable(table_name)
     )
@@ -522,28 +523,16 @@ def compact_ivf_index(
     n_buckets: int = IVF_INDEX_BUCKETS,
 ) -> None:
     """Fold all appended generations back into single-file-set cell
-    buckets (VERDICT r8 #2 — the maintenance half of the persisted IVF
-    index, mirroring ``compact_band_index``): after N ingestion cycles
-    ``append_ivf_index`` has left N file sets per bucket, so every
-    probe reads N files per cell; one rewrite restores one sorted file
-    per bucket and keeps probe latency flat under steady-state
-    ingestion. The bucket spec is re-declared identically, so the
-    probe join's exchange-free property survives compaction.
-
-    r10: rewrites through the staged generation publish instead of
-    in-place (the r9 form dropped the table and overwrote its own
-    directory — a crash mid-rewrite destroyed the index; now the live
-    generation stays intact and readable until the new one is
-    complete, and no lineage-truncating checkpoint barrier is needed
-    because the read and the write never touch the same files). The
-    input is read from the FILES, not the catalog table: the bucketed
-    table's scan reports HashPartitioning(cell) and Catalyst then
-    elides the repartition the one-file-per-bucket layout depends on —
-    while executing the scan file-per-file, so the "compacted" output
-    kept one file per input file (measured: 40 in, 39 out). A raw
-    parquet read has unknown partitioning, so the exchange actually
-    runs and 16 buckets come out as 16 files. The centroid side table
-    is untouched (compaction never refits)."""
+    buckets: after N ingestion cycles ``append_ivf_index`` has left N
+    file sets per bucket, so every probe reads N files per cell; one
+    rewrite through the staged generation publish restores one sorted
+    file per bucket and keeps probe latency flat under steady-state
+    ingestion. The input is read from the FILES, not the catalog
+    table: the bucketed scan reports HashPartitioning(cell), Catalyst
+    then elides the repartition while executing the scan
+    file-per-file, and the "compacted" output kept one file per input
+    file (measured: 40 in, 39 out). The centroid side table is
+    untouched (compaction never refits)."""
     vecs = spark.read.parquet(_table_location(spark, table_name))
     publish_ivf_generation(spark, vecs, table_name, path, n_buckets)
 
@@ -638,13 +627,9 @@ def ivf_refit_needed(
 
 
 # ---------------------------------------------------------------------------
-# Crash-safe generation publish (round 10 — ADVICE r9 + VERDICT r9 #2).
-#
-# The r9 compactors rewrote the index IN PLACE (drop table, overwrite
-# the same directory): a crash mid-rewrite destroyed the base, and a
-# crash between the rewrite and the delta-log delete double-counted
-# every folded row on the next read. This section replaces in-place
-# rewrites with the lakehouse generation protocol:
+# Crash-safe generation publish: every index rewrite (compaction,
+# refit, forget) goes through the lakehouse generation protocol, never
+# an in-place rewrite:
 #
 #   stage   — write the new contents to a FRESH directory
 #             ({path}/vectors_gen{G}) as a bucketed staging table;
@@ -661,9 +646,9 @@ def ivf_refit_needed(
 #             manifest becomes visible atomically WITH the data it
 #             describes, which is the whole crash-safety argument:
 #             readers skip delta partitions listed as folded, so the
-#             window between publish and delta deletion can no longer
-#             double rows (ADVICE r9), and re-running compaction after
-#             a crash anywhere converges instead of re-folding.
+#             window between publish and delta deletion cannot double
+#             rows, and re-running compaction after a crash anywhere
+#             converges instead of re-folding.
 #   clean   — delete folded delta partitions and the previous
 #             generation directory. Best-effort: a crash here leaves
 #             orphan files that the manifest already excludes; the
@@ -698,13 +683,11 @@ def table_properties(spark: SparkSession, table_name: str) -> dict:
 
 def folded_epochs_of(spark: SparkSession, table_name: str) -> set:
     """Delta epochs already folded into the live index generation —
-    readers (streaming/ivf.py::indexed_vectors) and compaction must
+    readers (streaming/lifecycle.py::probe_view) and compaction must
     SKIP these even if their delta partitions still exist on disk
     (the crash window between publish and delta deletion)."""
-    import json as _json
-
     raw = table_properties(spark, table_name).get(_PROP_FOLDED)
-    return set(_json.loads(raw)) if raw else set()
+    return set(json.loads(raw)) if raw else set()
 
 
 def _table_location(spark: SparkSession, table_name: str) -> str | None:
@@ -733,24 +716,18 @@ def publish_bucketed_generation(
     audits: "dict[str, callable] | None" = None,
 ) -> str:
     """Stage → audit → publish a new generation of ANY bucketed index
-    table (protocol comment above) — the shared core under the IVF
-    vector index and the LSH band index. Generation directories are
+    table (protocol comment above). Generation directories are
     siblings of ``gen_dir_base`` (``{base}_gen{G}``); returns the new
     one. ``folded_epochs`` lands in the table manifest atomically with
     the folded data — pass None to PRESERVE the live generation's
     folded set (the plain-compaction case), an explicit list to
     replace it; ``extra_props`` lets a caller swap side-artifact
-    pointers (the refit path's centroids) in the same catalog commit —
-    existing ``idx.*`` side-artifact properties CARRY OVER by default
-    and extra_props overrides key-by-key (code-review r13: the plain
-    compactors passed neither, so a routine compaction after a refit
-    dropped idx.centroids_path and silently re-pointed every probe at
-    the stale build-time quantizer, and compact_ivf_index also reset
-    the folded manifest while folded delta partitions could still be
-    on disk); ``audits`` run against the staged files, AuditFailure
-    keeps them for inspection."""
-    import json as _json
-
+    pointers (the refit path's centroids) in the same catalog commit.
+    Existing ``idx.*`` side-artifact properties CARRY OVER by default
+    (extra_props overrides key-by-key): a routine compaction after a
+    refit must not re-point probes at the stale build-time quantizer.
+    ``audits`` run against the staged files; AuditFailure keeps them
+    for inspection."""
     prev_props = table_properties(spark, table_name)
     carried = {
         k: v
@@ -758,23 +735,13 @@ def publish_bucketed_generation(
         if k.startswith("idx.") and k not in (_PROP_GEN, _PROP_FOLDED)
     }
     if folded_epochs is None:
-        folded_epochs = sorted(
-            _json.loads(prev_props.get(_PROP_FOLDED) or "[]")
-        )
-    gen = _generation_of(spark, table_name) + 1
+        folded_epochs = json.loads(prev_props.get(_PROP_FOLDED) or "[]")
+    gen = int(prev_props.get(_PROP_GEN, 0)) + 1
     gen_dir = f"{gen_dir_base}_gen{gen}"
     staging_table = f"{table_name}__staging"
     spark.sql(f"DROP TABLE IF EXISTS {staging_table}")
     _fs_delete(spark, gen_dir)  # a failed earlier attempt's leftovers
-    (
-        df.repartition(n_buckets, *bucket_cols)
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .option("path", gen_dir)
-        .format("parquet")
-        .saveAsTable(staging_table)
-    )
+    write_bucketed(df, staging_table, gen_dir, bucket_cols, n_buckets)
     staged = spark.table(staging_table)
     failed = [n for n, check in (audits or {}).items() if not check(staged)]
     if failed:
@@ -786,7 +753,7 @@ def publish_bucketed_generation(
     )
     props = {
         _PROP_GEN: str(gen),
-        _PROP_FOLDED: _json.dumps(sorted(folded_epochs)),
+        _PROP_FOLDED: json.dumps(sorted(folded_epochs)),
         **carried,
         **(extra_props or {}),
     }
@@ -808,7 +775,7 @@ def publish_bucketed_generation(
     # invisible to parquet scans): the loud-window recovery record
     fs, jpath = _hdfs(spark, f"{gen_dir}/{IVF_MANIFEST}")
     out = fs.create(jpath, True)
-    out.write(bytearray(_json.dumps({"create_sql": create_sql}).encode()))
+    out.write(bytearray(json.dumps({"create_sql": create_sql}).encode()))
     out.close()
     old_loc = _table_location(spark, table_name)
     spark.sql(f"DROP TABLE IF EXISTS {staging_table}")  # files stay (external)
@@ -839,8 +806,8 @@ def publish_ivf_generation(
         spark,
         vecs,
         table_name,
-        f"{path}/vectors",
-        ("cell",),
+        IVF_INDEX.table_dir(path),
+        IVF_INDEX.bucket_cols,
         n_buckets,
         folded_epochs=folded_epochs,
         extra_props=extra,
@@ -854,12 +821,8 @@ def recover_index_table(spark: SparkSession, gen_dir_base: str) -> None:
     DROP→CREATE swap window (table name undefined, data intact).
     ``gen_dir_base`` is the same base passed to the publish (IVF:
     ``{path}/vectors``; band index: the index path)."""
-    import json as _json
-
-    import os as _os
-
-    parent = _os.path.dirname(gen_dir_base.rstrip("/"))
-    base = _os.path.basename(gen_dir_base.rstrip("/"))
+    parent = os.path.dirname(gen_dir_base.rstrip("/"))
+    base = os.path.basename(gen_dir_base.rstrip("/"))
     fs, jdir = _hdfs(spark, parent)
     gens = [
         st.getPath().getName()
@@ -877,12 +840,12 @@ def recover_index_table(spark: SparkSession, gen_dir_base: str) -> None:
         )
     finally:
         stream.close()
-    spark.sql(_json.loads(raw.decode())["create_sql"])
+    spark.sql(json.loads(raw.decode())["create_sql"])
 
 
 def recover_ivf_table(spark: SparkSession, path: str) -> None:
     """IVF wrapper of :func:`recover_index_table`."""
-    recover_index_table(spark, f"{path}/vectors")
+    recover_index_table(spark, IVF_INDEX.table_dir(path))
 
 
 def refit_ivf_index(
@@ -894,10 +857,10 @@ def refit_ivf_index(
     cfg=None,
     n_buckets: int = IVF_INDEX_BUCKETS,
 ) -> dict:
-    """Act on ``ivf_refit_needed`` (VERDICT r9 #2 — the half that was
-    'left to the operator'): fit a FRESH quantizer over everything the
-    index currently serves (bucketed base ∪ un-compacted deltas),
-    stage the reassigned index to a new generation, VERIFY it — row
+    """Act on ``ivf_refit_needed``: fit a FRESH quantizer over
+    everything the index currently serves (bucketed base ∪
+    un-compacted deltas), stage the reassigned index to a new
+    generation, VERIFY it — row
     conservation always; probe recall vs the pre-refit index on the
     caller's fixed query batch when given (recall measured against the
     exact brute-force top-k, the honest ground truth; the audit demands
@@ -915,27 +878,22 @@ def refit_ivf_index(
     from ai_ready_data_framework_spark.operators import ai as _ai
 
     cfg = cfg or _ai.DEFAULT_ANN
-    # pin the delta-epoch set FIRST and read exactly that set: the old
-    # form read indexed_vectors, then re-listed the delta dir for the
-    # fold manifest — an epoch landed in between was marked folded
-    # (and deleted) without its rows ever entering the new generation
-    # (code-review r13; same listing-pinned discipline as
-    # compact_ivf_index_deltas)
-    if delta_dir is not None:
-        present = sorted(_delta_epochs_present(spark, delta_dir))
-        unfolded = [
-            e
-            for e in present
-            if e not in folded_epochs_of(spark, table_name)
-        ]
-    else:
-        present, unfolded = [], []
+    # pin the delta-epoch set FIRST and read exactly that set: an epoch
+    # that lands after the listing must be neither marked folded nor
+    # deleted, since its rows never enter the new generation
+    present = (
+        sorted(_delta_epochs_present(spark, delta_dir))
+        if delta_dir is not None
+        else []
+    )
+    folded_prev = folded_epochs_of(spark, table_name)
+    unfolded = [e for e in present if e not in folded_prev]
     current = spark.table(table_name).select("vec_id", "embedding")
     if unfolded:
         current = current.unionByName(
-            spark.read.parquet(
-                *[f"{delta_dir}/epoch={e}" for e in unfolded]
-            ).select("vec_id", "embedding")
+            read_epoch_deltas_pinned(spark, delta_dir, unfolded).select(
+                "vec_id", "embedding"
+            )
         )
     # one count, reused for the sample rate AND the conservation audit
     n_pre = current.count()
@@ -959,26 +917,25 @@ def refit_ivf_index(
         audits["probe_recall"] = lambda staged: _probe_recall(
             _ai.ivf_probe(staged, new_centroids, queries, cfg), exact
         ) >= floor - 1e-9
-    folded = present  # the pinned listing, not a fresh one
+    # the pinned listing, not a fresh one, is what the new generation folds
     gen_dir = publish_ivf_generation(
         spark,
         assigned,
         table_name,
         path,
         n_buckets,
-        folded_epochs=folded,
+        folded_epochs=present,
         centroids_path=cen_path,
         audits=audits,
     )
-    if delta_dir is not None:
-        for e in folded:
-            _fs_delete(spark, f"{delta_dir}/epoch={e}")
+    for e in present:
+        _fs_delete(spark, f"{delta_dir}/epoch={e}")
     if queries is not None:
         new_assigned, new_cen = read_ivf_index(spark, table_name, path)
         report["recall_post"] = _probe_recall(
             _ai.ivf_probe(new_assigned, new_cen, queries, cfg), exact
         )
-    report.update({"generation_dir": gen_dir, "folded_epochs": folded})
+    report.update({"generation_dir": gen_dir, "folded_epochs": present})
     return report
 
 
@@ -994,10 +951,6 @@ def _delta_epochs_present(spark: SparkSession, delta_dir: str) -> set:
     }
 
 
-def has_epoch_deltas(spark: SparkSession, delta_dir: str) -> bool:
-    return bool(_delta_epochs_present(spark, delta_dir))
-
-
 def read_epoch_deltas(
     spark: SparkSession,
     delta_dir: str,
@@ -1005,15 +958,13 @@ def read_epoch_deltas(
     exclude_epochs: "frozenset[int] | set[int]" = frozenset(),
 ) -> DataFrame | None:
     """Epoch-keyed delta rows with the ``epoch`` column dropped — the
-    ONE reader under the three index modules' delta logs (code-review
-    r13: streaming/{dedup,spans,ivf}.py carried three verbatim copies
-    that had to be kept in behavioral sync by hand). ``before_epoch``
+    probe-side reader of every index's delta log. ``before_epoch``
     hides the current epoch's own half-written delta from a failed
     attempt's replay; ``exclude_epochs`` drops partitions the index
     manifest already records as FOLDED into the base (the r10
     crash-idempotence contract: a crash between the compaction publish
     and the delta-log delete must not double those rows)."""
-    if not has_epoch_deltas(spark, delta_dir):
+    if not _delta_epochs_present(spark, delta_dir):
         return None
     deltas = spark.read.parquet(delta_dir)
     if before_epoch is not None:
@@ -1027,18 +978,13 @@ def read_epoch_deltas(
 
 def read_epoch_deltas_pinned(
     spark: SparkSession, delta_dir: str, epochs: "list[int]"
-) -> DataFrame | None:
+) -> DataFrame:
     """Read EXACTLY the listed delta epochs by explicit partition path
-    — the COMPACTORS' reader (code-review r13): a root-dir read races
+    — the compactors' and the refit's reader: a root-dir read races
     concurrent ingest, folding an epoch that landed between the
-    listing and the read WITHOUT recording it in the manifest — its
-    rows would serve doubled and the next compaction would bake the
-    duplication into the base forever. Reading the pinned paths makes
-    the folded data and the folded manifest the same set by
-    construction (the listing-pinned discipline refit_ivf_index
-    applies)."""
-    if not epochs:
-        return None
+    listing and the read WITHOUT recording it in the manifest. Reading
+    the pinned paths makes the folded data and the folded manifest the
+    same set by construction."""
     return spark.read.parquet(
         *[f"{delta_dir.rstrip('/')}/epoch={e}" for e in sorted(epochs)]
     )
@@ -1143,26 +1089,16 @@ def forget_keys(
     ("defined and ENFORCED data retention and deletion schedules",
     /root/reference/factors/requirements.yaml:197-199).
 
-    Dataflow: the key set is takedown-sized and broadcasts; the base
-    reads from its bucketed files (one linear pass), the anti-join is
-    map-side, and the republish re-lands one file per bucket — the
-    same cost as a compaction. Audits pin exact row conservation AND
-    zero surviving postings for the forgotten keys; a failed audit
-    keeps the live generation serving (AuditFailure). Folded-epoch and
+    Dataflow: the base reads from its bucketed files (one linear pass),
+    the anti-join is map-side, and the republish re-lands one file per
+    bucket — the same cost as a compaction. A failed audit keeps the
+    live generation serving (AuditFailure). Folded-epoch and
     side-artifact table properties (e.g. the IVF centroids pointer)
     carry over unchanged. Idempotent AND cheap to re-run: when the key
     set matches ZERO live postings the republish is skipped entirely —
-    the generation number does not advance and no files are rewritten,
-    so a converging re-run of a completed deletion schedule costs one
-    column-pruned semi-join per index, not a compaction-sized rewrite
-    (code-review r12).
-
-    Callers must compact pending deltas FIRST (each index's wrapper
-    does) and should invoke this only after the ingest checkpoint has
-    committed past the epochs that carried the keys — a later stream
-    REPLAY of those epochs would re-land the postings, so takedown at
-    the source (the landing zone) is part of the procedure, exactly as
-    with any log-structured store."""
+    the generation number does not advance and no files are rewritten.
+    Callers compact pending deltas first and tombstone the landing
+    zone (streaming/lifecycle.py::forget does both)."""
     key_set = keys.select(key_col).distinct()
     loc = _table_location(spark, table_name)
     if loc is None:
@@ -1171,12 +1107,11 @@ def forget_keys(
         raise ValueError(
             f"index table {table_name!r} does not exist; cannot forget keys"
         )
-    base = spark.read.parquet(loc)
-    n_base = base.count()
-    n_forget = base.join(F.broadcast(key_set), key_col, "left_semi").count()
+    n_base, n_forget, survivors, audits = _erasure(
+        spark.read.parquet(loc), key_set, key_col
+    )
     if n_forget == 0:
         return {"removed_rows": 0, "kept_rows": n_base}
-    survivors = base.join(F.broadcast(key_set), key_col, "left_anti")
     # folded-epoch manifest and idx.* side-artifact pointers (the IVF
     # centroids) carry over through the publish by default (r13 — the
     # same preservation every plain compaction gets)
@@ -1187,16 +1122,28 @@ def forget_keys(
         gen_dir_base,
         bucket_cols,
         n_buckets,
-        audits={
-            "row_conservation": lambda staged: staged.count()
-            == n_base - n_forget,
-            "no_forgotten_keys": lambda staged: staged.join(
-                F.broadcast(key_set), key_col, "left_semi"
-            ).count()
-            == 0,
-        },
+        audits=audits,
     )
     return {"removed_rows": n_forget, "kept_rows": n_base - n_forget}
+
+
+def _erasure(base: DataFrame, key_set: DataFrame, key_col: str) -> tuple:
+    """One erasure rewrite of ``base``, planned: (rows, forgotten rows,
+    survivors, audits). The key set is takedown-sized and broadcasts;
+    the audits run against the STAGED rewrite and pin exact row
+    conservation AND zero surviving rows for the forgotten keys."""
+    n_base = base.count()
+    n_forget = base.join(F.broadcast(key_set), key_col, "left_semi").count()
+    audits = {
+        "row_conservation": lambda staged: staged.count()
+        == n_base - n_forget,
+        "no_forgotten_keys": lambda staged: staged.join(
+            F.broadcast(key_set), key_col, "left_semi"
+        ).count()
+        == 0,
+    }
+    survivors = base.join(F.broadcast(key_set), key_col, "left_anti")
+    return n_base, n_forget, survivors, audits
 
 
 # --- Right-to-erasure for DERIVED data products (VERDICT r11 #2) -------
@@ -1241,27 +1188,14 @@ def _forget_in_flat_dir(
     if not _fs_isdir(spark, path):
         return {"removed_rows": 0, "kept_rows": 0, "rewritten": False,
                 "missing": True}
-    base = spark.read.parquet(path)
-    n_base = base.count()
-    n_forget = base.join(F.broadcast(key_set), key_col, "left_semi").count()
+    n_base, n_forget, survivors, audits = _erasure(
+        spark.read.parquet(path), key_set, key_col
+    )
     if n_forget == 0:
         return {"removed_rows": 0, "kept_rows": n_base, "rewritten": False}
-    survivors = base.join(F.broadcast(key_set), key_col, "left_anti")
     if transform_survivors is not None:
         survivors = transform_survivors(survivors)
-    write_audit_publish(
-        spark,
-        survivors,
-        path,
-        audits={
-            "row_conservation": lambda staged: staged.count()
-            == n_base - n_forget,
-            "no_forgotten_keys": lambda staged: staged.join(
-                F.broadcast(key_set), key_col, "left_semi"
-            ).count()
-            == 0,
-        },
-    )
+    write_audit_publish(spark, survivors, path, audits=audits)
     return {
         "removed_rows": n_forget,
         "kept_rows": n_base - n_forget,

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ai_ready_data_framework_spark.io import load_table
 from ai_ready_data_framework_spark.operators.relational import cdc_merge
+from ai_ready_data_framework_spark.streaming.lifecycle import run_stream
 
 SNAPSHOT_SCHEMA = "o_orderkey long, total_price double, last_op string"
 
@@ -60,18 +61,9 @@ def run_cdc_stream(
         merged.write.mode("overwrite").parquet(snap_dirs[1 - cur])
         state["current"] = 1 - cur
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    run_stream(
+        spark, stage, schema, os.path.join(work_dir, "ckpt"), apply_batch
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return spark.read.parquet(snap_dirs[state["current"]])
 
 

@@ -1,6 +1,6 @@
 """Streaming incremental near-dedup: micro-batches of new documents
 probe the PERSISTED LSH band index, emit their near-dup pairs, then
-fold their own bands into the index — the always-on ingestion twin of
+fold their own bands into the index — the always-on ingestion form of
 q_dedup_incremental (operators/ai.py).
 
 Grounding: the reference's Factor 3 mandates stream-incremental
@@ -11,22 +11,17 @@ meet. Per micro-batch the work is (batch bands) ⋈ (index), so steady-
 state cost scales with ingest rate, never corpus size — the property
 that keeps a 100 TB corpus's dedup always-on instead of nightly.
 
-Replay safety: BOTH per-epoch writes are idempotent overwrites of an
-epoch-keyed location — pairs land in ``pairs_out/epoch=N`` and the
-batch's bands land in ``delta_dir/epoch=N`` (the lakehouse
-base+delta shape). A crashed-and-replayed epoch rewrites exactly the
-same files instead of appending duplicates, which matters doubly here:
-a double-appended band delta would inflate (band, bk) bucket counts
-forever — emitting duplicate pairs AND potentially pushing buckets
-over the hot cap. The probe index for epoch N is the bucketed base
-table plus deltas from epochs < N only, so a half-written delta from
-a failed attempt of N can never leak into its own retry.
-``compact_band_index`` periodically folds the deltas back into the
-bucketed base (restoring the exchange-free probe property for that
-data), exactly like any log-structured table maintenance.
+Replay safety and compaction are the shared epoch-delta lifecycle
+(streaming/lifecycle.py): pairs land in ``pairs_out/epoch=N`` and the
+batch's bands in ``delta_dir/epoch=N``, both idempotent overwrites.
+For this index a double-appended band delta would inflate (band, bk)
+bucket counts forever — emitting duplicate pairs AND potentially
+pushing buckets over the hot cap.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,18 +32,18 @@ from ai_ready_data_framework_spark.operators.ai import (
     SHINGLE_K,
     incremental_band_probe,
 )
-from ai_ready_data_framework_spark.sources.maintenance import (
-    BAND_INDEX_BUCKETS,
-    _delta_epochs_present,
-    _fs_delete,
-    _table_location,
-    folded_epochs_of,
-    has_epoch_deltas as _has_epoch_deltas,
-    publish_bucketed_generation,
-    read_band_index,
-    read_epoch_deltas as _delta_bands,
-    read_epoch_deltas_pinned,
+from ai_ready_data_framework_spark.sources.maintenance import (  # noqa: F401
+    BAND_INDEX,
+    read_band_index,  # re-exported: the band index's build/read pair
     write_band_index,
+)
+from ai_ready_data_framework_spark.streaming.lifecycle import (
+    compact,
+    forget,
+    maintain,
+    probe_view,
+    run_stream,
+    write_epoch,
 )
 
 # Mirrors the documents table's declared schema (FIXTURES.md) — the
@@ -69,12 +64,6 @@ def doc_bands(docs: DataFrame) -> DataFrame:
         ).alias("s"),
     )
     return T.minhash_bands(T.minhash_signatures(sh, "doc_id", "s"), "doc_id")
-
-
-# _delta_bands / _has_epoch_deltas are the shared readers from
-# sources/maintenance.py (r13 — three verbatim per-module copies
-# consolidated; the aliases keep this module's vocabulary and its
-# tests' monkeypatch points stable).
 
 
 def probe_and_fold(
@@ -108,100 +97,24 @@ def probe_and_fold(
     # rationale as probe_and_fold_spans' gram pin; code-review r13)
     batch_bands = stage_pin(doc_bands(batch_docs))
     batch_ids = batch_docs.select("doc_id").distinct()
-    idx = read_band_index(spark, index_table)
-    earlier = _delta_bands(
-        spark,
-        delta_dir,
-        epoch_id,
-        exclude_epochs=folded_epochs_of(spark, index_table),
+    idx = probe_view(spark, index_table, delta_dir, epoch_id).join(
+        F.broadcast(batch_ids), "doc_id", "left_anti"
     )
-    if earlier is not None:
-        idx = idx.unionByName(earlier)
-    idx = idx.join(F.broadcast(batch_ids), "doc_id", "left_anti")
     allb = idx.withColumn("__new", F.lit(False)).unionByName(
         batch_bands.withColumn("__new", F.lit(True))
     )
     pairs = incremental_band_probe(allb, is_new=F.col("__new"))
-    pairs.write.mode("overwrite").parquet(f"{pairs_out}/epoch={epoch_id}")
-    batch_bands.write.mode("overwrite").parquet(
-        f"{delta_dir}/epoch={epoch_id}"
-    )
+    write_epoch(pairs, pairs_out, epoch_id)
+    write_epoch(batch_bands, delta_dir, epoch_id)
 
 
-def compact_band_index(
-    spark: SparkSession, index_table: str, index_path: str, delta_dir: str
-) -> None:
-    """Fold all un-folded epoch deltas into the bucketed base index
-    and drop their delta partitions — after compaction, probes of the
-    folded data are exchange-free again. Run on whatever cadence keeps
-    the delta union small.
-
-    r10: crash-idempotent via the staged generation publish, exactly
-    like streaming/ivf.py::compact_ivf_index_deltas — the catalog swap
-    records the folded epoch ids atomically with the folded data
-    (readers skip manifest-listed partitions, re-runs converge), the
-    live generation stays readable until the new one is complete, and
-    the old lineage-truncating localCheckpoint barrier is gone because
-    the staging write lands in a fresh sibling directory. The base is
-    read from its FILES, not the catalog table: the bucketed scan
-    claims matching HashPartitioning and Catalyst elides the
-    repartition while executing file-per-file, leaving one output file
-    per input file (the compact_ivf_index lesson)."""
-    folded_prev = folded_epochs_of(spark, index_table)
-    present = _delta_epochs_present(spark, delta_dir)
-    to_fold = sorted(present - folded_prev)
-    if to_fold:
-        base = spark.read.parquet(_table_location(spark, index_table))
-        # pinned to the listed epochs: a root-dir read here would fold
-        # an epoch that landed after the listing WITHOUT recording it
-        # as folded — served doubled, then re-folded (code-review r13)
-        deltas = read_epoch_deltas_pinned(spark, delta_dir, to_fold)
-        merged = base if deltas is None else base.unionByName(deltas)
-        publish_bucketed_generation(
-            spark,
-            merged,
-            index_table,
-            index_path,
-            ("band", "bk"),
-            BAND_INDEX_BUCKETS,
-            folded_epochs=sorted((folded_prev & present) | set(to_fold)),
-        )
-    for e in sorted(folded_prev | set(to_fold)):
-        _fs_delete(spark, f"{delta_dir}/epoch={e}")
-
-
-def maintain_band_index(
-    spark: SparkSession,
-    index_table: str,
-    index_path: str,
-    delta_dir: str,
-    compact_after: int = 4,
-) -> dict:
-    """One scheduled maintenance pass for the band index — the
-    compaction cadence as a single idempotent callable, the band
-    twin of ``streaming.ivf.maintain_ivf_index`` (run it from cron /
-    your orchestrator between ingest windows):
-
-    1. If the UN-FOLDED delta count has reached ``compact_after``,
-       fold the deltas into the bucketed base
-       (``compact_band_index``) so probes of that data return to the
-       exchange-free path.
-    2. Else do nothing.
-
-    There is deliberately NO refit branch: unlike the IVF quantizer,
-    MinHash banding has no fitted parameters — the band of a document
-    is a pure function of its text — so the structure cannot drift
-    and folding deltas is the only maintenance it ever needs.
-    Already-folded epochs never re-trigger (the generation manifest
-    read), so a crashed pass re-runs safely — the compactor's own
-    convergence contract. Returns ``{"action": "compact"|"none",
-    ...detail}``."""
-    folded = folded_epochs_of(spark, index_table)
-    pending = sorted(_delta_epochs_present(spark, delta_dir) - folded)
-    if len(pending) >= compact_after:
-        compact_band_index(spark, index_table, index_path, delta_dir)
-        return {"action": "compact", "folded_epochs": pending}
-    return {"action": "none", "pending_epochs": pending}
+# The band index's lifecycle (streaming/lifecycle.py). There is
+# deliberately no refit hook: MinHash banding has no fitted parameters —
+# the band of a document is a pure function of its text — so folding
+# deltas is the only maintenance it ever needs. Forget takes doc_ids.
+compact_band_index = partial(compact, BAND_INDEX)
+maintain_band_index = partial(maintain, BAND_INDEX, None)
+forget_documents_band = partial(forget, BAND_INDEX)
 
 
 def run_incremental_dedup_stream(
@@ -215,72 +128,17 @@ def run_incremental_dedup_stream(
     tombstone_dir: str | None = None,
 ) -> None:
     """Drive the incremental dedup over a file stream of document
-    parquet drops. availableNow + maxFilesPerTrigger=1 gives one
-    micro-batch per dropped file — deterministic for tests, and the
-    exact shape of a production landing-zone listener.
-    ``tombstone_dir`` (r12): anti-join each batch against the takedown
-    tombstone set before probing/landing, so replays and re-drops
-    never re-land a forgotten document's bands (see
-    forget_documents_band)."""
-    from ai_ready_data_framework_spark.sources.maintenance import (
-        apply_forget_tombstones,
-        read_forget_tombstones,
-    )
-
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(stream_docs_dir)
-    )
-
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df = apply_forget_tombstones(
-            batch_df, read_forget_tombstones(spark, tombstone_dir)
-        )
-        probe_and_fold(
-            spark, batch_df, index_table, delta_dir, pairs_out, epoch_id
-        )
-
-    (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def forget_documents_band(
-    spark: SparkSession,
-    doc_ids: DataFrame,
-    index_table: str,
-    index_path: str,
-    delta_dir: str,
-    tombstone_dir: str | None = None,
-) -> dict:
-    """Takedown for the band index — the band twin of
-    streaming/spans.py::forget_documents_gram: compact pending deltas,
-    then republish the bucketed base without the forgotten documents'
-    band postings (crash-safe, audited, idempotent). A forgotten doc
-    stops appearing in every future probe's pair set. ``tombstone_dir``
-    (r12): append the keys to the landing-zone tombstone set first, so
-    a dedup stream given the same dir drops them from every future
-    micro-batch (incl. checkpoint-loss replays)."""
-    from ai_ready_data_framework_spark.sources.maintenance import (
-        BAND_INDEX_BUCKETS,
-        forget_keys,
-        write_forget_tombstones,
-    )
-
-    if tombstone_dir is not None:
-        write_forget_tombstones(spark, doc_ids, tombstone_dir)
-    compact_band_index(spark, index_table, index_path, delta_dir)
-    return forget_keys(
+    parquet drops, one micro-batch per file (lifecycle.run_stream,
+    which drops ``tombstone_dir``'s forgotten doc_ids from every
+    batch)."""
+    run_stream(
         spark,
-        doc_ids,
-        index_table,
-        index_path,
-        ("band", "bk"),
-        BAND_INDEX_BUCKETS,
-        key_col="doc_id",
+        stream_docs_dir,
+        DOCS_SCHEMA,
+        checkpoint_dir,
+        lambda batch_df, epoch_id: probe_and_fold(
+            spark, batch_df, index_table, delta_dir, pairs_out, epoch_id
+        ),
+        max_files_per_trigger,
+        tombstone_dir,
     )

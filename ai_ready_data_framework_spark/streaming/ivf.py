@@ -2,8 +2,7 @@
 assigned to cells from the SAVED centroid table, landed as epoch-keyed
 deltas, drift-checked against the index's cell-occupancy distribution,
 and periodically compacted back into the bucketed base — the always-on
-ingestion twin of sources/maintenance.py's batch IVF path, mirroring
-streaming/dedup.py's band-index loop shape exactly.
+ingestion form of sources/maintenance.py's batch IVF path.
 
 Grounding: the reference's vector-index assets demand a MAINTAINED
 index under continuous ingestion (vector_index_coverage /
@@ -15,14 +14,12 @@ cost scales with ingest rate, never index size.
 
 Replay safety: ``append_ivf_index`` (the batch helper) appends to the
 bucketed table, so a crashed-and-replayed epoch would DOUBLE its rows.
-This loop therefore lands each epoch as an idempotent OVERWRITE of
-``delta_dir/epoch=N`` (the lakehouse base+delta shape the band index
-uses): a replay rewrites the same files. Probes read base ∪ deltas —
-delta rows are not bucketed, so probes against them shuffle; that is
-the documented cost of recency, bounded by compaction cadence.
-``compact_ivf_index_deltas`` folds the deltas into the bucketed base
-(one file set per cell bucket restored — the probe's exchange-free
-property covers ALL data again) and drops the delta log.
+This loop instead runs the shared epoch-delta lifecycle
+(streaming/lifecycle.py): each epoch lands as an idempotent OVERWRITE
+of ``delta_dir/epoch=N``, probes read base ∪ deltas (delta rows are not
+bucketed, so probes against them shuffle — the documented cost of
+recency, bounded by compaction cadence), and compaction folds them
+back into one file set per cell bucket.
 
 Refit signal: every epoch can evaluate ``ivf_refit_needed`` (PSI of
 cell occupancy, batch vs index) and append a one-row drift record to
@@ -36,20 +33,26 @@ maintenance because it rewrites the whole index.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_ready_data_framework_spark.sources.maintenance import (
-    IVF_INDEX_BUCKETS,
+    IVF_INDEX,
     _delta_epochs_present,
-    _fs_delete,
     assign_cells,
-    folded_epochs_of,
-    has_epoch_deltas as _has_epoch_deltas,
     ivf_refit_needed,
-    publish_ivf_generation,
-    read_epoch_deltas,
     read_epoch_deltas_pinned,
+    refit_ivf_index,
+)
+from ai_ready_data_framework_spark.streaming.lifecycle import (
+    compact,
+    forget,
+    maintain,
+    probe_view,
+    run_stream,
+    write_epoch,
 )
 
 # Mirrors the embeddings table's declared schema (FIXTURES.md) minus
@@ -57,26 +60,12 @@ from ai_ready_data_framework_spark.sources.maintenance import (
 EMB_SCHEMA = "vec_id bigint, embedding array<float>"
 
 
-# _delta_cells is the shared epoch-delta reader from
-# sources/maintenance.py (r13 consolidation — the (vec_id, embedding,
-# cell) schema comes from the delta files themselves).
-_delta_cells = read_epoch_deltas
-
-
 def indexed_vectors(
     spark: SparkSession, table_name: str, delta_dir: str
 ) -> DataFrame:
-    """The probe view: bucketed base ∪ un-compacted deltas. Base rows
-    keep their exchange-free bucket partitioning; delta rows (bounded
-    by compaction cadence) shuffle like any fresh frame. Delta
-    partitions listed in the base's folded-epoch manifest are skipped
-    — they are already IN the base, and their files merely outlived a
-    compaction that crashed before its cleanup step."""
-    base = spark.table(table_name)
-    deltas = _delta_cells(
-        spark, delta_dir, exclude_epochs=folded_epochs_of(spark, table_name)
-    )
-    return base if deltas is None else base.unionByName(deltas)
+    """The probe view: bucketed base ∪ un-compacted, un-folded deltas
+    (lifecycle.probe_view)."""
+    return probe_view(spark, table_name, delta_dir)
 
 
 def ingest_epoch(
@@ -95,71 +84,14 @@ def ingest_epoch(
     epoch-keyed, so it replays idempotently too."""
     assigned = assign_cells(batch_vectors, centroids)
     if drift_log_dir is not None:
-        idx = spark.table(table_name)
-        earlier = _delta_cells(
-            spark,
-            delta_dir,
-            epoch_id,
-            exclude_epochs=folded_epochs_of(spark, table_name),
-        )
-        if earlier is not None:
-            idx = idx.unionByName(earlier)
+        idx = probe_view(spark, table_name, delta_dir, epoch_id)
         refit, psi = ivf_refit_needed(idx, assigned, centroids)
-        spark.createDataFrame(
+        drift = spark.createDataFrame(
             [(epoch_id, float(psi), bool(refit))],
             "epoch bigint, cell_psi double, refit_needed boolean",
-        ).write.mode("overwrite").parquet(f"{drift_log_dir}/epoch={epoch_id}")
-    assigned.write.mode("overwrite").parquet(f"{delta_dir}/epoch={epoch_id}")
-
-
-def compact_ivf_index_deltas(
-    spark: SparkSession,
-    table_name: str,
-    path: str,
-    delta_dir: str,
-    n_buckets: int = IVF_INDEX_BUCKETS,
-) -> None:
-    """Fold all un-folded epoch deltas into the bucketed base (one
-    rewrite, one file set per cell bucket — repartition-by-cell makes
-    partition id == bucket id); after compaction every probe is
-    exchange-free again.
-
-    Crash-idempotent (ADVICE r9): the fold goes through the staged
-    GENERATION publish (sources/maintenance.py::publish_ivf_generation)
-    whose catalog swap records the folded epoch ids in the table
-    manifest atomically with the folded data — so a crash after the
-    publish but before the delta deletion below cannot double rows
-    (readers skip manifest-listed epochs), and re-running this
-    function converges: already-folded leftovers are excluded from the
-    merge and only deleted. A crash BEFORE the publish leaves the live
-    generation and the delta log untouched. No checkpoint barrier is
-    needed any more — the staging write lands in a fresh directory, so
-    the read and the write never touch the same files. Manifest
-    hygiene: the recorded list is (previous folds still on disk) ∪
-    (this fold), so entries self-clean once their partitions are
-    actually deleted."""
-    folded_prev = folded_epochs_of(spark, table_name)
-    present = _delta_epochs_present(spark, delta_dir)
-    to_fold = sorted(present - folded_prev)
-    if to_fold:
-        base = spark.table(table_name)
-        # pinned to the listed epochs — a root-dir read would fold an
-        # epoch landed after the listing without recording it as
-        # folded: served doubled, then re-folded (code-review r13)
-        deltas = read_epoch_deltas_pinned(spark, delta_dir, to_fold)
-        merged = base if deltas is None else base.unionByName(deltas)
-        publish_ivf_generation(
-            spark,
-            merged,
-            table_name,
-            path,
-            n_buckets,
-            folded_epochs=sorted((folded_prev & present) | set(to_fold)),
         )
-    # cleanup half — every failure mode before this point is covered
-    # by the manifest; every partition deleted here is already folded
-    for e in sorted(folded_prev | set(to_fold)):
-        _fs_delete(spark, f"{delta_dir}/epoch={e}")
+        write_epoch(drift, drift_log_dir, epoch_id)
+    write_epoch(assigned, delta_dir, epoch_id)
 
 
 def run_ivf_ingest_stream(
@@ -174,31 +106,14 @@ def run_ivf_ingest_stream(
     tombstone_dir: str | None = None,
 ) -> None:
     """Drive IVF ingestion over a file stream of embedding parquet
-    drops. availableNow + maxFilesPerTrigger=1 gives one micro-batch
-    per dropped file — deterministic for tests, and the exact shape of
-    a production landing-zone listener. Compaction is NOT in the loop:
-    it is table maintenance, run on whatever cadence keeps the delta
-    union small (call compact_ivf_index_deltas between/after runs).
-    ``tombstone_dir`` (r12): anti-join each batch against the takedown
-    tombstone set (keyed by vec_id) before assigning cells, so replays
-    and re-drops never re-land a forgotten vector (see
-    forget_vectors_ivf)."""
-    from ai_ready_data_framework_spark.sources.maintenance import (
-        apply_forget_tombstones,
-        read_forget_tombstones,
-    )
-
-    stream = (
-        spark.readStream.schema(EMB_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(stream_vectors_dir)
-    )
-
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df = apply_forget_tombstones(
-            batch_df, read_forget_tombstones(spark, tombstone_dir)
-        )
-        ingest_epoch(
+    drops, one micro-batch per file (lifecycle.run_stream, which drops
+    ``tombstone_dir``'s forgotten vec_ids from every batch)."""
+    run_stream(
+        spark,
+        stream_vectors_dir,
+        EMB_SCHEMA,
+        checkpoint_dir,
+        lambda batch_df, epoch_id: ingest_epoch(
             spark,
             batch_df,
             centroids,
@@ -206,14 +121,9 @@ def run_ivf_ingest_stream(
             delta_dir,
             epoch_id,
             drift_log_dir=drift_log_dir,
-        )
-
-    (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        ),
+        max_files_per_trigger,
+        tombstone_dir,
     )
 
 
@@ -227,87 +137,49 @@ def maintain_ivf_index(
     compact_after: int = 4,
 ) -> dict:
     """One scheduled maintenance pass — the action the drift log
-    promises, as a single idempotent callable (run it from cron/your
-    orchestrator between ingest windows):
+    promises (lifecycle.maintain with the refit hook):
 
     1. If any UN-FOLDED epoch's drift record says ``refit_needed``,
        run ``refit_ivf_index`` (fits a fresh quantizer over base ∪
        deltas, verifies, atomically swaps, folds the deltas).
     2. Else if the un-folded delta count has reached
-       ``compact_after``, fold them back into the bucketed base
-       (``compact_ivf_index_deltas``) so probes return to the
-       exchange-free path.
+       ``compact_after``, compact.
     3. Else do nothing.
 
-    Already-folded epochs never re-trigger either action (the
-    manifest read), so a crashed pass re-runs safely — the same
-    convergence contract as the compactor it wraps. Returns
-    ``{"action": "refit"|"compact"|"none", ...detail}``."""
-    from ai_ready_data_framework_spark.sources.maintenance import (
-        refit_ivf_index,
-    )
+    Returns ``{"action": "refit"|"compact"|"none", ...detail}``."""
 
-    folded = folded_epochs_of(spark, table_name)
-    pending = sorted(_delta_epochs_present(spark, delta_dir) - folded)
-    drifted = False
-    if drift_log_dir is not None and pending:
-        fs_has = _has_epoch_deltas(spark, drift_log_dir)
-        if fs_has:
-            log = spark.read.parquet(drift_log_dir)
-            drifted = (
-                log.filter(
-                    F.col("epoch").isin([int(e) for e in pending])
-                    & F.col("refit_needed")
-                ).limit(1).count()
-                > 0
-            )
-    if drifted:
+    def refit_if_drifted(pending: list[int]) -> dict | None:
+        # read only the pending epochs' drift records (epoch-keyed like
+        # the deltas; an epoch ingested without a drift log has none)
+        if drift_log_dir is None:
+            return None
+        logged = _delta_epochs_present(spark, drift_log_dir)
+        records = sorted(logged.intersection(pending))
+        if not records:
+            return None
+        log = read_epoch_deltas_pinned(spark, drift_log_dir, records)
+        if log.filter(F.col("refit_needed")).limit(1).count() == 0:
+            return None
         report = refit_ivf_index(
             spark, table_name, path, delta_dir=delta_dir, queries=queries
         )
         return {"action": "refit", **report}
-    if len(pending) >= compact_after:
-        compact_ivf_index_deltas(spark, table_name, path, delta_dir)
-        return {"action": "compact", "folded_epochs": pending}
-    return {"action": "none", "pending_epochs": pending}
 
-
-def forget_vectors_ivf(
-    spark: SparkSession,
-    vec_ids: DataFrame,
-    table_name: str,
-    path: str,
-    delta_dir: str,
-    tombstone_dir: str | None = None,
-) -> dict:
-    """Takedown for the IVF index — the vector twin of
-    streaming/spans.py::forget_documents_gram: fold pending deltas,
-    then republish the cell-bucketed assignments without the forgotten
-    vec_ids (crash-safe, audited, idempotent). The centroids pointer
-    carries over through the republish (forget_keys preserves idx.*
-    table properties), so probes keep pairing the surviving
-    assignments with the same frozen quantizer — erasure never
-    silently changes recall for the survivors. ``tombstone_dir``
-    (r12): append the vec_ids to the landing-zone tombstone set first,
-    so an ingest stream given the same dir drops them from every
-    future micro-batch (incl. checkpoint-loss replays)."""
-    from ai_ready_data_framework_spark.sources.maintenance import (
-        IVF_INDEX_BUCKETS,
-        forget_keys,
-        write_forget_tombstones,
-    )
-
-    if tombstone_dir is not None:
-        write_forget_tombstones(
-            spark, vec_ids, tombstone_dir, key_col="vec_id"
-        )
-    compact_ivf_index_deltas(spark, table_name, path, delta_dir)
-    return forget_keys(
+    return maintain(
+        IVF_INDEX,
+        refit_if_drifted,
         spark,
-        vec_ids,
         table_name,
-        f"{path}/vectors",
-        ("cell",),
-        IVF_INDEX_BUCKETS,
-        key_col="vec_id",
+        path,
+        delta_dir,
+        compact_after,
     )
+
+
+# The IVF index's compaction and takedown (streaming/lifecycle.py;
+# forget takes vec_ids). The centroids pointer carries over through
+# every republish, so probes keep pairing the surviving assignments with
+# the same quantizer — compaction and erasure never silently change
+# recall.
+compact_ivf_index_deltas = partial(compact, IVF_INDEX)
+forget_vectors_ivf = partial(forget, IVF_INDEX)

@@ -2,10 +2,8 @@
 new documents probe a PERSISTED gram-postings index — "does any run of
 >= min_run consecutive tokens in this incoming doc already exist in the
 corpus?" — emit the matching spans, then fold their own grams into the
-index. The always-on ingestion twin of q_dedup_spans /
-q_decontam_spans (operators/ai.py), completing the third persisted
-index's lifecycle alongside the band index (streaming/dedup.py) and
-the IVF index (streaming/ivf.py).
+index. The always-on ingestion form of q_dedup_spans /
+q_decontam_spans (operators/ai.py).
 
 Grounding: the reference's Factor 3 mandates stream-incremental
 propagation (/root/reference/factors/3-current.md:13); the north star
@@ -22,18 +20,14 @@ Two copies arriving in the SAME micro-batch do not flag each other
 (compose ``duplicated_spans(batch, keep='first')`` on the batch for
 that); they are corpus from the next epoch on.
 
-Replay safety: the epoch-keyed OVERWRITE protocol shared with the
-band/IVF twins — spans land in ``spans_out/epoch=N``, the batch's
-grams in ``delta_dir/epoch=N``; the probe set for epoch N is the
-bucketed base plus deltas from epochs < N only, so a failed attempt's
-half delta never leaks into its own retry. Compaction folds deltas
-into the base through the staged generation publish
-(sources/maintenance.py::publish_bucketed_generation): the folded
-epoch ids land in the table manifest atomically with the folded data,
-so a crash between publish and delta cleanup cannot double rows.
+Replay safety and compaction are the shared epoch-delta lifecycle
+(streaming/lifecycle.py): spans land in ``spans_out/epoch=N`` and the
+batch's grams in ``delta_dir/epoch=N``, both idempotent overwrites.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,19 +37,23 @@ from ai_ready_data_framework_spark.operators.ai import (
     SPAN_MIN_RUN,
     _merge_gram_intervals,
     gram_postings,
+    strip_duplicated_spans,
 )
 from ai_ready_data_framework_spark.sources.maintenance import (
-    _delta_epochs_present,
-    _fs_delete,
-    _table_location,
-    folded_epochs_of,
-    publish_bucketed_generation,
-    read_epoch_deltas as _delta_grams,
-    read_epoch_deltas_pinned,
+    GRAM_INDEX,
+    write_bucketed,
 )
 from ai_ready_data_framework_spark.streaming.dedup import DOCS_SCHEMA
+from ai_ready_data_framework_spark.streaming.lifecycle import (
+    compact,
+    forget,
+    maintain,
+    run_stream,
+    unfolded_deltas,
+    write_epoch,
+)
 
-GRAM_INDEX_BUCKETS = 32
+GRAM_INDEX_BUCKETS = GRAM_INDEX.n_buckets
 
 
 def write_gram_index(
@@ -67,21 +65,8 @@ def write_gram_index(
     """Materialize gram postings (operators/ai.py::gram_postings
     output: doc_id, pos, h) bucketed and sorted by hash — the probe
     semi-join's corpus side then reports HashPartitioning(h) and joins
-    with no exchange and no sort. Repartition-before-bucketBy so each
-    task writes exactly one bucket file (the band/IVF writer rule)."""
-    (
-        grams.repartition(n_buckets, "h")
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "h")
-        .sortBy("h")
-        .option("path", path)
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-
-
-# _delta_grams is the shared epoch-delta reader from
-# sources/maintenance.py (r13 consolidation).
+    with no exchange and no sort."""
+    write_bucketed(grams, table_name, path, GRAM_INDEX.bucket_cols, n_buckets)
 
 
 def probe_and_fold_spans(
@@ -116,37 +101,37 @@ def probe_and_fold_spans(
     # with them, the delta write lands them) — pin so the HOF shingle
     # build runs once per epoch, not once per action
     batch_grams = stage_pin(gram_postings(batch_docs, min_run=min_run))
-    earlier = _delta_grams(
-        spark,
-        delta_dir,
-        epoch_id,
-        exclude_epochs=folded_epochs_of(spark, index_table),
-    )
     spans = probe_spans(
         spark,
         batch_grams,
         index_table,
-        earlier=earlier,
+        earlier=unfolded_deltas(spark, index_table, delta_dir, epoch_id),
         min_run=min_run,
         exclude_ids=batch_docs.select("doc_id").distinct(),
     )
+    _write_spans(batch_docs, spans, spans_out, scrubbed_out, epoch_id)
+    write_epoch(batch_grams, delta_dir, epoch_id)
+
+
+def _write_spans(
+    batch_docs: DataFrame,
+    spans: DataFrame,
+    spans_out: str,
+    scrubbed_out: str | None,
+    epoch_id: int,
+) -> None:
+    """Land the epoch's span report and, with ``scrubbed_out``, the
+    batch rewritten by ``strip_duplicated_spans``."""
     if scrubbed_out is not None:
         # the WRITE side of the always-on scrub (r11): the spans feed
         # two consumers (the report write and the strip), so pin the
         # epoch-sized frame — the probe semi-join runs once per epoch
         spans = stage_pin(spans)
-    spans.write.mode("overwrite").parquet(f"{spans_out}/epoch={epoch_id}")
+    write_epoch(spans, spans_out, epoch_id)
     if scrubbed_out is not None:
-        from ai_ready_data_framework_spark.operators.ai import (
-            strip_duplicated_spans,
+        write_epoch(
+            strip_duplicated_spans(batch_docs, spans), scrubbed_out, epoch_id
         )
-
-        strip_duplicated_spans(batch_docs, spans).write.mode(
-            "overwrite"
-        ).parquet(f"{scrubbed_out}/epoch={epoch_id}")
-    batch_grams.write.mode("overwrite").parquet(
-        f"{delta_dir}/epoch={epoch_id}"
-    )
 
 
 def probe_spans(
@@ -185,35 +170,13 @@ def probe_spans(
     return _merge_gram_intervals(ints, "doc_id")
 
 
-def compact_gram_index(
-    spark: SparkSession, index_table: str, index_path: str, delta_dir: str
-) -> None:
-    """Fold all un-folded epoch deltas into the bucketed base and drop
-    their delta partitions — probes of the folded data return to the
-    exchange-free path. Crash-idempotent via the staged generation
-    publish (folded epoch ids swap atomically with the folded data;
-    readers skip manifest-listed partitions; re-runs converge)."""
-    folded_prev = folded_epochs_of(spark, index_table)
-    present = _delta_epochs_present(spark, delta_dir)
-    to_fold = sorted(present - folded_prev)
-    if to_fold:
-        base = spark.read.parquet(_table_location(spark, index_table))
-        # pinned to the listed epochs — a root-dir read would fold an
-        # epoch landed after the listing without recording it as
-        # folded: served doubled, then re-folded (code-review r13)
-        deltas = read_epoch_deltas_pinned(spark, delta_dir, to_fold)
-        merged = base if deltas is None else base.unionByName(deltas)
-        publish_bucketed_generation(
-            spark,
-            merged,
-            index_table,
-            index_path,
-            ("h",),
-            GRAM_INDEX_BUCKETS,
-            folded_epochs=sorted((folded_prev & present) | set(to_fold)),
-        )
-    for e in sorted(folded_prev | set(to_fold)):
-        _fs_delete(spark, f"{delta_dir}/epoch={e}")
+# The gram index's lifecycle (streaming/lifecycle.py). No refit hook:
+# gram postings are a pure function of text, nothing fitted can drift.
+# Forget takes doc_ids; run it after the scrub stream's checkpoint has
+# committed past the epochs that carried them.
+compact_gram_index = partial(compact, GRAM_INDEX)
+maintain_gram_index = partial(maintain, GRAM_INDEX, None)
+forget_documents_gram = partial(forget, GRAM_INDEX)
 
 
 def run_span_scrub_stream(
@@ -229,12 +192,7 @@ def run_span_scrub_stream(
     tombstone_dir: str | None = None,
 ) -> None:
     """Drive the ExactSubstr scrub over a file stream of document
-    parquet drops — the gram-index twin of
-    streaming/dedup.py::run_incremental_dedup_stream. availableNow +
-    maxFilesPerTrigger=1 gives one micro-batch per dropped file:
-    deterministic for tests, and the exact shape of a production
-    landing-zone listener. Compaction is NOT in the loop — call
-    ``maintain_gram_index`` on its own cadence.
+    parquet drops, one micro-batch per file (lifecycle.run_stream).
 
     ``scrubbed_out`` (r11) completes the WRITE side: each epoch also
     lands the batch rewritten by ``strip_duplicated_spans`` — the
@@ -242,30 +200,14 @@ def run_span_scrub_stream(
     ``scrubbed_out/epoch=N``, the same replay-safe epoch-keyed
     overwrite as the span report. Training-shard builders consume the
     scrubbed partitions directly instead of re-deriving the strip.
-
-    ``tombstone_dir`` (r12) is the landing-zone half of erasure: each
-    micro-batch is broadcast-anti-joined against the takedown
-    tombstone set BEFORE probing or landing, so a checkpoint-loss
-    replay of a pre-forget epoch — or a fresh re-drop of the same
-    file — can never re-land a forgotten document's grams, spans, or
-    scrubbed text. forget_documents_gram writes the set when given
-    the same dir."""
-    from ai_ready_data_framework_spark.sources.maintenance import (
-        apply_forget_tombstones,
-        read_forget_tombstones,
-    )
-
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(stream_docs_dir)
-    )
-
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df = apply_forget_tombstones(
-            batch_df, read_forget_tombstones(spark, tombstone_dir)
-        )
-        probe_and_fold_spans(
+    ``tombstone_dir`` is the set forget_documents_gram writes when
+    given the same dir."""
+    run_stream(
+        spark,
+        stream_docs_dir,
+        DOCS_SCHEMA,
+        checkpoint_dir,
+        lambda batch_df, epoch_id: probe_and_fold_spans(
             spark,
             batch_df,
             index_table,
@@ -274,14 +216,9 @@ def run_span_scrub_stream(
             epoch_id,
             min_run=min_run,
             scrubbed_out=scrubbed_out,
-        )
-
-    (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        ),
+        max_files_per_trigger,
+        tombstone_dir,
     )
 
 
@@ -308,96 +245,18 @@ def run_decontam_stream(
     epoch (parity-tested); the epoch-keyed overwrites make replays
     no-ops in effect. Per-epoch cost follows ingest rate; the
     benchmark index side probes exchange-free off its buckets."""
-    from ai_ready_data_framework_spark.operators.ai import (
-        strip_duplicated_spans,
-    )
-    from ai_ready_data_framework_spark.sources.maintenance import (
-        apply_forget_tombstones,
-        read_forget_tombstones,
-    )
-
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(stream_docs_dir)
-    )
 
     def step(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df = apply_forget_tombstones(
-            batch_df, read_forget_tombstones(spark, tombstone_dir)
-        )
         grams = gram_postings(batch_df, min_run=min_run)
         spans = probe_spans(spark, grams, benchmark_table, min_run=min_run)
-        if scrubbed_out is not None:
-            spans = stage_pin(spans)
-        spans.write.mode("overwrite").parquet(f"{spans_out}/epoch={epoch_id}")
-        if scrubbed_out is not None:
-            strip_duplicated_spans(batch_df, spans).write.mode(
-                "overwrite"
-            ).parquet(f"{scrubbed_out}/epoch={epoch_id}")
+        _write_spans(batch_df, spans, spans_out, scrubbed_out, epoch_id)
 
-    (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def maintain_gram_index(
-    spark: SparkSession,
-    index_table: str,
-    index_path: str,
-    delta_dir: str,
-    compact_after: int = 4,
-) -> dict:
-    """One scheduled maintenance pass — the compact-after-N planner as
-    a single idempotent callable, completing the three-index symmetry
-    (streaming/ivf.py::maintain_ivf_index,
-    streaming/dedup.py::maintain_band_index). No refit branch: gram
-    postings are a pure function of text, nothing fitted can drift."""
-    folded = folded_epochs_of(spark, index_table)
-    pending = sorted(_delta_epochs_present(spark, delta_dir) - folded)
-    if len(pending) >= compact_after:
-        compact_gram_index(spark, index_table, index_path, delta_dir)
-        return {"action": "compact", "folded_epochs": pending}
-    return {"action": "none", "pending_epochs": pending}
-
-
-def forget_documents_gram(
-    spark: SparkSession,
-    doc_ids: DataFrame,
-    index_table: str,
-    index_path: str,
-    delta_dir: str,
-    tombstone_dir: str | None = None,
-) -> dict:
-    """Takedown for the gram index: fold pending deltas first (so the
-    forgotten docs' postings cannot survive in an un-folded epoch),
-    then republish the base without them
-    (sources/maintenance.py::forget_keys — crash-safe, audited,
-    idempotent). Run after the scrub stream's checkpoint has committed
-    past the epochs that carried these docs. ``tombstone_dir`` (r12)
-    closes the landing-zone half: the keys are appended to the
-    tombstone set FIRST (before any index work, so even a crash
-    mid-forget leaves the zone protected), and a scrub stream given
-    the same dir drops them from every future micro-batch — including
-    checkpoint-loss replays of pre-forget epochs."""
-    from ai_ready_data_framework_spark.sources.maintenance import (
-        forget_keys,
-        write_forget_tombstones,
-    )
-
-    if tombstone_dir is not None:
-        write_forget_tombstones(spark, doc_ids, tombstone_dir)
-    compact_gram_index(spark, index_table, index_path, delta_dir)
-    return forget_keys(
+    run_stream(
         spark,
-        doc_ids,
-        index_table,
-        index_path,
-        ("h",),
-        GRAM_INDEX_BUCKETS,
-        key_col="doc_id",
+        stream_docs_dir,
+        DOCS_SCHEMA,
+        checkpoint_dir,
+        step,
+        max_files_per_trigger,
+        tombstone_dir,
     )

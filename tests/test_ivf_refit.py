@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from ai_ready_data_framework_spark.operators import ai
 from ai_ready_data_framework_spark.sources import maintenance as M
 from ai_ready_data_framework_spark.streaming import ivf as SI
+from ai_ready_data_framework_spark.streaming import lifecycle as L
 
 
 @pytest.fixture()
@@ -143,7 +144,7 @@ def test_compaction_is_crash_idempotent(
     n_all = SI.indexed_vectors(spark, name, delta_dir).count()
 
     # simulated crash: the cleanup half never runs
-    monkeypatch.setattr(SI, "_fs_delete", lambda *_: None)
+    monkeypatch.setattr(L, "_fs_delete", lambda *_: None)
     SI.compact_ivf_index_deltas(spark, name, path, delta_dir)
     monkeypatch.undo()
     assert glob.glob(f"{delta_dir}/epoch=*")  # leftovers ARE on disk

@@ -15,6 +15,7 @@ from ai_ready_data_framework_spark.sources.maintenance import (
     write_band_index,
 )
 from ai_ready_data_framework_spark.streaming import dedup as SD
+from ai_ready_data_framework_spark.streaming import lifecycle as L
 
 STREAM_MOD = 5  # doc_id % 5 == 0 arrives via the stream, in two drops
 
@@ -164,7 +165,7 @@ def test_band_compaction_is_crash_idempotent(
     n_all = read_band_index(spark, table).count() + n_delta
 
     # simulated crash: the cleanup half never runs
-    monkeypatch.setattr(SD, "_fs_delete", lambda *_: None)
+    monkeypatch.setattr(L, "_fs_delete", lambda *_: None)
     SD.compact_band_index(spark, table, str(tmp_path / "index"), delta_dir)
     monkeypatch.undo()
     assert _glob.glob(f"{delta_dir}/epoch=*")  # leftovers ARE on disk
@@ -173,7 +174,7 @@ def test_band_compaction_is_crash_idempotent(
     assert read_band_index(spark, table).count() == n_all
     # the next epoch's probe must see the corpus exactly once: the
     # folded epoch-0 delta is skipped even though its files exist
-    earlier = SD._delta_bands(
+    earlier = M.read_epoch_deltas(
         spark, delta_dir, 1, exclude_epochs=M.folded_epochs_of(spark, table)
     )
     assert earlier is None or earlier.count() == 0
@@ -279,7 +280,7 @@ def test_maintain_band_index_crash_mid_compact_converges(
     )
 
     # simulated crash: the cleanup half of the compact never runs
-    monkeypatch.setattr(SD, "_fs_delete", lambda *_: None)
+    monkeypatch.setattr(L, "_fs_delete", lambda *_: None)
     rep = SD.maintain_band_index(
         spark, table, index_path, delta_dir, compact_after=2
     )
@@ -305,8 +306,71 @@ def test_maintain_band_index_crash_mid_compact_converges(
     assert read_band_index(spark, table).count() == n_all
 
 
+def _band_rows(spark, docs):
+    return SD.doc_bands(spark.createDataFrame(docs, "doc_id long, text string"))
+
+
+def _gram_rows(spark, docs):
+    from ai_ready_data_framework_spark.operators.ai import gram_postings
+
+    return gram_postings(
+        spark.createDataFrame(docs, "doc_id long, text string"), min_run=4
+    )
+
+
+def _ivf_rows(spark, docs):
+    return spark.createDataFrame(
+        [(d, [float(d), 1.0], d % 3) for d, _ in docs],
+        "vec_id long, embedding array<float>, cell int",
+    )
+
+
+def _lifecycle_index(index):
+    """(spec, compactor, planner, rows) for one persisted index: the
+    shared compactor/planner bindings each streaming module exports."""
+    from ai_ready_data_framework_spark.sources import maintenance as M
+    from ai_ready_data_framework_spark.streaming import ivf as SI
+    from ai_ready_data_framework_spark.streaming import spans as SS
+
+    return {
+        "band": (
+            M.BAND_INDEX, SD.compact_band_index, SD.maintain_band_index,
+            _band_rows,
+        ),
+        "gram": (
+            M.GRAM_INDEX, SS.compact_gram_index, SS.maintain_gram_index,
+            _gram_rows,
+        ),
+        "ivf": (
+            M.IVF_INDEX, SI.compact_ivf_index_deltas, SI.maintain_ivf_index,
+            _ivf_rows,
+        ),
+    }[index]
+
+
+def _words(prefix, n=12):
+    return " ".join(f"{prefix}{i}" for i in range(n))
+
+
+def _land_after_first_listing(monkeypatch, land):
+    """Make ``land()`` run right after the lifecycle's FIRST delta-dir
+    listing returns — an ingest epoch racing maintenance."""
+    real = L._delta_epochs_present
+    state = {"landed": False}
+
+    def racy(spark_, d):
+        out = real(spark_, d)
+        if not state["landed"]:
+            state["landed"] = True
+            land()
+        return out
+
+    monkeypatch.setattr(L, "_delta_epochs_present", racy)
+
+
+@pytest.mark.parametrize("index", ["band", "gram", "ivf"])
 def test_compactor_does_not_fold_epochs_landed_mid_run(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, index
 ):
     """Code-review r13 (compactor twin of the refit TOCTOU): an epoch
     that lands between the compactor's listing and its delta read must
@@ -314,62 +378,82 @@ def test_compactor_does_not_fold_epochs_landed_mid_run(
     WITHOUT recording it in the manifest, so its rows would serve
     doubled and the next compaction would bake the duplication into
     the base forever. The pinned-path read folds exactly the listed
-    set; the racer folds cleanly on the next pass."""
+    set; the racer folds cleanly on the next pass. Run once per index:
+    the three share one compactor."""
     import os
 
     from ai_ready_data_framework_spark.sources import maintenance as M
 
-    docs = spark.createDataFrame(
-        [(d, " ".join(f"w{d}_{i}" for i in range(12))) for d in (1, 2)],
-        "doc_id long, text string",
-    )
-    late = spark.createDataFrame(
-        [(9, " ".join(f"z{i}" for i in range(12)))],
-        "doc_id long, text string",
-    )
-    table = "band_compact_race"
+    spec, compactor, _, rows = _lifecycle_index(index)
+    docs = [(d, _words(f"w{d}_")) for d in (1, 2)]
+    late = [(9, _words("z"))]
+    table = f"{index}_compact_race"
     path = str(tmp_path / "index")
     delta = str(tmp_path / "deltas")
-    pairs = str(tmp_path / "pairs")
+    key = F.col(spec.key_col)
     try:
-        SD.write_band_index(SD.doc_bands(docs), table, path)
-        SD.probe_and_fold(
-            spark,
-            spark.createDataFrame(
-                [(5, " ".join(f"q{i}" for i in range(12)))],
-                "doc_id long, text string",
-            ),
-            table, delta, pairs, 0,
+        M.write_bucketed(
+            rows(spark, docs), table, spec.table_dir(path),
+            spec.bucket_cols, spec.n_buckets,
         )
-        real = SD._delta_epochs_present
-        state = {"landed": False}
-
-        def racy(spark_, d):
-            out = real(spark_, d)
-            if not state["landed"]:
-                state["landed"] = True
-                SD.doc_bands(late).write.mode("overwrite").parquet(
-                    f"{delta}/epoch=1"
-                )
-            return out
-
-        monkeypatch.setattr(SD, "_delta_epochs_present", racy)
-        SD.compact_band_index(spark, table, path, delta)
+        L.write_epoch(rows(spark, [(5, _words("q"))]), delta, 0)
+        _land_after_first_listing(
+            monkeypatch,
+            lambda: L.write_epoch(rows(spark, late), delta, 1),
+        )
+        compactor(spark, table, path, delta)
         spark.catalog.refreshTable(table)
         # the racer was NOT folded, NOT deleted, NOT in the base
         assert M.folded_epochs_of(spark, table) == {0}
         assert os.path.isdir(f"{delta}/epoch=1")
         base = spark.read.parquet(M._table_location(spark, table))
-        assert base.filter("doc_id = 9").count() == 0
-        assert base.filter("doc_id = 5").count() > 0  # epoch 0 folded
-        n_late_bands = SD.doc_bands(late).count()
+        assert base.filter(key == 9).count() == 0
+        assert base.filter(key == 5).count() > 0  # epoch 0 folded
+        n_late_rows = rows(spark, late).count()
 
         # next maintenance pass folds the racer exactly once
-        SD.compact_band_index(spark, table, path, delta)
+        compactor(spark, table, path, delta)
         spark.catalog.refreshTable(table)
         assert M.folded_epochs_of(spark, table) == {1}
         base2 = spark.read.parquet(M._table_location(spark, table))
-        assert base2.filter("doc_id = 9").count() == n_late_bands
+        assert base2.filter(key == 9).count() == n_late_rows
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        spark.sql(f"DROP TABLE IF EXISTS {table}__staging")
+
+
+@pytest.mark.parametrize("index", ["band", "gram", "ivf"])
+def test_planner_reports_epochs_the_compactor_folded(
+    spark, tmp_path, monkeypatch, index
+):
+    """An epoch that lands between the planner's listing and the
+    compactor's is folded by that compaction, so the planner's report
+    must name it: ``folded_epochs`` is the compactor's own list, equal
+    to the manifest the publish recorded — never the planner's
+    earlier listing."""
+    from ai_ready_data_framework_spark.sources import maintenance as M
+
+    spec, _, planner, rows = _lifecycle_index(index)
+    table = f"{index}_planner_race"
+    path = str(tmp_path / "index")
+    delta = str(tmp_path / "deltas")
+    try:
+        M.write_bucketed(
+            rows(spark, [(1, _words("w"))]), table, spec.table_dir(path),
+            spec.bucket_cols, spec.n_buckets,
+        )
+        for e in (0, 1):
+            L.write_epoch(rows(spark, [(10 + e, _words(f"e{e}_"))]), delta, e)
+        _land_after_first_listing(
+            monkeypatch,
+            lambda: L.write_epoch(rows(spark, [(12, _words("r"))]), delta, 2),
+        )
+        rep = planner(spark, table, path, delta, compact_after=2)
+        assert rep == {
+            "action": "compact",
+            "folded_epochs": sorted(M.folded_epochs_of(spark, table)),
+        }
+        assert rep["folded_epochs"] == [0, 1, 2]
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         spark.sql(f"DROP TABLE IF EXISTS {table}__staging")

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ai_ready_data_framework_spark.operators import ai
+from ai_ready_data_framework_spark.sources import maintenance as M
 from ai_ready_data_framework_spark.sources.maintenance import (
     IVF_INDEX_BUCKETS,
     write_ivf_index,
@@ -124,7 +125,7 @@ def test_compact_deltas_restores_exchange_free_base(
     spark.catalog.refreshTable(name)
     # row conservation + delta log gone + one file set per bucket
     assert spark.table(name).count() == n_merged
-    assert SI._delta_cells(spark, delta_dir) is None
+    assert M.read_epoch_deltas(spark, delta_dir) is None
     assert len(glob.glob(f"{vec_dir}/*.parquet")) <= IVF_INDEX_BUCKETS
     # probe identity over the compacted base (queries re-derived: the
     # pre-compaction frame's file listing is gone by design)

@@ -17,6 +17,7 @@ from ai_ready_data_framework_spark.operators.ai import (
     cross_duplicated_spans,
     gram_postings,
 )
+from ai_ready_data_framework_spark.streaming import lifecycle as L
 from ai_ready_data_framework_spark.streaming import spans as SS
 
 MIN_RUN = 4
@@ -331,7 +332,7 @@ def test_maintain_gram_index_crash_mid_compact_converges(
     )
 
     # simulated crash: the cleanup half of the compact never runs
-    monkeypatch.setattr(SS, "_fs_delete", lambda *_: None)
+    monkeypatch.setattr(L, "_fs_delete", lambda *_: None)
     rep = SS.maintain_gram_index(
         spark, table, index_path, delta_dir, compact_after=2
     )
