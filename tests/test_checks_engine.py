@@ -188,3 +188,251 @@ def test_propagation_sla_scores_serial_records_only(spark, sf_smoke):
     # no serial record yet -> vacuous compliance, not a violation
     ctx.run_log[:] = [dict(slow_pooled)]
     assert E.propagation_latency_compliance(ctx) == 1.0
+
+
+# --- table profiles -----------------------------------------------------------
+
+PROFILE_ONLY = (
+    "entity_identifier_declaration",
+    "constraint_declaration",
+    "data_freshness",
+    "retention_policy",
+    "consent_coverage",
+    "record_level_traceability",
+    "agent_attribution",
+)
+PROFILE_SERVED = PROFILE_ONLY + (
+    "demographic_representation",
+    "bias_testing_coverage",
+    "embedding_coverage",
+    "temporal_referential_integrity",
+)
+
+
+def _micro_product(spark, root, empty: str) -> dict:
+    """Six tables with one defect of each kind the profiles count:
+    events has a NULL and a duplicated PK (and a NULL ts), orders an
+    out-of-range total, documents a NULL in not_null ``text``,
+    embeddings a duplicated PK, a NULL label and a document without a
+    vector. The temporal table ``empty`` is written with no rows. The
+    label shares are dyadic, so the total variation is exact in any
+    summation order."""
+    import datetime as dt
+
+    from ai_ready_data_framework_spark.io import load_tables
+
+    d, ts = dt.date, dt.datetime
+    tables = {
+        "customer": (
+            [(1, "a"), (2, "b"), (3, "c")],
+            "c_custkey int, c_name string",
+        ),
+        "orders": (
+            [
+                (1, 10.0, d(2024, 1, 1)),
+                (2, -5.0, d(2024, 1, 10)),
+                (3, 5.0, d(2023, 12, 1)),
+            ],
+            "o_orderkey int, o_totalprice double, o_orderdate date",
+        ),
+        "lineitem": (
+            [
+                (1, 1, 0.1, 0.05, 3.0, d(2024, 1, 9)),
+                (1, 2, 0.2, 0.0, 1.0, d(2024, 1, 5)),
+            ],
+            "l_orderkey int, l_linenumber int, l_discount double, l_tax double,"
+            " l_quantity double, l_shipdate date",
+        ),
+        "events": (
+            [
+                (1, ts(2024, 1, 10), 5),
+                (2, ts(2024, 1, 1), None),
+                (2, ts(2019, 6, 1), 7),
+                (None, ts(2024, 1, 9), 8),
+                (3, None, 9),
+            ],
+            "event_id bigint, ts timestamp, user_id int",
+        ),
+        "documents": (
+            [(1, "x", "en"), (2, None, "fr"), (3, "z", "en")],
+            "doc_id bigint, text string, lang string",
+        ),
+        "embeddings": (
+            list(
+                zip(
+                    [1, 2, 2, 4, 5, 6, 7, 8],
+                    ["a", "a", "a", "b", "b", "c", "c", None],
+                )
+            ),
+            "vec_id bigint, label string",
+        ),
+    }
+    for name, (rows, schema) in tables.items():
+        spark.createDataFrame([] if name == empty else rows, schema).coalesce(
+            1
+        ).write.parquet(f"{root}/{name}.parquet")
+    return load_tables(spark, str(root))
+
+
+def _parent_formulas(T: dict) -> dict:
+    """Each profile-served check computed the way it was before the
+    profiles: its own scans, one per fact."""
+    from datetime import timedelta
+
+    from ai_ready_data_framework_spark.checks import registries as R
+    from ai_ready_data_framework_spark.checks.engine import _frac
+
+    def scalar(df):
+        v = df.collect()[0][0]
+        return 0.0 if v is None else float(v)
+
+    out = {}
+    ok = 0
+    for t in sorted(T):
+        cols = R.PRIMARY_KEYS[t].split(",")
+        row = T[t].agg(
+            F.count_distinct(*cols).alias("d"), F.count(F.lit(1)).alias("n")
+        ).first()
+        ok += row.d == row.n
+    out["entity_identifier_declaration"] = _frac(ok, len(T))
+    passed = 0
+    for t, c, kind, lo, hi in R.CONSTRAINTS:
+        col = F.col(c)
+        if kind == "unique":
+            holds = F.count_distinct(col) == F.count(col)
+        elif kind == "not_null":
+            holds = F.count(F.when(col.isNull(), 1)) == 0
+        else:
+            holds = F.count(F.when(~col.between(lo, hi), 1)) == 0
+        passed += T[t].agg(holds.cast("int")).first()[0]
+    out["constraint_declaration"] = _frac(passed, len(R.CONSTRAINTS))
+    temporal = {t: c for t, c in R.TEMPORAL_SCOPE.items() if c and t in T}
+    maxes = {
+        t: T[t].agg(F.max(F.col(c).cast("timestamp"))).first()[0]
+        for t, c in temporal.items()
+    }
+    fresh = 0
+    for t in temporal:
+        dom = R.TIMELINE_DOMAINS.get(t, t)
+        seen = [
+            maxes[u]
+            for u in temporal
+            if R.TIMELINE_DOMAINS.get(u, u) == dom and maxes[u] is not None
+        ]
+        # before the profiles an all-empty domain raised ValueError in
+        # max(); its members now count as stale
+        fresh += bool(seen) and maxes[t] is not None and (
+            max(seen) - maxes[t] <= timedelta(hours=R.FRESHNESS_SLA_HOURS)
+        )
+    out["data_freshness"] = _frac(fresh, len(temporal))
+    ok = 0
+    for t, days in R.RETENTION_DAYS.items():
+        c = F.col(R.TEMPORAL_SCOPE[t]).cast("timestamp")
+        row = T[t].agg(F.min(c).alias("lo"), F.max(c).alias("hi")).first()
+        ok += row.lo is not None and (row.hi - row.lo).days <= days
+    out["retention_policy"] = _frac(ok, len(R.RETENTION_DAYS))
+    personal = [t for t, m in R.ASSETS.items() if m.get("personal")]
+    out["consent_coverage"] = _frac(
+        sum(T[t].count() for t in personal if t in R.CONSENT_BASIS),
+        sum(T[t].count() for t in personal),
+    )
+    ev = T["events"]
+    out["record_level_traceability"] = _frac(
+        min(
+            ev.select("event_id").distinct().count(),
+            ev.filter(F.col("event_id").isNotNull()).count(),
+        ),
+        ev.count(),
+    )
+    out["agent_attribution"] = scalar(
+        ev.agg(F.avg(F.when(F.col("user_id").isNotNull(), 1.0).otherwise(0.0)))
+    )
+    emb = T["embeddings"]
+    total, n_labels = emb.count(), emb.select("label").distinct().count()
+    tv = scalar(
+        emb.groupBy("label")
+        .agg((F.count("*") / F.lit(float(total))).alias("share"))
+        .agg(F.sum(F.abs(F.col("share") - 1.0 / n_labels)) / 2)
+    )
+    out["demographic_representation"] = max(0.0, 1.0 - tv)
+    out["bias_testing_coverage"] = 1.0
+    docs = T["documents"]
+    missing = docs.join(emb, docs.doc_id == emb.vec_id, "left_anti").count()
+    out["embedding_coverage"] = _frac(docs.count() - missing, docs.count())
+    anchor = ev.agg(F.max("ts")).first()[0]
+    in_scope = F.col("ts").isNotNull() & F.col("ts").between("2020-01-01", anchor)
+    out["temporal_referential_integrity"] = scalar(
+        ev.agg(F.avg(F.when(in_scope, 1.0).otherwise(0.0)))
+    )
+    return out
+
+
+@pytest.mark.parametrize("empty", ["lineitem", "events"])
+def test_profile_checks_keep_exact_semantics(spark, tmp_path, empty):
+    """Every profile-served check returns exactly what its own scans
+    gave on a product holding a NULL PK, a duplicated PK, an
+    out-of-range value, a NULL in a not_null column and an empty
+    temporal table. With events empty, the tracker domain has no
+    timestamps: data_freshness scores its member stale instead of
+    raising."""
+    from ai_ready_data_framework_spark.checks import engine as E
+
+    tables = _micro_product(spark, tmp_path, empty)
+    expected = _parent_formulas(tables)
+    ctx = E.CheckContext(spark=spark, sf_dir=str(tmp_path), tables=tables)
+    got = {k: getattr(E, k)(ctx) for k in PROFILE_SERVED}
+    assert got == expected
+    # the defects are visible, so the equality above is not vacuous
+    assert got["entity_identifier_declaration"] < 1.0
+    assert got["constraint_declaration"] < 1.0
+    assert got["data_freshness"] == 2 / 3
+    assert got["retention_policy"] == 2 / 3
+    assert got["demographic_representation"] == 0.875
+    if empty == "events":
+        # an empty log: avg over no rows is NULL -> 0.0, not _frac's 1.0
+        assert got["agent_attribution"] == 0.0
+        assert got["record_level_traceability"] == 1.0
+    else:
+        # distinct() counts the NULL id as a value: min(4, 4) / 5, not
+        # min(3, 4) / 5
+        assert got["record_level_traceability"] == 0.8
+        assert got["agent_attribution"] == 0.8
+
+
+def test_profile_only_checks_run_no_spark_job(spark, sf_smoke):
+    """Once the table profiles and label_counts exist, the profile-only
+    checks (and demographic_representation) are pure functions of
+    them: the SparkContext's highest job id does not advance."""
+    from ai_ready_data_framework_spark.checks import engine as E
+    from ai_ready_data_framework_spark.io import load_tables
+
+    ctx = E.CheckContext(
+        spark=spark, sf_dir=sf_smoke, tables=load_tables(spark, sf_smoke)
+    )
+    for t in ctx.tables:
+        E.table_profile(ctx, t)
+    E.label_counts(ctx)
+    sc = spark.sparkContext
+
+    def last_job() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+    before = last_job()
+    for key in PROFILE_ONLY + ("demographic_representation",):
+        assert 0.0 <= getattr(E, key)(ctx) <= 1.0
+    assert last_job() == before
+
+
+def test_run_assessment_leaves_no_scratch_dir(spark, sf_smoke):
+    """The checks that materialize tables write under the context's one
+    scratch root, which run_assessment removes when it returns."""
+    import os
+    import tempfile
+
+    def aird_entries() -> set[str]:
+        return {e for e in os.listdir(tempfile.gettempdir()) if e.startswith("aird_")}
+
+    before = aird_entries()
+    run_assessment(spark, sf_smoke, run_streaming=False)
+    assert aird_entries() - before == set()
