@@ -139,7 +139,12 @@ def source_divergence_from_st(st: DataFrame) -> DataFrame:
     vocabulary-sized st runs the corpus-sized work ONCE; every
     downstream aggregate is vocab-sized. At 100 TB this removes three
     full corpus explode passes — the perplexity bg_counts precedent.
-    Values unchanged: the pin only truncates lineage."""
+    Values unchanged: the pin only truncates lineage.
+
+    Pin contract: ``st`` must be an aggregated, bounded frame
+    (vocabulary x sources), because this function stage-pins it (a
+    localCheckpoint by default) — a lazily derived corpus-sized frame would be materialized whole
+    to executor storage, where an executor loss cannot recompute it."""
     st = stage_pin(st)
     src_tot = st.groupBy("source").agg(
         F.sum("c_st").alias("n_s"),

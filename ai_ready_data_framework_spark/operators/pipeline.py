@@ -167,8 +167,9 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # near-empty tasks (three 32-task stages, ~0.2 cpu-s against
     # ~1.3 s rt each — plans/r14 stage profile). localCheckpoint
     # captures the AQE-coalesced output (1-2 partitions here,
-    # byte-sized at any scale); values and the unpersist discipline
-    # are unchanged.
+    # byte-sized at any scale); values are unchanged. ``unpersist`` is
+    # a no-op on a localCheckpoint pin: these blocks are freed only
+    # when their RDDs are garbage-collected.
     dup_drop = stage_pin(dup_drop_ids(sh_raw, n_docs))
     n_dedup = n_docs - dup_drop.count()
 

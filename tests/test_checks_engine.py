@@ -19,6 +19,29 @@ def assessment(spark, sf_smoke):
     return run_assessment(spark, sf_smoke, run_streaming=False).cache()
 
 
+@pytest.fixture
+def scratch_names(monkeypatch) -> list[str]:
+    """Every name a CheckContext asks a scratch path for, in order."""
+    from ai_ready_data_framework_spark.checks.engine import CheckContext
+
+    names: list[str] = []
+    scratch = CheckContext.scratch
+
+    def recording(self, name: str) -> str:
+        names.append(name)
+        return scratch(self, name)
+
+    monkeypatch.setattr(CheckContext, "scratch", recording)
+    return names
+
+
+def _last_job(spark) -> int:
+    """The SparkContext's highest job id, once every job is counted."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
 def test_all_48_checks_present():
     assert len(CHECKS) == 48
     by_factor: dict[str, int] = {}
@@ -68,11 +91,13 @@ def test_workload_tags():
         assert set(c.workloads) <= {"serving", "training"} and c.workloads
 
 
-def test_workload_filter_runs_subset(spark, sf_smoke):
+def test_workload_filter_runs_subset(spark, sf_smoke, scratch_names):
     training = run_assessment(spark, sf_smoke, workload="training", run_streaming=False)
     keys = {r.requirement for r in training.collect()}
     expected = {c.key for c in CHECKS if "training" in c.workloads}
     assert keys == expected
+    # no selected check reads the serving store, so it is never written
+    assert "serving_store" not in scratch_names
 
 
 def test_fraction_check_exact_on_micro_df(spark):
@@ -206,6 +231,7 @@ PROFILE_SERVED = PROFILE_ONLY + (
     "bias_testing_coverage",
     "embedding_coverage",
     "temporal_referential_integrity",
+    "feature_refresh_compliance",
 )
 
 
@@ -245,13 +271,13 @@ def _micro_product(spark, root, empty: str) -> dict:
         ),
         "events": (
             [
-                (1, ts(2024, 1, 10), 5),
-                (2, ts(2024, 1, 1), None),
-                (2, ts(2019, 6, 1), 7),
-                (None, ts(2024, 1, 9), 8),
-                (3, None, 9),
+                (1, ts(2024, 1, 10), 5, 1.0),
+                (2, ts(2024, 1, 1), None, 2.0),
+                (2, ts(2019, 6, 1), 7, 3.0),
+                (None, ts(2024, 1, 9), 8, 4.0),
+                (3, None, 9, 5.0),
             ],
-            "event_id bigint, ts timestamp, user_id int",
+            "event_id bigint, ts timestamp, user_id int, value double",
         ),
         "documents": (
             [(1, "x", "en"), (2, None, "fr"), (3, "z", "en")],
@@ -364,6 +390,24 @@ def _parent_formulas(T: dict) -> dict:
     out["temporal_referential_integrity"] = scalar(
         ev.agg(F.avg(F.when(in_scope, 1.0).otherwise(0.0)))
     )
+    from ai_ready_data_framework_spark.streaming.parity import hourly_event_features
+
+    anchor_us = ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0]
+    per_user = (
+        hourly_event_features(ev)
+        .groupBy("user_id")
+        .agg(F.max("window_start_us").alias("last_us"))
+    )
+    tol_us = R.FEATURE_STALENESS_HOURS * 3600 * 1_000_000
+    out["feature_refresh_compliance"] = scalar(
+        per_user.agg(
+            F.avg(
+                F.when(F.lit(anchor_us) - F.col("last_us") <= tol_us, 1.0).otherwise(
+                    0.0
+                )
+            )
+        )
+    )
     return out
 
 
@@ -392,11 +436,15 @@ def test_profile_checks_keep_exact_semantics(spark, tmp_path, empty):
         # an empty log: avg over no rows is NULL -> 0.0, not _frac's 1.0
         assert got["agent_attribution"] == 0.0
         assert got["record_level_traceability"] == 1.0
+        assert got["feature_refresh_compliance"] == 0.0
     else:
         # distinct() counts the NULL id as a value: min(4, 4) / 5, not
         # min(3, 4) / 5
         assert got["record_level_traceability"] == 0.8
         assert got["agent_attribution"] == 0.8
+        # users 5 and 8 are within 96 h of the anchor, the NULL user
+        # (9 days) and 7 are stale; 9's only event has no ts and no window
+        assert got["feature_refresh_compliance"] == 0.5
 
 
 def test_profile_only_checks_run_no_spark_job(spark, sf_smoke):
@@ -412,16 +460,10 @@ def test_profile_only_checks_run_no_spark_job(spark, sf_smoke):
     for t in ctx.tables:
         E.table_profile(ctx, t)
     E.label_counts(ctx)
-    sc = spark.sparkContext
-
-    def last_job() -> int:
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
-
-    before = last_job()
+    before = _last_job(spark)
     for key in PROFILE_ONLY + ("demographic_representation",):
         assert 0.0 <= getattr(E, key)(ctx) <= 1.0
-    assert last_job() == before
+    assert _last_job(spark) == before
 
 
 def test_run_assessment_leaves_no_scratch_dir(spark, sf_smoke):
@@ -436,3 +478,91 @@ def test_run_assessment_leaves_no_scratch_dir(spark, sf_smoke):
     before = aird_entries()
     run_assessment(spark, sf_smoke, run_streaming=False)
     assert aird_entries() - before == set()
+
+
+def test_batch_throughput_runs_only_its_timed_scan(spark, sf_smoke):
+    """Once the lineitem profile exists, the throughput check runs the
+    jobs of its timed scan and nothing else: the row count comes from
+    the profile."""
+    from ai_ready_data_framework_spark.checks import engine as E
+    from ai_ready_data_framework_spark.io import load_tables
+
+    ctx = E.CheckContext(
+        spark=spark, sf_dir=sf_smoke, tables=load_tables(spark, sf_smoke)
+    )
+    E.table_profile(ctx, "lineitem")
+    j0 = _last_job(spark)
+    ctx.table("lineitem").select(F.sum("l_quantity")).collect()
+    j1 = _last_job(spark)
+    assert 0.0 < E.batch_throughput_sufficiency(ctx) <= 1.0
+    assert _last_job(spark) - j1 == j1 - j0
+
+
+def test_clustered_tables_are_sorted_copies_without_shuffle(spark, sf_smoke):
+    """Each large table's clustered copy holds exactly the table's rows,
+    every file of it is sorted on the clustering key (the temporal
+    column, else the primary key), and building the copies writes no
+    shuffle bytes."""
+    import glob
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from ai_ready_data_framework_spark.checks import engine as E
+    from ai_ready_data_framework_spark.checks import registries as R
+    from ai_ready_data_framework_spark.io import load_tables
+
+    ctx = E.CheckContext(
+        spark=spark, sf_dir=sf_smoke, tables=load_tables(spark, sf_smoke)
+    )
+    jsc = spark.sparkContext._jsc.sc()
+
+    def shuffle_written() -> int:
+        jsc.listenerBus().waitUntilEmpty()
+        execs = jsc.statusStore().executorList(True)
+        return sum(execs.apply(i).totalShuffleWrite() for i in range(execs.size()))
+
+    try:
+        before = shuffle_written()
+        assert E.clustered_tables(ctx) == {
+            "orders",
+            "lineitem",
+            "events",
+            "documents",
+        }
+        assert shuffle_written() == before
+        for t in E.LARGE_TABLES:
+            path = ctx.scratch(f"cluster/{t}")
+            src = ctx.tables[t]
+            copy = spark.read.parquet(path).select(*src.columns)
+            assert copy.count() == src.count() > 0
+            assert copy.exceptAll(src).count() == 0
+            assert src.exceptAll(copy).count() == 0
+            key = (R.TEMPORAL_SCOPE.get(t) or R.PRIMARY_KEYS[t]).split(",")
+            files = glob.glob(f"{path}/*.parquet")
+            assert files
+            for f in files:
+                tbl = pq.read_table(f, columns=key)
+                order = pc.sort_indices(
+                    tbl,
+                    sort_keys=[(k, "ascending") for k in key],
+                    null_placement="at_start",
+                )
+                assert tbl.take(order).equals(tbl), (t, f)
+    finally:
+        ctx.close()
+
+
+def test_run_assessment_builds_shared_materializations_once(
+    spark, sf_smoke, scratch_names
+):
+    """A default run writes the serving store exactly once, and each
+    clustered copy once (the training run's side is in
+    test_workload_filter_runs_subset)."""
+    from ai_ready_data_framework_spark.checks.engine import LARGE_TABLES
+
+    run_assessment(spark, sf_smoke, run_streaming=False)
+    assert scratch_names.count("serving_store") == 1
+    assert sorted(n for n in scratch_names if n.startswith("cluster/")) == sorted(
+        f"cluster/{t}" for t in LARGE_TABLES
+    )
