@@ -11,6 +11,8 @@ only adapts the registry to the driver's calling convention.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
 import sys
 import tempfile
@@ -34,11 +36,12 @@ def _package_zip() -> str:
     """Zip the engine package once per process so it can be shipped to
     Spark's Python workers (pandas-UDF closures reference the package;
     workers don't inherit the driver's sys.path when the driver runs
-    from outside the repo)."""
+    from outside the repo). The zip is removed at interpreter exit."""
     global _PKG_ZIP
     if _PKG_ZIP is None:
         fd, path = tempfile.mkstemp(prefix="aird_pkg_", suffix=".zip")
         os.close(fd)
+        atexit.register(_remove_quietly, path)
         pkg_dir = os.path.join(_REPO_ROOT, "ai_ready_data_framework_spark")
         with zipfile.ZipFile(path, "w") as z:
             for root, _dirs, files in os.walk(pkg_dir):
@@ -48,6 +51,11 @@ def _package_zip() -> str:
                         z.write(full, os.path.relpath(full, _REPO_ROOT))
         _PKG_ZIP = path
     return _PKG_ZIP
+
+
+def _remove_quietly(path: str) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(path)
 
 
 def _ensure_nanos_readable(spark: SparkSession) -> None:

@@ -233,6 +233,19 @@ def sig_est_jaccard(n_hashes: int = MINHASH_HASHES):
     )
 
 
+def sig_shares_band(
+    n_hashes: int = MINHASH_HASHES, n_bands: int = MINHASH_BANDS
+) -> Column:
+    """True where __sig_a and __sig_b agree on every position of at
+    least one band: minhash_bands' bucket rule (equal band slices,
+    equal bk) restated over two signatures."""
+    r = n_hashes // n_bands
+    return F.exists(
+        F.sequence(F.lit(0), F.lit(n_bands - 1)),
+        lambda b: F.slice("__sig_a", b * r + 1, r) == F.slice("__sig_b", b * r + 1, r),
+    )
+
+
 # In-bucket pair generation is quadratic; cap it. Buckets above this
 # size are boilerplate clusters (members agree on an entire band of r
 # consecutive minhashes — at web scale that is 10^6 near-identical

@@ -4357,7 +4357,11 @@ def incremental_band_probe(
     the declared query's deterministic fiction) or an explicit
     ``is_new`` boolean Column over ``bands`` (what the streaming
     foreachBatch wrapper passes: index rows False, micro-batch rows
-    True)."""
+    True).
+
+    ``__sig`` is read from each document's band-0 row only, so
+    ``bands`` may carry it there alone (streaming/dedup.py::doc_bands)
+    or on every row (functions/text.py::minhash_bands)."""
     if is_new is None:
         if batch_mod is None:
             raise ValueError(
@@ -4390,7 +4394,6 @@ def incremental_band_probe(
     # (doc, rep) pair instead of O(bucket) pairs
     a = tagged.filter(F.col("__new")).select(
         F.col("doc_id").alias("new_doc"),
-        F.col("__sig").alias("__sig_a"),
         "band",
         "bk",
         "__bn",
@@ -4399,7 +4402,6 @@ def incremental_band_probe(
         F.col("__bn").isNull() | (F.col("doc_id") == F.col("__rep"))
     ).select(
         F.col("doc_id").alias("other_doc"),
-        F.col("__sig").alias("__sig_b"),
         "band",
         "bk",
         F.col("__new").alias("__new_b"),
@@ -4416,9 +4418,8 @@ def incremental_band_probe(
     # minimum, so when it is itself in the batch the new-new ordering
     # rule (smaller id first) puts it on the new_doc side — swap so
     # cross-band duplicates land identically for dropDuplicates
-    # (est_jaccard is symmetric, so the sig columns need no swap)
     flip = ~is_cold & other_is_new
-    return (
+    candidates = (
         a.join(b, ["band", "bk"])
         .filter(keep)
         .select(
@@ -4428,15 +4429,44 @@ def incremental_band_probe(
             F.when(flip, F.col("new_doc")).otherwise(F.col("other_doc")).alias(
                 "other_doc"
             ),
-            "__sig_a",
-            "__sig_b",
         )
         .dropDuplicates(["new_doc", "other_doc"])
-        .select(
+    )
+    # Signatures are fetched once per candidate pair, by doc_id, from
+    # the band-0 postings (V-SMART-Join's candidate-then-payload
+    # split): the band join above carries ids only, and the persisted
+    # postings (streaming/dedup.py::doc_bands) hold __sig on band 0
+    # alone. Full-signature frames have band-0 rows too, so one path
+    # serves both. A doc_id with two band-0 rows (an updated document
+    # in two unfolded delta epochs) joins once per version. Only the
+    # versions that share a band with the other side are kept, the
+    # rows the band join itself paired, and of those the pair keeps
+    # its highest estimate, so which version is looked up never
+    # decides the pair. The max aggregates on the pair columns and
+    # needs no exchange: the lookup joins preserve the pair
+    # partitioning or a coarser one on a pair column.
+    # Cost: the lookup reads every band-0 row of the frame. Broadcast,
+    # that ships each signature of the index per probe; past the
+    # broadcast threshold both lookups shuffle every band-0 row with
+    # its signature (tests/test_band_index.py pins those exchanges).
+    sigs = bands.filter(F.col("band") == 0)
+    return (
+        candidates.join(
+            sigs.select(
+                F.col("doc_id").alias("new_doc"), F.col("__sig").alias("__sig_a")
+            ),
             "new_doc",
-            "other_doc",
-            F.round(T.sig_est_jaccard(), 4).alias("est_jaccard"),
         )
+        .join(
+            sigs.select(
+                F.col("doc_id").alias("other_doc"),
+                F.col("__sig").alias("__sig_b"),
+            ),
+            "other_doc",
+        )
+        .filter(T.sig_shares_band())
+        .groupBy("new_doc", "other_doc")
+        .agg(F.max(F.round(T.sig_est_jaccard(), 4)).alias("est_jaccard"))
         .filter(F.col("est_jaccard") >= NEAR_DUP_JACCARD)
     )
 

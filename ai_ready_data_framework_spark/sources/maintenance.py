@@ -368,11 +368,14 @@ def write_band_index(
     path: str,
     n_buckets: int = BAND_INDEX_BUCKETS,
 ) -> None:
-    """Materialize an LSH band index (functions/text.py::minhash_bands
-    output: doc_id, __sig, band, bk) as a parquet table BUCKETED and
-    SORTED by (band, bk); the hot-bucket window in the probe
-    (count/min over (band, bk)) rides the same partitioning for
-    free."""
+    """Materialize an LSH band index of (doc_id, __sig, band, bk)
+    postings as a parquet table BUCKETED and SORTED by (band, bk); the
+    hot-bucket window in the probe (count/min over (band, bk)) rides
+    the same partitioning for free. Streaming builds write the sparse
+    layout of streaming/dedup.py::doc_bands (``__sig`` on the band-0
+    posting only, NULL on the others, about a third of the bytes);
+    functions/text.py::minhash_bands' full layout (``__sig`` on every
+    posting) has the same schema and probes to the same pairs."""
     write_bucketed(bands, table_name, path, BAND_INDEX.bucket_cols, n_buckets)
 
 

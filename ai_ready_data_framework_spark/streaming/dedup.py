@@ -7,9 +7,17 @@ Grounding: the reference's Factor 3 mandates stream-incremental
 propagation ("Streams propagate changes incrementally",
 /root/reference/factors/3-current.md:13) and the north star makes
 near-dedup a first-class pipeline stage; this module is where the two
-meet. Per micro-batch the work is (batch bands) ⋈ (index), so steady-
-state cost scales with ingest rate, never corpus size — the property
-that keeps a 100 TB corpus's dedup always-on instead of nightly.
+meet. Per micro-batch the candidate pairs come from (batch bands) ⋈
+(index), and each candidate's signature is fetched once from the
+band-0 postings, the only ones that carry it (``doc_bands``). Three
+costs still grow with the index, not the drop: every ``compact_after``
+epochs compaction rewrites the whole index; every epoch the probe's
+hot-bucket census (a count per (band, bk)) shuffles every posting of
+base ∪ deltas ∪ batch; and every epoch the signature lookup reads
+every band-0 posting, which it broadcasts below Spark's broadcast
+threshold and shuffles by doc_id above it. Keeping the signature off
+seven of a document's eight postings makes the index, and so the
+rewrite, about a third of the full-signature size.
 
 Replay safety and compaction are the shared epoch-delta lifecycle
 (streaming/lifecycle.py): pairs land in ``pairs_out/epoch=N`` and the
@@ -54,16 +62,25 @@ DOCS_SCHEMA = (
 
 
 def doc_bands(docs: DataFrame) -> DataFrame:
-    """documents -> (doc_id, __sig, band, bk) band postings — the same
-    shingle -> minhash -> band derivation the batch operators use, so
-    stream and batch can never drift."""
+    """documents -> (doc_id, __sig, band, bk) band postings in the
+    persisted (sparse) form: the same shingle -> minhash -> band
+    derivation the batch operators use, so stream and batch can never
+    drift, but ``__sig`` is kept on the ``band == 0`` posting only and
+    NULL on the other bands. The signature is 32 longs against a
+    posting's three narrow keys, so on every band it would be most of
+    every index file; the probe joins bands on ids alone and
+    looks each candidate's signature up once from the band-0 rows
+    (operators/ai.py::incremental_band_probe). The schema is the
+    full-signature one (functions/text.py::minhash_bands), so indexes
+    written in either form probe together."""
     sh = docs.select(
         "doc_id",
         F.explode(
             F.array_distinct(T.shingles(T.tokens("text"), SHINGLE_K))
         ).alias("s"),
     )
-    return T.minhash_bands(T.minhash_signatures(sh, "doc_id", "s"), "doc_id")
+    bands = T.minhash_bands(T.minhash_signatures(sh, "doc_id", "s"), "doc_id")
+    return bands.withColumn("__sig", F.when(F.col("band") == 0, F.col("__sig")))
 
 
 def probe_and_fold(

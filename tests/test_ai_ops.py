@@ -774,7 +774,7 @@ def test_dedup_incremental_equals_batch_restriction(spark, sf_correctness):
 # ---------------------------------------------------------------------------
 
 
-def _synthetic_boiler_corpus(spark, n_copies, n_distinct=5):
+def _synthetic_boiler_docs(spark, n_copies, n_distinct=5):
     """n_copies identical docs (one giant LSH bucket per band) plus a
     few distinct docs that must be unaffected by the cap."""
     boiler = "the quick brown fox jumps over the lazy dog again and again"
@@ -788,7 +788,12 @@ def _synthetic_boiler_corpus(spark, n_copies, n_distinct=5):
         )
         for j in range(n_distinct)
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _synthetic_boiler_corpus(spark, n_copies, n_distinct=5):
+    """(doc_id, shingle) postings of _synthetic_boiler_docs."""
+    docs = _synthetic_boiler_docs(spark, n_copies, n_distinct)
     return docs.select(
         "doc_id",
         F.explode(F.array_distinct(T.shingles(T.tokens("text"), ai.SHINGLE_K))).alias(
@@ -864,6 +869,24 @@ def test_incremental_probe_hot_bucket_star(spark):
     assert all(r.new_doc % mod == 0 for r in rows)
     assert len(rows) == len(batch) - 1
     assert all(r.new_doc == 0 for r in rows)
+    assert {r.other_doc for r in rows} == batch - {0}
+
+
+def test_incremental_probe_hot_bucket_star_sparse_postings(spark):
+    """The hot-bucket star over the persisted posting form
+    (streaming/dedup.py::doc_bands: __sig on band 0 only) has the
+    full-signature star's pairs and estimates: every signature comes
+    from its document's band-0 row, whichever band's bucket paired it."""
+    from ai_ready_data_framework_spark.operators.ai import incremental_band_probe
+    from ai_ready_data_framework_spark.streaming import dedup as SD
+
+    n, mod = 300, 5
+    bands = SD.doc_bands(_synthetic_boiler_docs(spark, n, n_distinct=0))
+    assert bands.filter(F.col("__sig").isNotNull()).count() == n
+    rows = incremental_band_probe(bands, mod, hot_bucket_cap=50).collect()
+    batch = {i for i in range(n) if i % mod == 0}
+    assert len(rows) == len(batch) - 1
+    assert all(r.new_doc == 0 and r.est_jaccard == 1.0 for r in rows)
     assert {r.other_doc for r in rows} == batch - {0}
 
 

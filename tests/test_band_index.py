@@ -61,6 +61,46 @@ def test_persisted_probe_index_side_needs_no_exchange(
     assert plan.count("Exchange hashpartitioning") <= 1, plan
 
 
+def test_signature_lookup_exchanges_past_broadcast_threshold(
+    spark, sf_correctness, persisted_index
+):
+    """The candidate pairs fetch their signatures from the band-0
+    postings by doc_id. Below the broadcast threshold that is a
+    broadcast of every band-0 row; with broadcasts off, the lookup
+    adds exactly three hash exchanges: the candidates by new_doc, the
+    candidates by other_doc, and ONE shuffle of every band-0 row with
+    its signature, reused by both lookups. The (band, bk) side still
+    joins on its buckets."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        df = ai.incremental_band_probe(persisted_index, ai.INCR_BATCH_MOD)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    finally:
+        spark.conf.set(key, old)
+    lines = plan.split("== Initial Plan ==")[0].splitlines()
+    assert "BroadcastExchange" not in "\n".join(lines)
+    assert any("Bucketed: true" in ln for ln in lines)
+    exchanges = [
+        (ln, lines[i + 1])
+        for i, ln in enumerate(lines)
+        if "Exchange hashpartitioning" in ln and "ReusedExchange" not in ln
+    ]
+    keys = sorted(ln.split("hashpartitioning(")[1].split(",")[0] for ln, _ in exchanges)
+    assert [k.split("#")[0] for k in keys] == [
+        "new_doc", "new_doc", "new_doc", "other_doc"
+    ], exchanges
+    # the pair dedup's exchange is keyed (new_doc, other_doc); of the
+    # three single-key ones exactly one reads the index (its doc_id and
+    # __sig), the other two move candidate pairs
+    index_side = [child for _, child in exchanges if "doc_id" in child]
+    assert len(index_side) == 1 and "__sig#" in index_side[0], exchanges
+    reused = [ln for ln in lines if "ReusedExchange" in ln]
+    assert len(reused) == 1 and "__sig_b" in reused[0], reused
+
+
 def test_point_probe_prunes_files(spark, persisted_index):
     """A (band, bk) point lookup must push both predicates to the scan
     (sorted buckets keep parquet min/max stats tight)."""

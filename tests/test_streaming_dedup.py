@@ -8,9 +8,14 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from ai_ready_data_framework_spark.functions import text as T
 from ai_ready_data_framework_spark.io import load_table
-from ai_ready_data_framework_spark.operators.ai import incremental_band_probe
+from ai_ready_data_framework_spark.operators.ai import (
+    SHINGLE_K,
+    incremental_band_probe,
+)
 from ai_ready_data_framework_spark.sources.maintenance import (
+    _table_location,
     read_band_index,
     write_band_index,
 )
@@ -304,6 +309,164 @@ def test_maintain_band_index_crash_mid_compact_converges(
     assert not _glob.glob(f"{delta_dir}/epoch=*")
     spark.catalog.refreshTable(table)
     assert read_band_index(spark, table).count() == n_all
+
+
+def _full_bands(docs):
+    """The full-signature posting layout (functions/text.py::
+    minhash_bands: __sig on all eight bands), as band indexes were
+    written before doc_bands kept it on band 0 only."""
+    sh = docs.select(
+        "doc_id",
+        F.explode(
+            F.array_distinct(T.shingles(T.tokens("text"), SHINGLE_K))
+        ).alias("s"),
+    )
+    return T.minhash_bands(T.minhash_signatures(sh, "doc_id", "s"), "doc_id")
+
+
+def _assert_sig_on_band0_only(frame):
+    """Exactly one non-NULL __sig per doc, on its band-0 posting."""
+    per_doc = frame.groupBy("doc_id").agg(
+        F.count("__sig").alias("n_sig"),
+        F.min(F.when(F.col("__sig").isNotNull(), F.col("band"))).alias("band"),
+    )
+    rows = per_doc.collect()
+    assert rows
+    assert all(r.n_sig == 1 and r.band == 0 for r in rows), [
+        r for r in rows if r.n_sig != 1 or r.band != 0
+    ][:5]
+
+
+def _parquet_bytes(path):
+    import glob as _glob
+    import os
+
+    return sum(
+        os.path.getsize(f)
+        for f in _glob.glob(f"{path}/**/*.parquet", recursive=True)
+    )
+
+
+def test_postings_carry_sig_on_band0_only(spark, split_corpus, tmp_path):
+    """The persisted layout of doc_bands holds in the base build, in
+    every epoch delta and in a compacted generation."""
+    _, stream_docs, _, _, table = split_corpus
+    delta_dir = str(tmp_path / "deltas")
+    pairs_out = str(tmp_path / "pairs")
+    _assert_sig_on_band0_only(read_band_index(spark, table))
+    b1 = stream_docs.filter(F.col("doc_id") % (2 * STREAM_MOD) == 0)
+    b2 = stream_docs.filter(F.col("doc_id") % (2 * STREAM_MOD) != 0)
+    SD.probe_and_fold(spark, b1, table, delta_dir, pairs_out, 0)
+    SD.probe_and_fold(spark, b2, table, delta_dir, pairs_out, 1)
+    for e in (0, 1):
+        _assert_sig_on_band0_only(spark.read.parquet(f"{delta_dir}/epoch={e}"))
+    assert SD.compact_band_index(
+        spark, table, str(tmp_path / "index"), delta_dir
+    ) == [0, 1]
+    spark.catalog.refreshTable(table)
+    _assert_sig_on_band0_only(
+        spark.read.parquet(_table_location(spark, table))
+    )
+
+
+def test_sparse_index_is_at_most_40pct_of_full_layout(spark, sf_smoke, tmp_path):
+    docs = load_table(spark, sf_smoke, "documents")
+    written = {}
+    try:
+        for name, bands in (
+            ("band_layout_sparse", SD.doc_bands(docs)),
+            ("band_layout_full", _full_bands(docs)),
+        ):
+            write_band_index(bands, name, str(tmp_path / name))
+            written[name] = _parquet_bytes(str(tmp_path / name))
+        assert (
+            read_band_index(spark, "band_layout_sparse").count()
+            == read_band_index(spark, "band_layout_full").count()
+        )
+    finally:
+        for name in ("band_layout_sparse", "band_layout_full"):
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+    assert written["band_layout_sparse"] <= 0.4 * written["band_layout_full"], (
+        written
+    )
+
+
+def test_full_signature_base_with_sparse_deltas_probes_like_full_frame(
+    spark, sf_smoke, tmp_path
+):
+    """An index written in the full-signature layout keeps serving:
+    with sparse deltas folded in by two epochs, the stream's pairs
+    equal the one-shot probe of an all-full frame."""
+    docs = load_table(spark, sf_smoke, "documents")
+    stream_docs = docs.filter(F.col("doc_id") % STREAM_MOD == 0)
+    index_docs = docs.filter(F.col("doc_id") % STREAM_MOD != 0)
+    table = "band_index_full_base"
+    delta_dir = str(tmp_path / "deltas")
+    pairs_out = str(tmp_path / "pairs")
+    try:
+        write_band_index(_full_bands(index_docs), table, str(tmp_path / "index"))
+        b1 = stream_docs.filter(F.col("doc_id") % (2 * STREAM_MOD) == 0)
+        b2 = stream_docs.filter(F.col("doc_id") % (2 * STREAM_MOD) != 0)
+        SD.probe_and_fold(spark, b1, table, delta_dir, pairs_out, 0)
+        SD.probe_and_fold(spark, b2, table, delta_dir, pairs_out, 1)
+        got = _pair_set(spark, pairs_out)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+    expected = {
+        (frozenset((r.new_doc, r.other_doc)), r.est_jaccard)
+        for r in incremental_band_probe(
+            _full_bands(docs), is_new=F.col("doc_id") % STREAM_MOD == 0
+        ).collect()
+    }
+    assert expected, "fixture must produce stream-touching dup pairs"
+    assert got == expected
+
+
+def test_doc_in_two_unfolded_deltas_pairs_once(spark, tmp_path):
+    """Updated documents land in two unfolded delta epochs, so the
+    probe frame holds two band-0 signatures for each doc_id. A later
+    copy of text A must pair once with each, at the estimate of the
+    version it shares a band with, on every run: doc 7 was A and is
+    now unrelated text, doc 5 was a one-word edit of A and is now A."""
+    text_a = _words("w", 20)
+    edit_a = " ".join(text_a.split()[:-1] + ["changed"])
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    table = "band_index_updated_doc"
+    delta_dir = str(tmp_path / "deltas")
+    pairs_out = str(tmp_path / "pairs")
+    runs = []
+    try:
+        write_band_index(
+            SD.doc_bands(frame([(1, _words("base"))])),
+            table,
+            str(tmp_path / "index"),
+        )
+        for epoch, rows in enumerate(
+            [[(7, text_a), (5, edit_a)], [(7, _words("x", 20)), (5, text_a)]]
+        ):
+            SD.probe_and_fold(spark, frame(rows), table, delta_dir, pairs_out, epoch)
+        for _ in range(3):
+            SD.probe_and_fold(
+                spark, frame([(9, text_a)]), table, delta_dir, pairs_out, 2
+            )
+            runs.append(
+                sorted(
+                    tuple(r)
+                    for r in spark.read.parquet(f"{pairs_out}/epoch=2")
+                    .select("new_doc", "other_doc", "est_jaccard")
+                    .collect()
+                )
+            )
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+    versions = spark.read.parquet(delta_dir).filter(
+        F.col("doc_id").isin(5, 7) & (F.col("band") == 0)
+    )
+    assert versions.count() == 4
+    assert runs == [[(9, 5, 1.0), (9, 7, 1.0)]] * 3
 
 
 def _band_rows(spark, docs):
