@@ -18,13 +18,12 @@ pin such a frame:
 - ``persist(MEMORY_AND_DISK)`` (the durable toggle, no checkpoint
   dir): keeps the lineage,
   so a lost executor's blocks recompute from source. Costs plan
-  retention — for the iterative closures (functions/graph.py,
-  checks/engine.py lineage fixpoint) the logical plan then grows with
-  each round, bounded by those loops' hard iteration caps (graph
-  components: 20; lineage closure: 10). Persisted entries are held by
-  the CacheManager until unpersist (unlike localCheckpoint blocks,
-  which the ContextCleaner GCs), so the iterative call sites
-  unpersist each superseded round's frame — a no-op in the default
+  retention — for the iterative closure (functions/graph.py's
+  connected components) the logical plan then grows with each round,
+  bounded by the loop's hard iteration cap (20). Persisted entries are
+  held by the CacheManager until unpersist (unlike localCheckpoint
+  blocks, which the ContextCleaner GCs), so the iterative call site
+  unpersists each superseded round's frame — a no-op in the default
   branch — and the funnel releases its shingle pin with its stage
   caches. The index-compaction path (streaming/dedup.py) deliberately
   does NOT use this helper: it must truncate lineage before
@@ -71,7 +70,7 @@ def stage_pin(df: DataFrame, eager: bool = False) -> DataFrame:
     before mutating its inputs or before a count-dependent branch.
 
     The reliable-checkpoint branch is the cluster-production answer
-    for the ITERATIVE sites (graph components, lineage fixpoint): it
+    for the ITERATIVE site (graph components): it
     both survives executor loss AND truncates lineage, where the
     persist branch retains it — each closure round's plan then embeds
     the previous round's, growing exponentially in round count

@@ -450,7 +450,8 @@ def test_profile_checks_keep_exact_semantics(spark, tmp_path, empty):
 def test_profile_only_checks_run_no_spark_job(spark, sf_smoke):
     """Once the table profiles and label_counts exist, the profile-only
     checks (and demographic_representation) are pure functions of
-    them: the SparkContext's highest job id does not advance."""
+    them, and the lineage checks read only the registries: the
+    SparkContext's highest job id does not advance."""
     from ai_ready_data_framework_spark.checks import engine as E
     from ai_ready_data_framework_spark.io import load_tables
 
@@ -461,7 +462,12 @@ def test_profile_only_checks_run_no_spark_job(spark, sf_smoke):
         E.table_profile(ctx, t)
     E.label_counts(ctx)
     before = _last_job(spark)
-    for key in PROFILE_ONLY + ("demographic_representation",):
+    for key in PROFILE_ONLY + (
+        "demographic_representation",
+        "lineage_completeness",
+        "dependency_graph_completeness",
+        "impact_analysis_capability",
+    ):
         assert 0.0 <= getattr(E, key)(ctx) <= 1.0
     assert _last_job(spark) == before
 
@@ -478,6 +484,61 @@ def test_run_assessment_leaves_no_scratch_dir(spark, sf_smoke):
     before = aird_entries()
     run_assessment(spark, sf_smoke, run_streaming=False)
     assert aird_entries() - before == set()
+
+
+def test_run_assessment_leaves_no_persistent_rdd(spark, sf_smoke):
+    """run_assessment leaves no persistent RDD behind. Counted after a
+    Python and a JVM collection, polled while Spark's ContextCleaner
+    releases unreferenced checkpoint blocks, so only RDDs something
+    still holds (a cached frame in the CacheManager) remain."""
+    import gc
+    import time
+
+    def persistent_rdds() -> int:
+        gc.collect()
+        spark.sparkContext._jvm.java.lang.System.gc()
+        time.sleep(0.5)
+        return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+    before = persistent_rdds()
+    run_assessment(spark, sf_smoke, run_streaming=False)
+    for _ in range(10):
+        after = persistent_rdds()
+        if after <= before:
+            break
+    assert after <= before, (before, after)
+
+
+def test_lineage_checks_follow_the_registries(monkeypatch):
+    """The three lineage checks over a registry holding a 4-hop chain
+    (src:a -> a1 -> a2 -> a3 -> a4), a cycle (src:b -> b1 <-> b2), an
+    asset only an internal node reaches (x -> orphan) and an asset in
+    no edge (lonely)."""
+    from ai_ready_data_framework_spark.checks import engine as E
+    from ai_ready_data_framework_spark.checks import registries as R
+
+    edges = [
+        ("src:a", "a1", "t"),
+        ("a1", "a2", "t"),
+        ("a2", "a3", "t"),
+        ("a3", "a4", "t"),
+        ("src:b", "b1", "t"),
+        ("b1", "b2", "t"),
+        ("b2", "b1", "t"),
+        ("x", "orphan", "t"),
+    ]
+    assets = ("a1", "a2", "a3", "a4", "b1", "b2", "orphan", "lonely")
+    monkeypatch.setattr(R, "LINEAGE_EDGES", edges)
+    monkeypatch.setattr(R, "ASSETS", {a: {"kind": "fact"} for a in assets})
+    ctx = E.CheckContext(spark=None, sf_dir="")  # type: ignore[arg-type]
+    # reached: a1..a4 and b1, b2; orphan's only source is internal
+    assert E.lineage_completeness(ctx) == 6 / 8
+    # in some edge: every asset but lonely
+    assert E.dependency_graph_completeness(ctx) == 7 / 8
+    # every asset's downstream set is enumerable, terminal ones included
+    assert E.impact_analysis_capability(ctx) == 1.0
+    assert E._downstream({"a2"}) == {"a3", "a4"}
+    assert E._downstream({"b1"}) == {"b1", "b2"}
 
 
 def test_batch_throughput_runs_only_its_timed_scan(spark, sf_smoke):
