@@ -23,6 +23,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -382,8 +383,9 @@ def write_band_index(
 def read_band_index(spark: SparkSession, table_name: str) -> DataFrame:
     """Read the persisted band index WITH its bucketing metadata (a
     plain spark.read.parquet on the files would lose the bucket spec
-    and reintroduce the index-side shuffle)."""
-    return spark.table(table_name)
+    and reintroduce the index-side shuffle); base ∪ runs, see
+    :func:`index_view`."""
+    return index_view(spark, table_name)
 
 
 # ---------------------------------------------------------------------------
@@ -429,11 +431,11 @@ def read_ivf_index(
     lives at the generation-stamped path recorded in the table
     manifest (``ivf.centroids_path`` — swapped atomically with the
     assignments, so cells and centroids can never come from different
-    quantizers); the build-time default is ``{path}/centroids``."""
-    cen = table_properties(spark, table_name).get(
-        _PROP_CENTROIDS, f"{path}/centroids"
-    )
-    return spark.table(table_name), spark.read.parquet(cen)
+    quantizers); the build-time default is ``{path}/centroids``. The
+    assignments are base ∪ runs (:func:`index_view`)."""
+    props = table_properties(spark, table_name)
+    cen = props.get(_PROP_CENTROIDS, f"{path}/centroids")
+    return _index_view(spark, table_name, props), spark.read.parquet(cen)
 
 
 def assign_cells(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
@@ -536,7 +538,7 @@ def compact_ivf_index(
     file-per-file, and the "compacted" output kept one file per input
     file (measured: 40 in, 39 out). The centroid side table is
     untouched (compaction never refits)."""
-    vecs = spark.read.parquet(_table_location(spark, table_name))
+    vecs = index_files(spark, table_name)
     publish_ivf_generation(spark, vecs, table_name, path, n_buckets)
 
 
@@ -557,7 +559,7 @@ def ivf_cell_psi(
     PSI = Σ_c (p_batch_c − p_index_c) · ln(p_batch_c / p_index_c)
     over the centroid table's full cell universe, shares Laplace-
     smoothed so cells empty on one side stay finite. Inputs are any
-    frames with a ``cell`` column (``spark.table(index)`` and
+    frames with a ``cell`` column (``index_view(spark, index)`` and
     ``assign_cells(batch)`` — the assignment the append path computes
     anyway). Work shape: two map-side-combinable counts + a
     #cells-row join; the only driver materialization is one row."""
@@ -652,10 +654,11 @@ def ivf_refit_needed(
 #             window between publish and delta deletion cannot double
 #             rows, and re-running compaction after a crash anywhere
 #             converges instead of re-folding.
-#   clean   — delete folded delta partitions and the previous
-#             generation directory. Best-effort: a crash here leaves
-#             orphan files that the manifest already excludes; the
-#             next compaction removes them.
+#   clean   — delete folded delta partitions, the previous
+#             generation directory and the runs the new generation
+#             absorbed. Best-effort: a crash here leaves orphan files
+#             that the manifest already excludes; the next compaction
+#             removes them.
 #
 # Remaining window, stated honestly: the swap is DROP TABLE + CREATE
 # TABLE (Spark's catalog has no atomic multi-op transaction), so a
@@ -666,11 +669,24 @@ def ivf_refit_needed(
 # a single atomic pointer commit and the window disappears; this
 # protocol is exactly that commit, spelled out over the Hive-style
 # catalog available here.
+#
+# Second tier (streaming/lifecycle.py::compact): between base
+# generations, a compaction may fold its deltas into a RUN instead — a
+# catalog table ``{table}__run{R}`` bucketed like the base, in the
+# sibling dir ``{base}_run{R}``. One ALTER TABLE publishes the run
+# together with the folded epochs (``idx.runs`` beside
+# ``idx.folded_epochs``); a run table that exists but is not listed is
+# garbage (a crash before that ALTER) — readers ignore it and the next
+# compaction drops it. Every base generation publish clears
+# ``idx.runs`` and drops the runs it superseded. Readers see base ∪
+# runs through ``index_view`` (catalog, bucketed) or ``index_files``
+# (the files), never the base alone.
 # ---------------------------------------------------------------------------
 
 IVF_MANIFEST = "_idx_manifest.json"
 _PROP_GEN = "idx.generation"
 _PROP_FOLDED = "idx.folded_epochs"
+_PROP_RUNS = "idx.runs"
 _PROP_CENTROIDS = "idx.centroids_path"
 
 
@@ -685,12 +701,123 @@ def table_properties(spark: SparkSession, table_name: str) -> dict:
 
 
 def folded_epochs_of(spark: SparkSession, table_name: str) -> set:
-    """Delta epochs already folded into the live index generation —
-    readers (streaming/lifecycle.py::probe_view) and compaction must
-    SKIP these even if their delta partitions still exist on disk
-    (the crash window between publish and delta deletion)."""
-    raw = table_properties(spark, table_name).get(_PROP_FOLDED)
+    """Delta epochs already folded into the live base generation or one
+    of its runs — readers (streaming/lifecycle.py::probe_view) and
+    compaction must SKIP these even if their delta partitions still
+    exist on disk (the crash window between publish and delta
+    deletion)."""
+    return _folded_in(table_properties(spark, table_name))
+
+
+def _folded_in(props: dict) -> set:
+    raw = props.get(_PROP_FOLDED)
     return set(json.loads(raw)) if raw else set()
+
+
+def runs_of(spark: SparkSession, table_name: str) -> "list[int]":
+    """Ids of the runs the live base lists (``idx.runs``)."""
+    return _runs_in(table_properties(spark, table_name))
+
+
+def _runs_in(props: dict) -> "list[int]":
+    raw = props.get(_PROP_RUNS)
+    return json.loads(raw) if raw else []
+
+
+def run_table(table_name: str, run_id: int) -> str:
+    return f"{table_name}__run{run_id}"
+
+
+def _index_view(spark: SparkSession, table_name: str, props: dict) -> DataFrame:
+    view = spark.table(table_name)
+    for r in _runs_in(props):
+        view = view.unionByName(spark.table(run_table(table_name, r)))
+    return view
+
+
+def index_view(spark: SparkSession, table_name: str) -> DataFrame:
+    """Base ∪ listed runs through the catalog — the probe-side reader
+    of every bucketed index. Each run is bucketed like the base, so the
+    union keeps the bucket partitioning
+    (``spark.sql.unionOutputPartitioning``): an aggregate or join on
+    the bucket columns plans no index-side exchange."""
+    return _index_view(spark, table_name, table_properties(spark, table_name))
+
+
+def index_files(spark: SparkSession, table_name: str) -> DataFrame:
+    """The same rows as :func:`index_view`, read from the files without
+    the catalog — the rewriters' reader (merge, erasure, refit, audit).
+    A bucketed catalog scan claims the bucket partitioning, Catalyst
+    then elides a rewrite's repartition and the output keeps one file
+    per input file."""
+    props = table_properties(spark, table_name)
+    return spark.read.parquet(*index_locations(spark, table_name, props))
+
+
+def index_locations(
+    spark: SparkSession, table_name: str, props: dict
+) -> "list[str]":
+    """[base dir, *listed run dirs] under the properties ``props``."""
+    tables = [table_name] + [run_table(table_name, r) for r in _runs_in(props)]
+    return [_table_location(spark, t) for t in tables]
+
+
+def _alter_index_props(spark: SparkSession, table_name: str, props: dict) -> None:
+    """One catalog commit of ``props`` on the live table."""
+    prop_sql = ", ".join(f"'{_q(k)}'='{_q(v)}'" for k, v in props.items())
+    spark.sql(f"ALTER TABLE {table_name} SET TBLPROPERTIES ({prop_sql})")
+
+
+def publish_run(
+    spark: SparkSession,
+    df: DataFrame,
+    table_name: str,
+    gen_dir_base: str,
+    bucket_cols: "tuple[str, ...]",
+    n_buckets: int,
+    folded_epochs: "list[int]",
+) -> str:
+    """Write ``df`` as a new run of ``table_name`` (dir
+    ``{gen_dir_base}_run{R}``, bucketed like the base) and publish it:
+    one ALTER TABLE lists the run and replaces the folded-epoch
+    manifest. Until that commit the run is garbage readers skip.
+    Returns the run dir."""
+    runs = runs_of(spark, table_name)
+    run_id = max(runs, default=0) + 1
+    name = run_table(table_name, run_id)
+    run_dir = f"{gen_dir_base}_run{run_id}"
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    _fs_delete(spark, run_dir)  # a failed earlier attempt's leftovers
+    write_bucketed(df, name, run_dir, bucket_cols, n_buckets)
+    _alter_index_props(
+        spark,
+        table_name,
+        {
+            _PROP_RUNS: json.dumps(runs + [run_id]),
+            _PROP_FOLDED: json.dumps(sorted(folded_epochs)),
+        },
+    )
+    return run_dir
+
+
+def drop_unlisted_runs(
+    spark: SparkSession, table_name: str, gen_dir_base: str
+) -> None:
+    """Drop every run table and run dir of ``table_name`` that the live
+    base does not list: the runs a base publish absorbed, and a run
+    staged by a pass that crashed before its publish. A run's dir is
+    written before its table is created and deleted after it is
+    dropped, so the dirs enumerate every run."""
+    live = set(runs_of(spark, table_name))
+    parent = os.path.dirname(gen_dir_base.rstrip("/"))
+    pattern = re.compile(
+        re.escape(os.path.basename(gen_dir_base.rstrip("/"))) + r"_run(\d+)"
+    )
+    for name in _fs_listdir(spark, parent):
+        m = pattern.fullmatch(name)
+        if m and int(m.group(1)) not in live:
+            spark.sql(f"DROP TABLE IF EXISTS {run_table(table_name, int(m.group(1)))}")
+            _fs_delete(spark, f"{parent}/{name}")
 
 
 def _table_location(spark: SparkSession, table_name: str) -> str | None:
@@ -701,6 +828,12 @@ def _table_location(spark: SparkSession, table_name: str) -> str | None:
         if r["col_name"].strip() == "Location":
             return r["data_type"].strip()
     return None
+
+
+def _q(s: str) -> str:
+    # single quotes doubled — a path like /data/o'brien must not break
+    # the CREATE inside the loud swap window (code-review r13)
+    return s.replace("'", "''")
 
 
 def _generation_of(spark: SparkSession, table_name: str) -> int:
@@ -729,13 +862,16 @@ def publish_bucketed_generation(
     Existing ``idx.*`` side-artifact properties CARRY OVER by default
     (extra_props overrides key-by-key): a routine compaction after a
     refit must not re-point probes at the stale build-time quantizer.
-    ``audits`` run against the staged files; AuditFailure keeps them
-    for inspection."""
+    ``idx.runs`` never carries: ``df`` must hold the live runs' rows
+    (read it through ``index_files``), the new generation lists no
+    run, and the runs it absorbed are dropped after the swap — a
+    carried list would serve their rows twice. ``audits`` run against
+    the staged files; AuditFailure keeps them for inspection."""
     prev_props = table_properties(spark, table_name)
     carried = {
         k: v
         for k, v in prev_props.items()
-        if k.startswith("idx.") and k not in (_PROP_GEN, _PROP_FOLDED)
+        if k.startswith("idx.") and k not in (_PROP_GEN, _PROP_FOLDED, _PROP_RUNS)
     }
     if folded_epochs is None:
         folded_epochs = json.loads(prev_props.get(_PROP_FOLDED) or "[]")
@@ -761,11 +897,6 @@ def publish_bucketed_generation(
         **(extra_props or {}),
     }
 
-    def _q(s: str) -> str:
-        # single quotes doubled — a path like /data/o'brien must not
-        # break the CREATE inside the loud swap window (code-review r13)
-        return s.replace("'", "''")
-
     prop_sql = ", ".join(f"'{_q(k)}'='{_q(v)}'" for k, v in props.items())
     bcols = ", ".join(bucket_cols)
     create_sql = (
@@ -786,6 +917,7 @@ def publish_bucketed_generation(
     spark.sql(create_sql)
     if old_loc is not None and old_loc.rstrip("/").split("/")[-1] != gen_dir.rstrip("/").split("/")[-1]:
         _fs_delete(spark, old_loc)  # previous generation, superseded
+    drop_unlisted_runs(spark, table_name, gen_dir_base)  # absorbed runs
     return gen_dir
 
 
@@ -861,7 +993,7 @@ def refit_ivf_index(
     n_buckets: int = IVF_INDEX_BUCKETS,
 ) -> dict:
     """Act on ``ivf_refit_needed``: fit a FRESH quantizer over
-    everything the index currently serves (bucketed base ∪
+    everything the index currently serves (bucketed base ∪ runs ∪
     un-compacted deltas), stage the reassigned index to a new
     generation, VERIFY it — row
     conservation always; probe recall vs the pre-refit index on the
@@ -891,7 +1023,7 @@ def refit_ivf_index(
     )
     folded_prev = folded_epochs_of(spark, table_name)
     unfolded = [e for e in present if e not in folded_prev]
-    current = spark.table(table_name).select("vec_id", "embedding")
+    current = index_files(spark, table_name).select("vec_id", "embedding")
     if unfolded:
         current = current.unionByName(
             read_epoch_deltas_pinned(spark, delta_dir, unfolded).select(
@@ -1092,26 +1224,26 @@ def forget_keys(
     ("defined and ENFORCED data retention and deletion schedules",
     /root/reference/factors/requirements.yaml:197-199).
 
-    Dataflow: the base reads from its bucketed files (one linear pass),
-    the anti-join is map-side, and the republish re-lands one file per
-    bucket — the same cost as a compaction. A failed audit keeps the
+    Dataflow: base ∪ runs read from their bucketed files (one linear
+    pass), the anti-join is map-side, and the republish re-lands one
+    file per bucket as a new base generation that absorbs the runs —
+    the same cost as a merge. A failed audit keeps the
     live generation serving (AuditFailure). Folded-epoch and
     side-artifact table properties (e.g. the IVF centroids pointer)
     carry over unchanged. Idempotent AND cheap to re-run: when the key
     set matches ZERO live postings the republish is skipped entirely —
     the generation number does not advance and no files are rewritten.
-    Callers compact pending deltas first and tombstone the landing
-    zone (streaming/lifecycle.py::forget does both)."""
+    Callers fold pending deltas first and tombstone the landing zone
+    (streaming/lifecycle.py::forget does both)."""
     key_set = keys.select(key_col).distinct()
-    loc = _table_location(spark, table_name)
-    if loc is None:
+    if _table_location(spark, table_name) is None:
         # An erasure request against a missing index must fail loudly —
         # a silent misfire here is a compliance bug, not a convenience.
         raise ValueError(
             f"index table {table_name!r} does not exist; cannot forget keys"
         )
     n_base, n_forget, survivors, audits = _erasure(
-        spark.read.parquet(loc), key_set, key_col
+        index_files(spark, table_name), key_set, key_col
     )
     if n_forget == 0:
         return {"removed_rows": 0, "kept_rows": n_base}
@@ -1548,10 +1680,9 @@ def verify_forgotten(
 
     report: dict = {"targets": {}}
     for t in tables:
-        loc = _table_location(spark, t)
-        if loc is None:
+        if _table_location(spark, t) is None:
             raise ValueError(f"index table {t!r} does not exist")
-        _audit(report, spark.read.parquet(loc), t)
+        _audit(report, index_files(spark, t), t)  # base ∪ runs
     for d in epoch_dirs + shard_dirs + flat_dirs:
         if not _fs_isdir(spark, d):
             # a typo'd path must not silently CERTIFY erasure — the

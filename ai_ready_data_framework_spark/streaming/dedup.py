@@ -9,15 +9,18 @@ propagation ("Streams propagate changes incrementally",
 near-dedup a first-class pipeline stage; this module is where the two
 meet. Per micro-batch the candidate pairs come from (batch bands) ⋈
 (index), and each candidate's signature is fetched once from the
-band-0 postings, the only ones that carry it (``doc_bands``). Three
-costs still grow with the index, not the drop: every ``compact_after``
-epochs compaction rewrites the whole index; every epoch the probe's
-hot-bucket census (a count per (band, bk)) shuffles every posting of
-base ∪ deltas ∪ batch; and every epoch the signature lookup reads
-every band-0 posting, which it broadcasts below Spark's broadcast
-threshold and shuffles by doc_id above it. Keeping the signature off
-seven of a document's eight postings makes the index, and so the
-rewrite, about a third of the full-signature size.
+band-0 postings, the only ones that carry it (``doc_bands``). Every
+``compact_after`` epochs the deltas fold into a bucketed run, and only
+once the runs reach the base's size does compaction rewrite the whole
+index (the tiered policy of streaming/lifecycle.py), so compaction's
+bytes follow the drop on average. Two costs still grow with the index,
+not the drop: every epoch the probe's hot-bucket census (a count per
+(band, bk)) shuffles every posting of base ∪ runs ∪ deltas ∪ batch;
+and every epoch the signature lookup reads every band-0 posting, which
+it broadcasts below Spark's broadcast threshold and shuffles by doc_id
+above it. Keeping the signature off seven of a document's eight
+postings makes the index, and so every rewrite, about a third of the
+full-signature size.
 
 Replay safety and compaction are the shared epoch-delta lifecycle
 (streaming/lifecycle.py): pairs land in ``pairs_out/epoch=N`` and the
@@ -91,7 +94,7 @@ def probe_and_fold(
     pairs_out: str,
     epoch_id: int,
 ) -> None:
-    """One micro-batch step: probe (base index ∪ earlier deltas) with
+    """One micro-batch step: probe (base ∪ runs ∪ earlier deltas) with
     the batch (index rows __new=False, batch rows True — within-batch
     dups pair too), overwrite this epoch's pairs partition, then
     overwrite this epoch's band delta so the NEXT epoch sees these

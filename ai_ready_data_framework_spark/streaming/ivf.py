@@ -16,18 +16,19 @@ Replay safety: ``append_ivf_index`` (the batch helper) appends to the
 bucketed table, so a crashed-and-replayed epoch would DOUBLE its rows.
 This loop instead runs the shared epoch-delta lifecycle
 (streaming/lifecycle.py): each epoch lands as an idempotent OVERWRITE
-of ``delta_dir/epoch=N``, probes read base ∪ deltas (delta rows are not
-bucketed, so probes against them shuffle — the documented cost of
-recency, bounded by compaction cadence), and compaction folds them
-back into one file set per cell bucket.
+of ``delta_dir/epoch=N``, probes read base ∪ runs ∪ deltas (delta rows
+are not bucketed, so probes against them shuffle — the documented cost
+of recency, bounded by compaction cadence), and compaction folds them
+into a run or, once the runs reach the base's size, a new base —
+either way one file set per cell bucket.
 
 Refit signal: every epoch can evaluate ``ivf_refit_needed`` (PSI of
 cell occupancy, batch vs index) and append a one-row drift record to
 ``drift_log_dir`` — the executable form of "re-fit when the drift
 profile says the distribution moved". The loop only SIGNALS; acting on
 it is ``sources/maintenance.py::refit_ivf_index`` (r10 — fit a fresh
-quantizer over base ∪ deltas, stage, verify row conservation + probe
-recall, atomically swap assignments and centroids), run as planned
+quantizer over base ∪ runs ∪ deltas, stage, verify row conservation +
+probe recall, atomically swap assignments and centroids), run as planned
 maintenance because it rewrites the whole index.
 """
 
@@ -63,7 +64,7 @@ EMB_SCHEMA = "vec_id bigint, embedding array<float>"
 def indexed_vectors(
     spark: SparkSession, table_name: str, delta_dir: str
 ) -> DataFrame:
-    """The probe view: bucketed base ∪ un-compacted, un-folded deltas
+    """The probe view: bucketed base ∪ runs ∪ un-folded deltas
     (lifecycle.probe_view)."""
     return probe_view(spark, table_name, delta_dir)
 
@@ -80,7 +81,7 @@ def ingest_epoch(
     """One micro-batch step: assign cells from the frozen quantizer,
     overwrite this epoch's delta partition (replays are no-ops in
     effect), and optionally append a drift record — PSI of the batch's
-    cell occupancy vs (base ∪ earlier deltas). The drift write is also
+    cell occupancy vs (base ∪ runs ∪ earlier deltas). The drift write is also
     epoch-keyed, so it replays idempotently too."""
     assigned = assign_cells(batch_vectors, centroids)
     if drift_log_dir is not None:
@@ -141,7 +142,8 @@ def maintain_ivf_index(
 
     1. If any UN-FOLDED epoch's drift record says ``refit_needed``,
        run ``refit_ivf_index`` (fits a fresh quantizer over base ∪
-       deltas, verifies, atomically swaps, folds the deltas).
+       runs ∪ deltas, verifies, atomically swaps, folds the deltas
+       and drops the runs).
     2. Else if the un-folded delta count has reached
        ``compact_after``, compact.
     3. Else do nothing.

@@ -41,6 +41,7 @@ from ai_ready_data_framework_spark.operators.ai import (
 )
 from ai_ready_data_framework_spark.sources.maintenance import (
     GRAM_INDEX,
+    index_view,
     write_bucketed,
 )
 from ai_ready_data_framework_spark.streaming.dedup import DOCS_SCHEMA
@@ -143,9 +144,10 @@ def probe_spans(
     exclude_ids: DataFrame | None = None,
 ) -> DataFrame:
     """The probe plan itself (pure, so tests can pin its physical
-    shape): batch grams LEFT SEMI join the hash-bucketed index (the
-    corpus-sized side claims HashPartitioning(h) from its buckets and
-    never reshuffles; only the rate-sized batch side moves), then the
+    shape): batch grams LEFT SEMI join the hash-bucketed index, base ∪
+    runs (the corpus-sized side claims HashPartitioning(h) from its
+    buckets and never reshuffles; only the rate-sized batch side
+    moves), then the
     per-doc interval merge. ``exclude_ids`` (a doc_id frame) drops
     those documents' postings from BOTH index sides before the hash
     projection — a broadcast anti-join, so the bucketed side's
@@ -158,7 +160,7 @@ def probe_spans(
             return postings
         return postings.join(F.broadcast(exclude_ids), "doc_id", "left_anti")
 
-    probe = _without_own(spark.table(index_table)).select("h")
+    probe = _without_own(index_view(spark, index_table)).select("h")
     if earlier is not None:
         probe = probe.unionByName(_without_own(earlier).select("h"))
     hits = batch_grams.join(probe, "h", "left_semi")

@@ -1418,3 +1418,111 @@ def test_forget_in_epoch_dir_resolves_escaped_partition_spellings(
     ).write.parquet(f"{root2}/epoch=05")
     with pytest.raises(ValueError, match="spells it"):
         forget_in_epoch_dir(spark, root2, _ids(spark, 3))
+
+
+def _band_index_with_run(spark, tmp_path, table):
+    """A band index of docs 1-8 whose doc 500 sits in a run (one
+    compaction of a one-doc delta): (index path, delta dir)."""
+    from ai_ready_data_framework_spark.sources import maintenance as M
+
+    index_path = str(tmp_path / "bindex")
+    delta_dir = str(tmp_path / "bdeltas")
+    docs = spark.createDataFrame(
+        [(d, _text(f"r{d}_", 12)) for d in range(1, 9)],
+        "doc_id long, text string",
+    )
+    SD.write_band_index(SD.doc_bands(docs), table, index_path)
+    late = spark.createDataFrame(
+        [(500, _text("late_", 12))], "doc_id long, text string"
+    )
+    SD.probe_and_fold(spark, late, table, delta_dir, str(tmp_path / "p"), 0)
+    SD.compact_band_index(spark, table, index_path, delta_dir)
+    assert M.runs_of(spark, table) == [1]
+    return index_path, delta_dir
+
+
+def _drop_with_runs(spark, table):
+    for t in (table, f"{table}__staging", f"{table}__run1"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_verify_forgotten_counts_postings_in_runs(spark, tmp_path):
+    """A key that lives only in a run still survives: the audit reads
+    base ∪ runs, so it cannot certify an erasure the base alone would
+    pass."""
+    from ai_ready_data_framework_spark.sources.maintenance import (
+        verify_forgotten,
+    )
+
+    table = "band_verify_run"
+    try:
+        _band_index_with_run(spark, tmp_path, table)
+        rep = verify_forgotten(spark, _ids(spark, 500), tables=(table,))
+        assert rep["targets"][table] == 8  # one posting per band
+        assert not rep["clean"]
+    finally:
+        _drop_with_runs(spark, table)
+
+
+def test_forget_with_a_run_present_leaves_no_survivor_and_no_run(
+    spark, tmp_path
+):
+    """Forget republishes base ∪ runs without the keys as one new base:
+    the takedown rewrites one table, the key survives nowhere (also
+    not in the run that held doc 500), and no run dir or run table is
+    left."""
+    import glob
+
+    from ai_ready_data_framework_spark.sources import maintenance as M
+
+    table = "band_forget_run"
+    try:
+        index_path, delta_dir = _band_index_with_run(spark, tmp_path, table)
+        n_before = M.index_view(spark, table).count()
+        rep = SD.forget_documents_band(
+            spark, _ids(spark, 3, 500), table, index_path, delta_dir
+        )
+        assert rep == {"removed_rows": 16, "kept_rows": n_before - 16}
+        audit = M.verify_forgotten(spark, _ids(spark, 3, 500), tables=(table,))
+        assert audit["clean"] and audit["targets"][table] == 0
+        assert M.runs_of(spark, table) == []
+        assert not glob.glob(f"{index_path}_run*")
+        assert not spark.catalog.tableExists(f"{table}__run1")
+        assert M.index_view(spark, table).count() == n_before - 16
+    finally:
+        _drop_with_runs(spark, table)
+
+
+def test_base_publish_absorbs_and_drops_the_runs(spark, tmp_path):
+    """A new base generation holds the runs' rows, so it must not list
+    them again (``idx.runs`` never carries over, unlike the other
+    ``idx.*`` properties): the runs are dropped after the swap and each
+    row serves once."""
+    import glob
+
+    from ai_ready_data_framework_spark.sources import maintenance as M
+
+    table = "band_publish_runs"
+    try:
+        index_path, _ = _band_index_with_run(spark, tmp_path, table)
+        spark.sql(
+            f"ALTER TABLE {table} SET TBLPROPERTIES ('idx.note'='kept')"
+        )
+        n = M.index_view(spark, table).count()
+        M.publish_bucketed_generation(
+            spark,
+            M.index_files(spark, table),
+            table,
+            index_path,
+            M.BAND_INDEX.bucket_cols,
+            M.BAND_INDEX.n_buckets,
+        )
+        props = M.table_properties(spark, table)
+        assert "idx.runs" not in props
+        assert props["idx.note"] == "kept"  # other idx.* still carry
+        assert props["idx.folded_epochs"] == "[0]"
+        assert M.index_view(spark, table).count() == n
+        assert not glob.glob(f"{index_path}_run*")
+        assert not spark.catalog.tableExists(f"{table}__run1")
+    finally:
+        _drop_with_runs(spark, table)

@@ -150,15 +150,15 @@ def test_compaction_is_crash_idempotent(
     assert glob.glob(f"{delta_dir}/epoch=*")  # leftovers ARE on disk
     assert M.folded_epochs_of(spark, name) == {0}
     spark.catalog.refreshTable(name)
-    # no doubling: base holds everything, the leftover delta is skipped
-    assert spark.table(name).count() == n_all
+    # no doubling: base ∪ runs hold everything, the leftover delta is skipped
+    assert M.index_view(spark, name).count() == n_all
     assert SI.indexed_vectors(spark, name, delta_dir).count() == n_all
 
     # recovery run: deletes the leftovers without re-folding them
     SI.compact_ivf_index_deltas(spark, name, path, delta_dir)
     assert not glob.glob(f"{delta_dir}/epoch=*")
     spark.catalog.refreshTable(name)
-    assert spark.table(name).count() == n_all
+    assert M.index_view(spark, name).count() == n_all
 
 
 def test_failed_audit_keeps_live_generation(spark, sf_correctness, refit_env):
@@ -297,3 +297,47 @@ def test_refit_does_not_fold_epochs_landed_mid_run(
     assert rep["folded_epochs"] == [0]  # only the pinned epoch
     assert os.path.isdir(f"{delta_dir}/epoch=1")  # the racer survived
     assert M.folded_epochs_of(spark, name) == {0}
+
+
+def test_refit_reads_runs_and_leaves_none(spark, refit_env, tmp_path):
+    """With a run published and a later epoch still unfolded, the refit
+    fits and reassigns base ∪ runs ∪ deltas: every row survives once,
+    the new generation lists no run, and the run's table and dir are
+    gone."""
+    name, path, assigned, centroids = refit_env
+    delta_dir = str(tmp_path / "deltas")
+    try:
+        SI.ingest_epoch(
+            spark, _displaced(assigned, keep_mod=5), centroids, name,
+            delta_dir, epoch_id=0,
+        )
+        SI.compact_ivf_index_deltas(spark, name, path, delta_dir)
+        assert M.runs_of(spark, name) == [1]
+        SI.ingest_epoch(
+            spark, _displaced(assigned, keep_mod=7), centroids, name,
+            delta_dir, epoch_id=1,
+        )
+        ids_all = sorted(
+            r.vec_id
+            for r in SI.indexed_vectors(spark, name, delta_dir)
+            .select("vec_id")
+            .collect()
+        )
+        assert len(ids_all) > M.index_view(spark, name).count() > (
+            spark.table(name).count()
+        )
+
+        rep = M.refit_ivf_index(spark, name, path, delta_dir=delta_dir)
+        assert rep["rows"] == len(ids_all)
+        assert rep["folded_epochs"] == [1]  # epoch 0 is in the run
+        assert M.runs_of(spark, name) == []
+        assert not glob.glob(f"{path}/vectors_run*")
+        assert not spark.catalog.tableExists(f"{name}__run1")
+        assert sorted(
+            r.vec_id
+            for r in SI.indexed_vectors(spark, name, delta_dir)
+            .select("vec_id")
+            .collect()
+        ) == ids_all
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}__run1")

@@ -1,9 +1,12 @@
 """Streaming incremental near-dedup (streaming/dedup.py): micro-batch
 probe-and-fold over the persisted band index must equal the one-shot
 batch probe, epoch replays must be no-ops in effect, and compaction
-must fold the deltas back into the bucketed base."""
+must fold the deltas into a bucketed run or, once the runs reach the
+base's size, a new bucketed base."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -47,7 +50,7 @@ def _pair_set(spark, pairs_out):
 
 
 def test_stream_probe_equals_one_shot_batch_probe(
-    spark, split_corpus, tmp_path
+    spark, split_corpus, tmp_path, monkeypatch
 ):
     docs, stream_docs, _, index_bands, table = split_corpus
     # two landing-zone drops -> two micro-batches
@@ -95,6 +98,8 @@ def test_stream_probe_equals_one_shot_batch_probe(
     )
 
     n_base = read_band_index(spark, table).count()
+    # the generation-dir assertions below are the merge tier's
+    monkeypatch.setattr(L, "MERGE_RATIO", 0)
     SD.compact_band_index(
         spark, table, str(tmp_path / "index"), str(tmp_path / "deltas")
     )
@@ -569,7 +574,7 @@ def test_compactor_does_not_fold_epochs_landed_mid_run(
         # the racer was NOT folded, NOT deleted, NOT in the base
         assert M.folded_epochs_of(spark, table) == {0}
         assert os.path.isdir(f"{delta}/epoch=1")
-        base = spark.read.parquet(M._table_location(spark, table))
+        base = M.index_files(spark, table)
         assert base.filter(key == 9).count() == 0
         assert base.filter(key == 5).count() > 0  # epoch 0 folded
         n_late_rows = rows(spark, late).count()
@@ -578,11 +583,10 @@ def test_compactor_does_not_fold_epochs_landed_mid_run(
         compactor(spark, table, path, delta)
         spark.catalog.refreshTable(table)
         assert M.folded_epochs_of(spark, table) == {1}
-        base2 = spark.read.parquet(M._table_location(spark, table))
+        base2 = M.index_files(spark, table)
         assert base2.filter(key == 9).count() == n_late_rows
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql(f"DROP TABLE IF EXISTS {table}__staging")
+        _drop_run_tier(spark, table)
 
 
 @pytest.mark.parametrize("index", ["band", "gram", "ivf"])
@@ -620,3 +624,204 @@ def test_planner_reports_epochs_the_compactor_folded(
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         spark.sql(f"DROP TABLE IF EXISTS {table}__staging")
+
+
+def _run_tier_index(spark, tmp_path, index, n_base=4):
+    """A bucketed ``index`` of ``n_base`` documents with no delta yet:
+    (spec, compactor, rows, table, path, delta, base rows)."""
+    from ai_ready_data_framework_spark.sources import maintenance as M
+
+    spec, compactor, _, rows = _lifecycle_index(index)
+    table = f"{index}_run_tier"
+    path = str(tmp_path / "index")
+    delta = str(tmp_path / "deltas")
+    base = [(d, _words(f"w{d}_")) for d in range(1, n_base + 1)]
+    M.write_bucketed(
+        rows(spark, base), table, spec.table_dir(path),
+        spec.bucket_cols, spec.n_buckets,
+    )
+    return spec, compactor, rows, table, path, delta, base
+
+
+def _drop_run_tier(spark, table):
+    for t in [table, f"{table}__staging"] + [
+        f"{table}__run{r}" for r in range(1, 9)
+    ]:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def _multiset(df):
+    return sorted(repr(r) for r in df.select(*sorted(df.columns)).collect())
+
+
+def _run_dirs(spec, path):
+    import glob as _glob
+
+    return sorted(_glob.glob(f"{spec.table_dir(path)}_run*"))
+
+
+@pytest.mark.parametrize("index", ["band", "gram", "ivf"])
+def test_crash_before_run_publish_leaves_garbage_the_next_pass_drops(
+    spark, tmp_path, monkeypatch, index
+):
+    """A pass that dies after staging its run but before the ALTER that
+    lists it leaves a run table nobody reads: no reader doubles or
+    loses a row (the delta still serves, unfolded), and the next pass
+    drops the orphan and publishes the fold once."""
+    import glob as _glob
+
+    from ai_ready_data_framework_spark.sources import maintenance as M
+
+    spec, compactor, rows, table, path, delta, base = _run_tier_index(
+        spark, tmp_path, index
+    )
+    try:
+        L.write_epoch(rows(spark, [(50, _words("e0_"))]), delta, 0)
+        expected = _multiset(L.probe_view(spark, table, delta))
+
+        def crash(*_a, **_k):
+            raise RuntimeError("simulated crash before the run publish")
+
+        monkeypatch.setattr(M, "_alter_index_props", crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            compactor(spark, table, path, delta)
+        monkeypatch.undo()
+        [orphan] = _run_dirs(spec, path)
+        orphan_files = set(_glob.glob(f"{orphan}/*.parquet"))
+        assert orphan_files and spark.catalog.tableExists(f"{table}__run1")
+        assert M.runs_of(spark, table) == []
+        assert M.folded_epochs_of(spark, table) == set()
+        assert _multiset(L.probe_view(spark, table, delta)) == expected
+        assert _multiset(M.index_view(spark, table)) == _multiset(
+            rows(spark, base)
+        )
+
+        assert compactor(spark, table, path, delta) == [0]
+        assert M.runs_of(spark, table) == [1]
+        assert M.folded_epochs_of(spark, table) == {0}
+        assert not orphan_files & set(_glob.glob(f"{orphan}/*.parquet"))
+        assert _run_dirs(spec, path) == [orphan]
+        assert not _glob.glob(f"{delta}/epoch=*")
+        assert _multiset(L.probe_view(spark, table, delta)) == expected
+    finally:
+        _drop_run_tier(spark, table)
+
+
+@pytest.mark.parametrize("index", ["band", "gram", "ivf"])
+def test_crash_after_run_publish_does_not_double_rows(
+    spark, tmp_path, monkeypatch, index
+):
+    """A pass that dies after publishing its run but before deleting
+    the folded delta leaves that delta on disk: the manifest lists its
+    epoch, so readers skip it, and the next pass deletes it without
+    re-folding."""
+    import glob as _glob
+
+    from ai_ready_data_framework_spark.sources import maintenance as M
+
+    spec, compactor, rows, table, path, delta, _ = _run_tier_index(
+        spark, tmp_path, index
+    )
+    try:
+        L.write_epoch(rows(spark, [(50, _words("e0_"))]), delta, 0)
+        expected = _multiset(L.probe_view(spark, table, delta))
+
+        monkeypatch.setattr(L, "_fs_delete", lambda *_: None)
+        assert compactor(spark, table, path, delta) == [0]
+        monkeypatch.undo()
+        assert M.runs_of(spark, table) == [1]
+        assert _glob.glob(f"{delta}/epoch=*")  # leftovers ARE on disk
+        assert M.folded_epochs_of(spark, table) == {0}
+        assert _multiset(L.probe_view(spark, table, delta)) == expected
+
+        assert compactor(spark, table, path, delta) == []
+        assert not _glob.glob(f"{delta}/epoch=*")
+        assert M.runs_of(spark, table) == [1]
+        assert _multiset(L.probe_view(spark, table, delta)) == expected
+    finally:
+        _drop_run_tier(spark, table)
+
+
+@pytest.mark.parametrize("index", ["band", "gram", "ivf"])
+def test_runs_accumulate_then_merge_into_the_base(spark, tmp_path, index):
+    """Pass by pass, each compaction writes a run while the runs plus
+    its pending delta hold fewer bytes than the base, and merges
+    everything into a new base once they reach it (the tiered policy).
+    At every step the index serves exactly the rows landed so far, the
+    manifest names exactly the epochs still on disk or just folded,
+    and every run and every generation holds at most one file per
+    bucket. The sequence must show at least two runs before a merge."""
+    import glob as _glob
+
+    from ai_ready_data_framework_spark.sources import maintenance as M
+
+    spec, compactor, rows, table, path, delta, base = _run_tier_index(
+        spark, tmp_path, index
+    )
+
+    def nbytes(d):
+        return sum(
+            os.path.getsize(f)
+            for f in _glob.glob(f"{d.removeprefix('file:')}/*.parquet")
+        )
+
+    landed = list(base)
+    tiers = []
+    try:
+        for e in range(8):
+            batch = [(100 + e, _words(f"e{e}_"))]
+            L.write_epoch(rows(spark, batch), delta, e)
+            landed += batch
+            runs_before = M.runs_of(spark, table)
+            below = nbytes(f"{delta}/epoch={e}") + sum(
+                nbytes(d) for d in _run_dirs(spec, path)
+            ) < nbytes(M._table_location(spark, table))
+            assert compactor(spark, table, path, delta) == [e]
+            runs = M.runs_of(spark, table)
+            tiers.append("run" if runs else "merge")
+            assert tiers[-1] == ("run" if below else "merge")
+            assert runs == (runs_before + [len(runs_before) + 1] if below else [])
+            assert M.folded_epochs_of(spark, table) == {e}
+            assert not _glob.glob(f"{delta}/epoch=*")
+            assert _multiset(M.index_view(spark, table)) == _multiset(
+                rows(spark, landed)
+            )
+            assert _multiset(M.index_files(spark, table)) == _multiset(
+                rows(spark, landed)
+            )
+            for d in _run_dirs(spec, path) + [
+                M._table_location(spark, table).removeprefix("file:")
+            ]:
+                assert 0 < len(_glob.glob(f"{d}/*.parquet")) <= spec.n_buckets
+            assert len(_run_dirs(spec, path)) == len(runs)
+            if tiers[-1] == "merge":
+                break
+        assert tiers[-1] == "merge" and tiers.count("run") >= 2, tiers
+    finally:
+        _drop_run_tier(spark, table)
+
+
+def test_index_view_with_a_run_keeps_the_bucket_partitioning(
+    spark, tmp_path
+):
+    """A run is bucketed like the base, so the catalog union base ∪
+    run still reports HashPartitioning(band, bk): the probe's census
+    aggregate over it plans no exchange at all."""
+    from ai_ready_data_framework_spark.sources import maintenance as M
+
+    spec, compactor, rows, table, path, delta, _ = _run_tier_index(
+        spark, tmp_path, "band"
+    )
+    try:
+        L.write_epoch(rows(spark, [(50, _words("e0_"))]), delta, 0)
+        compactor(spark, table, path, delta)
+        assert M.runs_of(spark, table) == [1]
+        df = M.index_view(spark, table).groupBy("band", "bk").count()
+        assert df.count() > 0
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+        plan = plan.split("== Initial Plan ==")[0]
+        assert plan.count("Bucketed: true") == 2, plan
+        assert "Exchange" not in plan, plan
+    finally:
+        _drop_run_tier(spark, table)

@@ -124,12 +124,12 @@ def test_compact_deltas_restores_exchange_free_base(
     SI.compact_ivf_index_deltas(spark, name, str(tmp_path / "ivf"), delta_dir)
     spark.catalog.refreshTable(name)
     # row conservation + delta log gone + one file set per bucket
-    assert spark.table(name).count() == n_merged
+    assert M.index_view(spark, name).count() == n_merged
     assert M.read_epoch_deltas(spark, delta_dir) is None
     assert len(glob.glob(f"{vec_dir}/*.parquet")) <= IVF_INDEX_BUCKETS
     # probe identity over the compacted base (queries re-derived: the
     # pre-compaction frame's file listing is gone by design)
-    compacted = spark.table(name)
+    compacted = M.index_view(spark, name)
     queries2 = compacted.filter(F.col("vec_id") < ai.IVF_N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )

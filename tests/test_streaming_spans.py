@@ -17,6 +17,7 @@ from ai_ready_data_framework_spark.operators.ai import (
     cross_duplicated_spans,
     gram_postings,
 )
+from ai_ready_data_framework_spark.sources import maintenance as M
 from ai_ready_data_framework_spark.streaming import lifecycle as L
 from ai_ready_data_framework_spark.streaming import spans as SS
 
@@ -148,7 +149,7 @@ def test_compaction_and_planner_converge(spark, span_env, tmp_path):
     assert rep == {"action": "compact", "folded_epochs": [0, 1]}
     assert not _glob.glob(f"{delta_dir}/epoch=*")
     spark.catalog.refreshTable(table)
-    assert spark.table(table).count() == n_all
+    assert M.index_view(spark, table).count() == n_all
     rep = SS.maintain_gram_index(
         spark, table, index_path, delta_dir, compact_after=2
     )
@@ -186,7 +187,9 @@ def test_probe_index_side_needs_no_exchange(spark, span_env, tmp_path):
     assert plan.count("Exchange hashpartitioning") <= 2, plan
 
 
-def test_gram_index_recovers_after_swap_crash(spark, span_env, tmp_path):
+def test_gram_index_recovers_after_swap_crash(
+    spark, span_env, tmp_path, monkeypatch
+):
     """The generic generation-manifest recovery covers the third index
     too: a crash inside the compaction's DROP->CREATE swap window
     (table name undefined, generation files intact) is repaired by
@@ -203,6 +206,8 @@ def test_gram_index_recovers_after_swap_crash(spark, span_env, tmp_path):
         SS.probe_and_fold_spans(
             spark, b, table, delta_dir, spans_out, epoch, min_run=MIN_RUN
         )
+    # only the merge tier publishes through the DROP->CREATE swap
+    monkeypatch.setattr(L, "MERGE_RATIO", 0)
     SS.compact_gram_index(spark, table, index_path, delta_dir)
     spark.catalog.refreshTable(table)
     n_all = spark.table(table).count()
@@ -341,7 +346,7 @@ def test_maintain_gram_index_crash_mid_compact_converges(
     assert _glob.glob(f"{delta_dir}/epoch=*")  # leftovers ARE on disk
     assert M.folded_epochs_of(spark, table) == {0, 1}
     spark.catalog.refreshTable(table)
-    assert spark.table(table).count() == n_all
+    assert M.index_view(spark, table).count() == n_all
 
     # planner re-run: the folded leftovers are inert (manifest-skipped,
     # zero pending) — the planner converges to no-op, never re-folds
@@ -350,14 +355,14 @@ def test_maintain_gram_index_crash_mid_compact_converges(
     )
     assert rep == {"action": "none", "pending_epochs": []}
     spark.catalog.refreshTable(table)
-    assert spark.table(table).count() == n_all
+    assert M.index_view(spark, table).count() == n_all
 
     # and the next compaction pass sweeps the leftovers without
     # re-folding them (to_fold is empty, delete-only)
     SS.compact_gram_index(spark, table, index_path, delta_dir)
     assert not _glob.glob(f"{delta_dir}/epoch=*")
     spark.catalog.refreshTable(table)
-    assert spark.table(table).count() == n_all
+    assert M.index_view(spark, table).count() == n_all
 
 
 def test_scrubbed_out_lands_stripped_docs_per_epoch(
