@@ -17,7 +17,11 @@ and returns the canonical score table
 distinct/non-null counts, constraint violations, the temporal column's
 min/max — come from one profile per table (``table_profile``): a
 single aggregate over the columns the registries name, built once per
-run and read by every check that needs it. The remaining data-level
+run and read by every check that needs it. A table that scans as exactly
+one split is profiled in one task: the frame is coalesced to its one
+partition (no data moves) and the plan needs no exchange; a table of
+several splits shuffles only its keys (``_profile_aggs``). The
+embeddings label counts follow the same rule. The remaining data-level
 checks are their own aggregate queries. At 100 TB these are plain scans
 with conditional aggregates; nothing collects row-level data to the
 driver.
@@ -139,11 +143,13 @@ def _range_key(c: str, lo: float, hi: float) -> str:
     return f"out_of_range:{c}[{lo},{hi}]"
 
 
-def _profile_aggs(t: str) -> list[Column]:
+def _profile_aggs(t: str, expand: bool) -> list[Column]:
     """The named facts a profile holds for ``t``. A key (``c`` or the
     composite ``a,b``) gets ``nonnull:`` (rows with every key column
     set) and ``distinct:`` (count_distinct, which skips the other rows);
-    a not_null column gets ``nonnull:``."""
+    a not_null column gets ``nonnull:``. ``expand`` writes the distinct
+    count in its Expand form, for an input of several partitions, else
+    in the plain form, for one partition (see below)."""
     aggs = {"n": F.count(F.lit(1))}
     keys = [R.PRIMARY_KEYS[t]] if t in R.PRIMARY_KEYS else []
     for t_, c, kind, lo, hi in R.CONSTRAINTS:
@@ -165,10 +171,12 @@ def _profile_aggs(t: str) -> list[Column]:
         # anyway. It makes Spark plan the distinct count through Expand,
         # where the other aggregates fold once per partition instead of
         # riding the per-key shuffle, which would carry every key's
-        # temporal min/max (lineitem: 2.5x the shuffle bytes).
-        aggs[f"distinct:{k}"] = F.expr(
-            f"count(DISTINCT {cols}) FILTER (WHERE {key_set})"
-        )
+        # temporal min/max (lineitem: 2.5x the shuffle bytes). On one
+        # partition no shuffle is needed, and the plain form skips Expand.
+        distinct = f"count(DISTINCT {cols})"
+        if expand:
+            distinct += f" FILTER (WHERE {key_set})"
+        aggs[f"distinct:{k}"] = F.expr(distinct)
     ts_col = R.TEMPORAL_SCOPE.get(t)
     if ts_col:
         aggs["min_ts"] = F.min(F.col(ts_col).cast("timestamp"))
@@ -176,26 +184,41 @@ def _profile_aggs(t: str) -> list[Column]:
     return [e.alias(k) for k, e in aggs.items()]
 
 
+def _whole_table(df: DataFrame) -> tuple[DataFrame, bool]:
+    """``df`` ready for a whole-table aggregate, and whether it is one
+    partition. A frame whose scan reads exactly one split is coalesced
+    to one partition: no data moves, but the plan then reports
+    SinglePartition, which satisfies every distribution an aggregate
+    requires, so the aggregate plans no exchange and runs as one task
+    of one job. A scan of no splits stays as it is: there the final
+    exchange is what yields a global aggregate's one row."""
+    if df.rdd.getNumPartitions() == 1:
+        return df.coalesce(1), True
+    return df, False
+
+
 def table_profile(ctx: CheckContext, t: str) -> Row:
-    """One aggregate job over table ``t``: every table fact a check
-    reads, as one Row (see ``_profile_aggs``). Built once per context;
+    """One aggregate over table ``t``: every table fact a check reads,
+    as one Row (see ``_profile_aggs``). Built once per context;
     ``run_assessment`` builds all of them concurrently ahead of the
-    checks."""
+    checks. A table that scans as one split is profiled in one task
+    with no exchange; a larger one keeps the Expand form, whose two
+    exchanges carry only the keys."""
 
     def build() -> Row:
-        return ctx.table(t).agg(*_profile_aggs(t)).first()
+        df, one = _whole_table(ctx.table(t))
+        return df.agg(*_profile_aggs(t, expand=not one)).first()
 
     return ctx.artifact(f"profile:{t}", build)  # type: ignore[return-value]
 
 
 def label_counts(ctx: CheckContext) -> dict:
-    """Rows per embeddings label (a NULL label is its own group)."""
+    """Rows per embeddings label (a NULL label is its own group), in
+    one task when the table scans as one split."""
 
     def build() -> dict:
-        return {
-            r.label: r["count"]
-            for r in ctx.table("embeddings").groupBy("label").count().collect()
-        }
+        df, _ = _whole_table(ctx.table("embeddings"))
+        return {r.label: r["count"] for r in df.groupBy("label").count().collect()}
 
     return ctx.artifact("label_counts", build)  # type: ignore[return-value]
 
@@ -467,14 +490,16 @@ def feature_materialization_coverage(ctx: CheckContext) -> float:
             hourly_event_features,
         )
 
-        feats = hourly_event_features(ctx.table("events"))
         d = ctx.scratch("features")
         # offline: columnar, time-partitioned
-        feats.write.mode("overwrite").parquet(f"{d}/hourly_features")
-        # online: key-bucketed compact layout for point lookup
-        feats.repartition(8, "user_id").write.mode("overwrite").parquet(
-            f"{d}/hourly_features_online"
+        hourly_event_features(ctx.table("events")).write.mode("overwrite").parquet(
+            f"{d}/hourly_features"
         )
+        # online: key-bucketed compact layout for point lookup, copied
+        # from the offline files so the aggregate runs once
+        ctx.spark.read.parquet(f"{d}/hourly_features").repartition(
+            8, "user_id"
+        ).write.mode("overwrite").parquet(f"{d}/hourly_features_online")
         return {"hourly_features", "hourly_features_online"}
 
     mats: set[str] = ctx.artifact("feature_materializations", build)  # type: ignore[assignment]
@@ -661,9 +686,12 @@ def point_in_time_correctness(ctx: CheckContext) -> float:
         "user_id", F.col("ts").alias("fts"), F.col("event_id").alias("fid")
     )
     joined = as_of_join(labels, features, "user_id", "lts", "fts", ["fid", "fts"])
-    total = joined.count()
-    leaks = joined.filter(F.col("fts") > F.col("lts")).count()
-    return _frac(total - leaks, total)
+    # count_if skips a label with no earlier click (NULL fts): no leak
+    row = joined.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count_if(F.col("fts") > F.col("lts")).alias("leaks"),
+    ).first()
+    return _frac(row.n - row.leaks, row.n)
 
 
 @check("training_serving_parity", "current", "serving,training", "D", ":107-109")

@@ -15,8 +15,20 @@ from ai_ready_data_framework_spark.checks.engine import (
 
 
 @pytest.fixture(scope="module")
-def assessment(spark, sf_smoke):
-    return run_assessment(spark, sf_smoke, run_streaming=False).cache()
+def assessment_run(spark, sf_smoke):
+    """The fixture's full assessment and the ``check … errored``
+    warnings it raised."""
+    import warnings
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        scores = run_assessment(spark, sf_smoke, run_streaming=False).cache()
+    return scores, [str(w.message) for w in caught if "errored" in str(w.message)]
+
+
+@pytest.fixture(scope="module")
+def assessment(assessment_run):
+    return assessment_run[0]
 
 
 @pytest.fixture
@@ -42,6 +54,14 @@ def _last_job(spark) -> int:
     return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
 
 
+def _shuffle_written(spark) -> int:
+    """Shuffle bytes written by every executor so far."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    execs = jsc.statusStore().executorList(True)
+    return sum(execs.apply(i).totalShuffleWrite() for i in range(execs.size()))
+
+
 def test_all_48_checks_present():
     assert len(CHECKS) == 48
     by_factor: dict[str, int] = {}
@@ -63,6 +83,13 @@ def test_assessment_values_normalized(assessment):
     assert len(rows) == 48
     for r in rows:
         assert 0.0 <= r.value <= 1.0, r
+
+
+def test_assessment_raises_no_check_error(assessment_run):
+    """run_assessment turns a raising check into a 0.0 score plus a
+    warning; on the healthy fixture no check may raise, or every check
+    a failed profile serves would read as a silent 0.0."""
+    assert assessment_run[1] == []
 
 
 def test_factor_rollup(assessment):
@@ -235,14 +262,15 @@ PROFILE_SERVED = PROFILE_ONLY + (
 )
 
 
-def _micro_product(spark, root, empty: str) -> dict:
+def _micro_product(spark, root, empty: str, n_files: int = 1) -> dict:
     """Six tables with one defect of each kind the profiles count:
     events has a NULL and a duplicated PK (and a NULL ts), orders an
     out-of-range total, documents a NULL in not_null ``text``,
     embeddings a duplicated PK, a NULL label and a document without a
     vector. The temporal table ``empty`` is written with no rows. The
     label shares are dyadic, so the total variation is exact in any
-    summation order."""
+    summation order. Each table is ``n_files`` Parquet files, its rows
+    dealt round-robin (a file may hold none)."""
     import datetime as dt
 
     from ai_ready_data_framework_spark.io import load_tables
@@ -294,9 +322,11 @@ def _micro_product(spark, root, empty: str) -> dict:
         ),
     }
     for name, (rows, schema) in tables.items():
-        spark.createDataFrame([] if name == empty else rows, schema).coalesce(
-            1
-        ).write.parquet(f"{root}/{name}.parquet")
+        rows = [] if name == empty else rows
+        for i in range(n_files):
+            spark.createDataFrame(rows[i::n_files], schema).coalesce(1).write.mode(
+                "append"
+            ).parquet(f"{root}/{name}.parquet")
     return load_tables(spark, str(root))
 
 
@@ -411,20 +441,37 @@ def _parent_formulas(T: dict) -> dict:
     return out
 
 
-@pytest.mark.parametrize("empty", ["lineitem", "events"])
-def test_profile_checks_keep_exact_semantics(spark, tmp_path, empty):
+@pytest.mark.parametrize(
+    "empty, n_files",
+    [("lineitem", 1), ("events", 1), ("lineitem", 3), ("events", 3)],
+    ids=["lineitem", "events", "lineitem-three_files", "events-three_files"],
+)
+def test_profile_checks_keep_exact_semantics(spark, tmp_path, empty, n_files):
     """Every profile-served check returns exactly what its own scans
     gave on a product holding a NULL PK, a duplicated PK, an
     out-of-range value, a NULL in a not_null column and an empty
     temporal table. With events empty, the tracker domain has no
     timestamps: data_freshness scores its member stale instead of
-    raising."""
+    raising. One file per table scans as one split and profiles
+    through the plain distinct count in one task; three files scan as
+    three splits and keep the FILTER/Expand form, empty tables
+    included."""
     from ai_ready_data_framework_spark.checks import engine as E
 
-    tables = _micro_product(spark, tmp_path, empty)
-    expected = _parent_formulas(tables)
-    ctx = E.CheckContext(spark=spark, sf_dir=str(tmp_path), tables=tables)
-    got = {k: getattr(E, k)(ctx) for k in PROFILE_SERVED}
+    # every file its own split, whatever the session's core count
+    cost = "spark.sql.files.openCostInBytes"
+    old_cost = spark.conf.get(cost)
+    spark.conf.set(cost, str(128 << 20))
+    try:
+        tables = _micro_product(spark, tmp_path, empty, n_files)
+        for t, df in tables.items():
+            assert df.rdd.getNumPartitions() == n_files, t
+            assert E._whole_table(df)[1] == (n_files == 1), t
+        expected = _parent_formulas(tables)
+        ctx = E.CheckContext(spark=spark, sf_dir=str(tmp_path), tables=tables)
+        got = {k: getattr(E, k)(ctx) for k in PROFILE_SERVED}
+    finally:
+        spark.conf.set(cost, old_cost)
     assert got == expected
     # the defects are visible, so the equality above is not vacuous
     assert got["entity_identifier_declaration"] < 1.0
@@ -470,6 +517,56 @@ def test_profile_only_checks_run_no_spark_job(spark, sf_smoke):
     ):
         assert 0.0 <= getattr(E, key)(ctx) <= 1.0
     assert _last_job(spark) == before
+
+
+def test_one_split_aggregates_run_as_one_job_without_shuffle(spark, sf_smoke):
+    """Every fixture table scans as one split, so its profile, and
+    label_counts, each run as one Spark job that writes no shuffle
+    bytes."""
+    from ai_ready_data_framework_spark.checks import engine as E
+    from ai_ready_data_framework_spark.io import load_tables
+
+    ctx = E.CheckContext(
+        spark=spark, sf_dir=sf_smoke, tables=load_tables(spark, sf_smoke)
+    )
+    for t, df in ctx.tables.items():
+        assert E._whole_table(df)[1], t
+    builds = [(t, lambda t=t: E.table_profile(ctx, t)) for t in ctx.tables]
+    for name, build in builds + [("label_counts", lambda: E.label_counts(ctx))]:
+        j0, s0 = _last_job(spark), _shuffle_written(spark)
+        build()
+        assert (_last_job(spark) - j0, _shuffle_written(spark) - s0) == (1, 0), name
+
+
+def test_point_in_time_counts_leaks_in_one_aggregate(spark, monkeypatch):
+    """The leak count is a count_if over the as-of join: a label with
+    no earlier click (NULL fts) is no leak, a later click is one."""
+    import datetime as dt
+
+    from ai_ready_data_framework_spark.checks import engine as E
+
+    ts = dt.datetime
+    events = spark.createDataFrame(
+        [
+            (1, 1, ts(2024, 1, 1), "click"),
+            (2, 1, ts(2024, 1, 2), "purchase"),
+            (3, 2, ts(2024, 1, 1), "purchase"),
+            (4, 2, ts(2024, 1, 3), "click"),
+            (5, 3, ts(2024, 1, 5), "purchase"),
+        ],
+        "event_id bigint, user_id int, ts timestamp, event_type string",
+    )
+    ctx = E.CheckContext(spark=spark, sf_dir="", tables={"events": events})
+    # users 2 and 3 have no click before their purchase
+    assert E.point_in_time_correctness(ctx) == 1.0
+
+    def leaky_join(labels, features, key, label_ts, feature_ts, feature_cols):
+        # every click of the user, the later one included
+        return labels.join(features, key, "left")
+
+    monkeypatch.setattr(E, "as_of_join", leaky_join)
+    # user 1 is clean, user 2's later click leaks, user 3 has no click
+    assert E.point_in_time_correctness(ctx) == 2 / 3
 
 
 def test_run_assessment_leaves_no_scratch_dir(spark, sf_smoke):
@@ -576,22 +673,15 @@ def test_clustered_tables_are_sorted_copies_without_shuffle(spark, sf_smoke):
     ctx = E.CheckContext(
         spark=spark, sf_dir=sf_smoke, tables=load_tables(spark, sf_smoke)
     )
-    jsc = spark.sparkContext._jsc.sc()
-
-    def shuffle_written() -> int:
-        jsc.listenerBus().waitUntilEmpty()
-        execs = jsc.statusStore().executorList(True)
-        return sum(execs.apply(i).totalShuffleWrite() for i in range(execs.size()))
-
     try:
-        before = shuffle_written()
+        before = _shuffle_written(spark)
         assert E.clustered_tables(ctx) == {
             "orders",
             "lineitem",
             "events",
             "documents",
         }
-        assert shuffle_written() == before
+        assert _shuffle_written(spark) == before
         for t in E.LARGE_TABLES:
             path = ctx.scratch(f"cluster/{t}")
             src = ctx.tables[t]
