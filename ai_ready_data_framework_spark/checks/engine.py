@@ -21,7 +21,8 @@ run and read by every check that needs it. A table that scans as exactly
 one split is profiled in one task: the frame is coalesced to its one
 partition (no data moves) and the plan needs no exchange; a table of
 several splits shuffles only its keys (``_profile_aggs``). The
-embeddings label counts follow the same rule. The remaining data-level
+embeddings label counts, the hourly feature aggregate and the
+k-anonymity group count follow the same rule. The remaining data-level
 checks are their own aggregate queries. At 100 TB these are plain scans
 with conditional aggregates; nothing collects row-level data to the
 driver.
@@ -31,9 +32,13 @@ Two materializations are shared artifacts with their own builders:
 splits on the clustering key, written without an exchange, so the copy
 scales with the scan, not with the largest key range) and
 ``serving_store`` (the key-bucketed customer store the serving probes
-read). ``run_assessment`` submits each one a selected check reads, then
-the profiles, to its pool ahead of the checks; the serial tail of
-performance probes then runs only timed work.
+read, also written without an exchange). ``run_assessment`` submits
+each one a selected check reads, then the profiles, to its pool ahead
+of the checks; the serial tail of performance probes then runs only
+timed work. The feature store of ``feature_materialization_coverage``
+is written without an exchange as well: the offline aggregate in one
+task when ``events`` is one split, and the online copy sorted on its
+key within the offline files.
 """
 
 from __future__ import annotations
@@ -191,7 +196,14 @@ def _whole_table(df: DataFrame) -> tuple[DataFrame, bool]:
     SinglePartition, which satisfies every distribution an aggregate
     requires, so the aggregate plans no exchange and runs as one task
     of one job. A scan of no splits stays as it is: there the final
-    exchange is what yields a global aggregate's one row."""
+    exchange is what yields a global aggregate's one row.
+
+    Used only by the whole-table aggregates: ``table_profile``,
+    ``label_counts``, the hourly feature aggregate of
+    ``feature_materialization_coverage`` and
+    ``feature_refresh_compliance``, and ``anonymization_effectiveness``.
+    Coalescing every table read would also take the reduce-side
+    parallelism from the checks' joins and grouped aggregates."""
     if df.rdd.getNumPartitions() == 1:
         return df.coalesce(1), True
     return df, False
@@ -394,7 +406,6 @@ def search_optimization(ctx: CheckContext) -> float:
             .agg(F.collect_set("doc_id").alias("postings"))
         )
         inv.count()  # materialize
-        ctx.artifacts["inverted_index"] = inv
         return {"documents"}
 
     indexed: set[str] = ctx.artifact("indexed_assets", build)  # type: ignore[assignment]
@@ -408,14 +419,19 @@ SERVING_PROBE_KEYS = 20
 def serving_store(ctx: CheckContext) -> str:
     """The path of customer written as a key-bucketed serving store:
     partitioned by __kb = c_custkey % SERVING_KEY_BUCKETS (plain modulo,
-    so a probe computes its bucket driver-side)."""
+    so a probe computes its bucket driver-side).
+
+    The write plans no exchange: ``partitionBy`` sorts each scan task's
+    rows on __kb locally, so every task writes at most one file per
+    ``__kb=k`` directory and a probe still prunes to one directory.
+    A bucket holds at most one file per split of customer, an entity
+    table that grows sublinearly."""
 
     def build() -> str:
         d = ctx.scratch("serving_store")
         (
             ctx.table("customer")
             .withColumn("__kb", F.col("c_custkey") % SERVING_KEY_BUCKETS)
-            .repartition(SERVING_KEY_BUCKETS, "__kb")
             .write.mode("overwrite")
             .partitionBy("__kb")
             .parquet(d)
@@ -482,8 +498,15 @@ def embedding_coverage(ctx: CheckContext) -> float:
 
 @check("feature_materialization_coverage", "consumable", "serving,training", "M", ":58-60")
 def feature_materialization_coverage(ctx: CheckContext) -> float:
-    """Features materialized offline (columnar) AND online
-    (key-partitioned compact) — engine materializes both for real."""
+    """Features materialized offline (columnar) AND online (sorted on
+    the entity key) — engine materializes both for real, with no
+    exchange when ``events`` scans as one split.
+
+    The offline aggregate runs over ``_whole_table(events)``: one task
+    for a one-split table, the keyed exchange for several splits. The
+    online copy is the offline files sorted within their splits on
+    ``user_id``: a key-sorted file gives a reader min/max pruning on
+    the key, which a hash-partitioned one does not."""
 
     def build() -> set[str]:
         from ai_ready_data_framework_spark.streaming.parity import (
@@ -491,14 +514,15 @@ def feature_materialization_coverage(ctx: CheckContext) -> float:
         )
 
         d = ctx.scratch("features")
-        # offline: columnar, time-partitioned
-        hourly_event_features(ctx.table("events")).write.mode("overwrite").parquet(
+        events, _ = _whole_table(ctx.table("events"))
+        # offline: columnar, one row per (hour, user)
+        hourly_event_features(events).write.mode("overwrite").parquet(
             f"{d}/hourly_features"
         )
-        # online: key-bucketed compact layout for point lookup, copied
-        # from the offline files so the aggregate runs once
-        ctx.spark.read.parquet(f"{d}/hourly_features").repartition(
-            8, "user_id"
+        # online: key-sorted layout for point lookup, copied from the
+        # offline files so the aggregate runs once
+        ctx.spark.read.parquet(f"{d}/hourly_features").sortWithinPartitions(
+            "user_id"
         ).write.mode("overwrite").parquet(f"{d}/hourly_features_online")
         return {"hourly_features", "hourly_features_online"}
 
@@ -567,8 +591,8 @@ def batch_throughput_sufficiency(ctx: CheckContext) -> float:
 
 @check("point_lookup_availability", "consumable", "serving", "M", ":78-80")
 def point_lookup_availability(ctx: CheckContext) -> float:
-    """Entities reachable via the key-partitioned online layout — the
-    online feature materialization plus key-bucketed entity stores."""
+    """Entities reachable via a point-lookup layout — the key-sorted
+    online feature copy plus key-bucketed entity stores."""
     entity_tables = [t for t, m in R.ASSETS.items() if m["kind"] == "entity"]
     # engine serves entities from on-disk key-bucketed stores
     # (serving_store writes customer's); count entities with a declared
@@ -714,11 +738,13 @@ def training_serving_parity(ctx: CheckContext) -> float:
 def feature_refresh_compliance(ctx: CheckContext) -> float:
     """Served features refreshed within staleness tolerance: latest
     feature window per user vs the event-time anchor (the events
-    profile's max_ts)."""
+    profile's max_ts). One task with no exchange when events scans as one
+    split."""
     from ai_ready_data_framework_spark.streaming.parity import hourly_event_features
 
     anchor_us = F.unix_micros(F.lit(table_profile(ctx, "events").max_ts))
-    feats = hourly_event_features(ctx.table("events"))
+    events, _ = _whole_table(ctx.table("events"))
+    feats = hourly_event_features(events)
     per_user = feats.groupBy("user_id").agg(F.max("window_start_us").alias("last_us"))
     tol_us = R.FEATURE_STALENESS_HOURS * 3600 * 1_000_000
     return _scalar(
@@ -1021,7 +1047,9 @@ def retention_policy(ctx: CheckContext) -> float:
 
 @check("anonymization_effectiveness", "compliant", "serving,training", "D", ":201-203")
 def anonymization_effectiveness(ctx: CheckContext) -> float:
-    docs = ctx.table("documents")
+    """k-anonymity: the smallest (QUASI_IDENTIFIERS) group of documents
+    against KANON_K, grouped in one task when documents is one split."""
+    docs, _ = _whole_table(ctx.table("documents"))
     min_group = (
         docs.groupBy(*R.QUASI_IDENTIFIERS)
         .count()

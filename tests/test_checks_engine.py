@@ -62,6 +62,19 @@ def _shuffle_written(spark) -> int:
     return sum(execs.apply(i).totalShuffleWrite() for i in range(execs.size()))
 
 
+def _sorted_on(path: str, key: list[str]) -> bool:
+    """Whether the Parquet file at ``path`` is sorted ascending on
+    ``key``, NULLs first (Spark's ascending order)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(path, columns=key)
+    order = pc.sort_indices(
+        tbl, sort_keys=[(k, "ascending") for k in key], null_placement="at_start"
+    )
+    return tbl.take(order).equals(tbl)
+
+
 def test_all_48_checks_present():
     assert len(CHECKS) == 48
     by_factor: dict[str, int] = {}
@@ -267,7 +280,8 @@ def _micro_product(spark, root, empty: str, n_files: int = 1) -> dict:
     events has a NULL and a duplicated PK (and a NULL ts), orders an
     out-of-range total, documents a NULL in not_null ``text``,
     embeddings a duplicated PK, a NULL label and a document without a
-    vector. The temporal table ``empty`` is written with no rows. The
+    vector. documents carries both quasi-identifiers (lang, source).
+    The temporal table ``empty`` is written with no rows. The
     label shares are dyadic, so the total variation is exact in any
     summation order. Each table is ``n_files`` Parquet files, its rows
     dealt round-robin (a file may hold none)."""
@@ -308,8 +322,8 @@ def _micro_product(spark, root, empty: str, n_files: int = 1) -> dict:
             "event_id bigint, ts timestamp, user_id int, value double",
         ),
         "documents": (
-            [(1, "x", "en"), (2, None, "fr"), (3, "z", "en")],
-            "doc_id bigint, text string, lang string",
+            [(1, "x", "en", "web"), (2, None, "fr", "web"), (3, "z", "en", "web")],
+            "doc_id bigint, text string, lang string, source string",
         ),
         "embeddings": (
             list(
@@ -331,8 +345,9 @@ def _micro_product(spark, root, empty: str, n_files: int = 1) -> dict:
 
 
 def _parent_formulas(T: dict) -> dict:
-    """Each profile-served check computed the way it was before the
-    profiles: its own scans, one per fact."""
+    """Each profile-served check, and the k-anonymity check, computed
+    the way it was before the profiles and the one-split rule: its own
+    scans, one per fact, none coalesced."""
     from datetime import timedelta
 
     from ai_ready_data_framework_spark.checks import registries as R
@@ -438,6 +453,10 @@ def _parent_formulas(T: dict) -> dict:
             )
         )
     )
+    min_group = (
+        docs.groupBy(*R.QUASI_IDENTIFIERS).count().agg(F.min("count")).first()[0]
+    )
+    out["anonymization_effectiveness"] = min(1.0, float(min_group) / R.KANON_K)
     return out
 
 
@@ -469,7 +488,10 @@ def test_profile_checks_keep_exact_semantics(spark, tmp_path, empty, n_files):
             assert E._whole_table(df)[1] == (n_files == 1), t
         expected = _parent_formulas(tables)
         ctx = E.CheckContext(spark=spark, sf_dir=str(tmp_path), tables=tables)
-        got = {k: getattr(E, k)(ctx) for k in PROFILE_SERVED}
+        got = {
+            k: getattr(E, k)(ctx)
+            for k in PROFILE_SERVED + ("anonymization_effectiveness",)
+        }
     finally:
         spark.conf.set(cost, old_cost)
     assert got == expected
@@ -479,6 +501,8 @@ def test_profile_checks_keep_exact_semantics(spark, tmp_path, empty, n_files):
     assert got["data_freshness"] == 2 / 3
     assert got["retention_policy"] == 2 / 3
     assert got["demographic_representation"] == 0.875
+    # (fr, web) is a group of one
+    assert got["anonymization_effectiveness"] == 1 / 5
     if empty == "events":
         # an empty log: avg over no rows is NULL -> 0.0, not _frac's 1.0
         assert got["agent_attribution"] == 0.0
@@ -520,9 +544,10 @@ def test_profile_only_checks_run_no_spark_job(spark, sf_smoke):
 
 
 def test_one_split_aggregates_run_as_one_job_without_shuffle(spark, sf_smoke):
-    """Every fixture table scans as one split, so its profile, and
-    label_counts, each run as one Spark job that writes no shuffle
-    bytes."""
+    """Every fixture table scans as one split, so its profile,
+    label_counts, and (once the profiles exist) the feature-refresh and
+    k-anonymity checks each run as one Spark job that writes no
+    shuffle bytes."""
     from ai_ready_data_framework_spark.checks import engine as E
     from ai_ready_data_framework_spark.io import load_tables
 
@@ -532,7 +557,13 @@ def test_one_split_aggregates_run_as_one_job_without_shuffle(spark, sf_smoke):
     for t, df in ctx.tables.items():
         assert E._whole_table(df)[1], t
     builds = [(t, lambda t=t: E.table_profile(ctx, t)) for t in ctx.tables]
-    for name, build in builds + [("label_counts", lambda: E.label_counts(ctx))]:
+    checks = [
+        (key, lambda key=key: getattr(E, key)(ctx))
+        for key in ("feature_refresh_compliance", "anonymization_effectiveness")
+    ]
+    for name, build in (
+        builds + [("label_counts", lambda: E.label_counts(ctx))] + checks
+    ):
         j0, s0 = _last_job(spark), _shuffle_written(spark)
         build()
         assert (_last_job(spark) - j0, _shuffle_written(spark) - s0) == (1, 0), name
@@ -663,9 +694,6 @@ def test_clustered_tables_are_sorted_copies_without_shuffle(spark, sf_smoke):
     shuffle bytes."""
     import glob
 
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
     from ai_ready_data_framework_spark.checks import engine as E
     from ai_ready_data_framework_spark.checks import registries as R
     from ai_ready_data_framework_spark.io import load_tables
@@ -693,13 +721,80 @@ def test_clustered_tables_are_sorted_copies_without_shuffle(spark, sf_smoke):
             files = glob.glob(f"{path}/*.parquet")
             assert files
             for f in files:
-                tbl = pq.read_table(f, columns=key)
-                order = pc.sort_indices(
-                    tbl,
-                    sort_keys=[(k, "ascending") for k in key],
-                    null_placement="at_start",
-                )
-                assert tbl.take(order).equals(tbl), (t, f)
+                assert _sorted_on(f, key), (t, f)
+    finally:
+        ctx.close()
+
+
+def test_materializations_write_without_shuffle(spark, sf_smoke):
+    """The feature store and the serving store are written with no
+    exchange. The offline features equal the hourly aggregate over the
+    uncoalesced events, the online copy equals the offline files with
+    every file sorted on user_id, and the serving store holds exactly
+    customer's rows, each under its own key bucket."""
+    import glob
+
+    from ai_ready_data_framework_spark.checks import engine as E
+    from ai_ready_data_framework_spark.io import load_tables
+    from ai_ready_data_framework_spark.streaming.parity import hourly_event_features
+
+    ctx = E.CheckContext(
+        spark=spark, sf_dir=sf_smoke, tables=load_tables(spark, sf_smoke)
+    )
+
+    def same_rows(a, b) -> bool:
+        return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+    try:
+        before = _shuffle_written(spark)
+        assert E.feature_materialization_coverage(ctx) == 1.0
+        store = E.serving_store(ctx)
+        assert _shuffle_written(spark) == before
+        d = ctx.scratch("features")
+        offline = spark.read.parquet(f"{d}/hourly_features")
+        expected = hourly_event_features(ctx.table("events"))
+        assert offline.count() == expected.count() > 0
+        assert same_rows(offline, expected)
+        online = spark.read.parquet(f"{d}/hourly_features_online")
+        assert same_rows(online, offline)
+        files = glob.glob(f"{d}/hourly_features_online/*.parquet")
+        assert files
+        for f in files:
+            assert _sorted_on(f, ["user_id"]), f
+        served = spark.read.parquet(store)
+        customer = ctx.table("customer")
+        assert same_rows(served.select(*customer.columns), customer)
+        assert served.count() == customer.count() > 0
+        misplaced = served.filter(
+            F.col("c_custkey") % E.SERVING_KEY_BUCKETS != F.col("__kb")
+        )
+        assert misplaced.count() == 0
+    finally:
+        ctx.close()
+
+
+def test_serving_probes_run_one_task_each(spark, sf_smoke):
+    """Every timed serving probe prunes to one ``__kb`` directory and
+    reads it as one split: one job of one task per probe. The timed
+    probes are the check's last SERVING_PROBE_KEYS jobs."""
+    from ai_ready_data_framework_spark.checks import engine as E
+    from ai_ready_data_framework_spark.io import load_tables
+
+    ctx = E.CheckContext(
+        spark=spark, sf_dir=sf_smoke, tables=load_tables(spark, sf_smoke)
+    )
+    tracker = spark.sparkContext.statusTracker()
+    try:
+        E.serving_store(ctx)
+        j0 = _last_job(spark)
+        E.serving_latency_compliance(ctx)
+        last = _last_job(spark)
+        assert last - j0 > E.SERVING_PROBE_KEYS
+        jobs = range(last - E.SERVING_PROBE_KEYS + 1, last + 1)
+        for j in jobs:
+            stages = tracker.getJobInfo(j).stageIds
+            assert len(stages) == 1, j
+            assert tracker.getStageInfo(stages[0]).numTasks == 1, j
     finally:
         ctx.close()
 
