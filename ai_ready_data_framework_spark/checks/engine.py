@@ -32,7 +32,8 @@ Two materializations are shared artifacts with their own builders:
 splits on the clustering key, written without an exchange, so the copy
 scales with the scan, not with the largest key range) and
 ``serving_store`` (the key-bucketed customer store the serving probes
-read, also written without an exchange). ``run_assessment`` submits
+read, one file per bucket, written without an exchange when customer
+is one split). ``run_assessment`` submits
 each one a selected check reads, then the profiles, to its pool ahead
 of the checks; the serial tail of performance probes then runs only
 timed work. The feature store of ``feature_materialization_coverage``
@@ -201,9 +202,11 @@ def _whole_table(df: DataFrame) -> tuple[DataFrame, bool]:
     Used only by the whole-table aggregates: ``table_profile``,
     ``label_counts``, the hourly feature aggregate of
     ``feature_materialization_coverage`` and
-    ``feature_refresh_compliance``, and ``anonymization_effectiveness``.
-    Coalescing every table read would also take the reduce-side
-    parallelism from the checks' joins and grouped aggregates."""
+    ``feature_refresh_compliance``, and ``anonymization_effectiveness``;
+    and by ``serving_store``, which skips its bucket exchange for a
+    one-split customer. Coalescing every table read would also take the
+    reduce-side parallelism from the checks' joins and grouped
+    aggregates."""
     if df.rdd.getNumPartitions() == 1:
         return df.coalesce(1), True
     return df, False
@@ -421,21 +424,21 @@ def serving_store(ctx: CheckContext) -> str:
     partitioned by __kb = c_custkey % SERVING_KEY_BUCKETS (plain modulo,
     so a probe computes its bucket driver-side).
 
-    The write plans no exchange: ``partitionBy`` sorts each scan task's
-    rows on __kb locally, so every task writes at most one file per
-    ``__kb=k`` directory and a probe still prunes to one directory.
-    A bucket holds at most one file per split of customer, an entity
-    table that grows sublinearly."""
+    Every ``__kb=k`` directory holds one file, so a probe reads one
+    split. ``partitionBy`` sorts each write task's rows on __kb and
+    writes one file per bucket it meets: a one-split customer is
+    written by its one scan task with no exchange, while several splits
+    (each spanning every bucket) are first gathered into one task per
+    bucket. Without that exchange each of N splits would leave a file
+    in every bucket, and every probe would run N tasks."""
 
     def build() -> str:
         d = ctx.scratch("serving_store")
-        (
-            ctx.table("customer")
-            .withColumn("__kb", F.col("c_custkey") % SERVING_KEY_BUCKETS)
-            .write.mode("overwrite")
-            .partitionBy("__kb")
-            .parquet(d)
-        )
+        customer, one_split = _whole_table(ctx.table("customer"))
+        keyed = customer.withColumn("__kb", F.col("c_custkey") % SERVING_KEY_BUCKETS)
+        if not one_split:
+            keyed = keyed.repartition(SERVING_KEY_BUCKETS, "__kb")
+        keyed.write.mode("overwrite").partitionBy("__kb").parquet(d)
         return d
 
     return ctx.artifact("serving_store_path", build)  # type: ignore[return-value]
@@ -504,9 +507,9 @@ def feature_materialization_coverage(ctx: CheckContext) -> float:
 
     The offline aggregate runs over ``_whole_table(events)``: one task
     for a one-split table, the keyed exchange for several splits. The
-    online copy is the offline files sorted within their splits on
-    ``user_id``: a key-sorted file gives a reader min/max pruning on
-    the key, which a hash-partitioned one does not."""
+    online copy is the offline files, each sorted on ``user_id``.
+    Nothing in the package reads the written files: this check and
+    ``point_lookup_availability`` score the registry names."""
 
     def build() -> set[str]:
         from ai_ready_data_framework_spark.streaming.parity import (
@@ -519,8 +522,8 @@ def feature_materialization_coverage(ctx: CheckContext) -> float:
         hourly_event_features(events).write.mode("overwrite").parquet(
             f"{d}/hourly_features"
         )
-        # online: key-sorted layout for point lookup, copied from the
-        # offline files so the aggregate runs once
+        # online: copied from the offline files so the aggregate runs
+        # once, each file sorted on the entity key
         ctx.spark.read.parquet(f"{d}/hourly_features").sortWithinPartitions(
             "user_id"
         ).write.mode("overwrite").parquet(f"{d}/hourly_features_online")
@@ -591,8 +594,9 @@ def batch_throughput_sufficiency(ctx: CheckContext) -> float:
 
 @check("point_lookup_availability", "consumable", "serving", "M", ":78-80")
 def point_lookup_availability(ctx: CheckContext) -> float:
-    """Entities reachable via a point-lookup layout — the key-sorted
-    online feature copy plus key-bucketed entity stores."""
+    """Entity tables reachable by point lookup: those with a declared
+    primary key, scored from the registries, not from a written layout
+    (``serving_store`` is customer's key-bucketed store)."""
     entity_tables = [t for t, m in R.ASSETS.items() if m["kind"] == "entity"]
     # engine serves entities from on-disk key-bucketed stores
     # (serving_store writes customer's); count entities with a declared

@@ -773,19 +773,41 @@ def test_materializations_write_without_shuffle(spark, sf_smoke):
         ctx.close()
 
 
-def test_serving_probes_run_one_task_each(spark, sf_smoke):
-    """Every timed serving probe prunes to one ``__kb`` directory and
-    reads it as one split: one job of one task per probe. The timed
-    probes are the check's last SERVING_PROBE_KEYS jobs."""
+@pytest.mark.parametrize("n_files", [1, 3], ids=["one_split", "three_files"])
+def test_serving_probes_run_one_task_each(spark, sf_smoke, tmp_path, n_files):
+    """Every ``__kb`` directory of the serving store holds one file, so
+    every timed probe prunes to one directory and reads it as one split:
+    one job of one task per probe. The timed probes are the check's
+    last SERVING_PROBE_KEYS jobs. With three files, each a contiguous
+    c_custkey range spanning every bucket, the three scan tasks would
+    each leave a file in every bucket unless the write gathers each
+    bucket into one task."""
+    import glob
+
     from ai_ready_data_framework_spark.checks import engine as E
     from ai_ready_data_framework_spark.io import load_tables
 
-    ctx = E.CheckContext(
-        spark=spark, sf_dir=sf_smoke, tables=load_tables(spark, sf_smoke)
-    )
+    tables = load_tables(spark, sf_smoke)
+    ctx = E.CheckContext(spark=spark, sf_dir=sf_smoke, tables=tables)
     tracker = spark.sparkContext.statusTracker()
+    # every file its own split, whatever the session's core count
+    cost = "spark.sql.files.openCostInBytes"
+    old_cost = spark.conf.get(cost)
+    spark.conf.set(cost, str(128 << 20))
     try:
-        E.serving_store(ctx)
+        if n_files > 1:
+            rows = tables["customer"].orderBy("c_custkey").collect()
+            for i in range(n_files):
+                lo, hi = len(rows) * i // n_files, len(rows) * (i + 1) // n_files
+                part = spark.createDataFrame(rows[lo:hi], tables["customer"].schema)
+                part.coalesce(1).write.mode("append").parquet(f"{tmp_path}/customer")
+            tables["customer"] = spark.read.parquet(f"{tmp_path}/customer")
+        assert ctx.table("customer").rdd.getNumPartitions() == n_files
+        store = E.serving_store(ctx)
+        buckets = glob.glob(f"{store}/__kb=*")
+        assert len(buckets) == E.SERVING_KEY_BUCKETS
+        for b in buckets:
+            assert len(glob.glob(f"{b}/*.parquet")) == 1, b
         j0 = _last_job(spark)
         E.serving_latency_compliance(ctx)
         last = _last_job(spark)
@@ -796,6 +818,7 @@ def test_serving_probes_run_one_task_each(spark, sf_smoke):
             assert len(stages) == 1, j
             assert tracker.getStageInfo(stages[0]).numTasks == 1, j
     finally:
+        spark.conf.set(cost, old_cost)
         ctx.close()
 
 
