@@ -570,9 +570,9 @@ def vector_index_coverage(ctx: CheckContext) -> float:
 def chunk_readiness(ctx: CheckContext) -> float:
     """Documents pre-chunked to context-window size: fraction of chunks
     within the char budget (50 tokens x avg word len → 400 chars)."""
-    from ai_ready_data_framework_spark.registry import QUERIES
+    from ai_ready_data_framework_spark.operators.ai import q_chunk
 
-    chunks = QUERIES["q_chunk"](ctx.spark, ctx.sf_dir)
+    chunks = q_chunk(ctx.spark, ctx.sf_dir)
     return _scalar(
         chunks.agg(F.avg(F.when(F.length("chunk") <= 400, 1.0).otherwise(0.0)))
     )
@@ -920,9 +920,9 @@ def field_masking(ctx: CheckContext) -> float:
     every registered PII column — enforcement by construction, scored
     value-for-value against the raw table."""
     from ai_ready_data_framework_spark.checks.enforce import read_enforced
-    from ai_ready_data_framework_spark.registry import QUERIES
+    from ai_ready_data_framework_spark.operators.ai import q_mask_pii
 
-    masked = QUERIES["q_mask_pii"](ctx.spark, ctx.sf_dir)
+    masked = q_mask_pii(ctx.spark, ctx.sf_dir)
     docs = ctx.table("documents")
     # the round-6 masking union is long-format: score the column_hash
     # leg over the text field (masked value must differ from raw)
@@ -1085,7 +1085,7 @@ def run_assessment(
     requirements.yaml:4) and return the canonical score table."""
     from ai_ready_data_framework_spark import registry
 
-    registry.load_all()  # checks reuse declared queries (chunk, mask, ...)
+    registry.load_all()  # transformation_documentation reads the registry
     ctx = CheckContext(spark=spark, sf_dir=sf_dir, run_streaming=run_streaming)
     ctx.tables = load_tables(spark, sf_dir)
     selected = [

@@ -1023,8 +1023,7 @@ def q_embed_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
       column).
 
     Both legs are deliberately quadratic CORRECTNESS oracles for their
-    approximate production counterparts — bench-excluded by design
-    (see bench.py's exclusion notes)."""
+    approximate production counterparts, not operators to benchmark."""
     emb = embed_dup_pairs(spark, sf_dir).select(
         F.lit("embed_cosine").alias("pair_kind"),
         "id_a",
@@ -3577,9 +3576,7 @@ def q_embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     |q| ≲ 2e6, so int64 would saturate near 4e12 rows/position), and
     the mean derives by a fixed cast/divide chain — the pytest oracle
     now compares EXACT equality, not a 1.5e-4 band. Quantization bias
-    is ≤ 1e-6 per element, invisible at the round-4 output. Fold
-    ELIGIBLE: first in ROWS_ONLY_TAIL_ORDER for a driver window
-    widening."""
+    is ≤ 1e-6 per element, invisible at the round-4 output."""
     emb = load_table(spark, sf_dir, "embeddings")
     micro_q = F.floor(F.col("v").cast("double") * 1000000.0).cast("decimal(38,0)")
     per_pos = (

@@ -19,9 +19,8 @@ corpus-sized shuffle in any of them is one map-side-combinable hash
 aggregate; everything downstream operates on vocabulary-, source-, or
 cluster-sized aggregates that broadcast.
 
-All queries register rows-only (the driver's 50 graded slots are
-full — registry.ROWS_ONLY_TAIL_ORDER); the SQL-expressible ones run
-DuckDB oracles in tests/test_corpus_ops.py.
+All queries register rows-only; the SQL-expressible ones run DuckDB
+oracles in tests/test_corpus_ops.py.
 """
 
 from __future__ import annotations

@@ -15,8 +15,7 @@ tests/test_plans.py). The heavy-hitters vocabulary profile is the one
 shuffling query (hash agg on term — map-side combinable, result is
 vocabulary-sized, orders of magnitude smaller than the corpus).
 
-All queries register rows-only (the driver's 50 graded slots are full
-— registry.ROWS_ONLY_TAIL_ORDER); their DuckDB oracles run in
+All queries register rows-only; their DuckDB oracles run in
 tests/test_quality_ops.py.
 """
 

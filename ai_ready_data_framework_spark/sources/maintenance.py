@@ -492,56 +492,6 @@ def assign_cells(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def append_ivf_index(
-    new_vectors: DataFrame,
-    centroids: DataFrame,
-    table_name: str,
-    n_buckets: int = IVF_INDEX_BUCKETS,
-) -> None:
-    """Fold an ingested batch into the persisted IVF index — the
-    incremental-maintenance half: assign
-    cells from the SAVED centroid table (no refit — the quantizer is
-    frozen at build time, the standard IVF ingestion contract;
-    ``ivf_refit_needed`` is the drift gate that says when to re-fit),
-    append with the SAME bucket spec so every appended file set stays
-    aligned to the cell buckets and the probe join's exchange-free
-    property survives ingestion after ingestion. Each append adds one
-    file set per bucket; ``compact_ivf_index`` periodically folds them
-    back to one. NOT replay-safe (an append retried after a crash
-    doubles the batch) — an always-on ingestion loop should use
-    streaming/ivf.py instead, which lands epoch-keyed OVERWRITE deltas
-    and compacts them into this bucketed base."""
-    (
-        assign_cells(new_vectors, centroids)
-        .write.mode("append")
-        .bucketBy(n_buckets, *IVF_INDEX.bucket_cols)
-        .sortBy(*IVF_INDEX.bucket_cols)
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-
-
-def compact_ivf_index(
-    spark: SparkSession,
-    table_name: str,
-    path: str,
-    n_buckets: int = IVF_INDEX_BUCKETS,
-) -> None:
-    """Fold all appended generations back into single-file-set cell
-    buckets: after N ingestion cycles ``append_ivf_index`` has left N
-    file sets per bucket, so every probe reads N files per cell; one
-    rewrite through the staged generation publish restores one sorted
-    file per bucket and keeps probe latency flat under steady-state
-    ingestion. The input is read from the FILES, not the catalog
-    table: the bucketed scan reports HashPartitioning(cell), Catalyst
-    then elides the repartition while executing the scan
-    file-per-file, and the "compacted" output kept one file per input
-    file (measured: 40 in, 39 out). The centroid side table is
-    untouched (compaction never refits)."""
-    vecs = index_files(spark, table_name)
-    publish_ivf_generation(spark, vecs, table_name, path, n_buckets)
-
-
 # PSI >= 0.2 is the conventional "significant population shift" bar
 # (the same threshold doctrine as q_drift_psi); below it the frozen
 # quantizer still matches the data it indexes.
@@ -554,13 +504,13 @@ def ivf_cell_psi(
 ) -> float:
     """Population-stability index of the CELL-OCCUPANCY distribution
     between the persisted index and an incoming batch (VERDICT r8 #3 —
-    the drift half of the append path's "re-fit when the distribution
+    the drift half of the ingest path's "re-fit when the distribution
     moved" promise, the q_drift_psi machinery applied to cell ids):
     PSI = Σ_c (p_batch_c − p_index_c) · ln(p_batch_c / p_index_c)
     over the centroid table's full cell universe, shares Laplace-
     smoothed so cells empty on one side stay finite. Inputs are any
     frames with a ``cell`` column (``index_view(spark, index)`` and
-    ``assign_cells(batch)`` — the assignment the append path computes
+    ``assign_cells(batch)`` — the assignment the ingest path computes
     anyway). Work shape: two map-side-combinable counts + a
     #cells-row join; the only driver materialization is one row."""
     from ai_ready_data_framework_spark.functions.fixedmath import (
@@ -615,11 +565,11 @@ def ivf_refit_needed(
 ) -> tuple[bool, float]:
     """(refit?, psi): True when the batch's cell-occupancy
     distribution has drifted past ``threshold`` from the index's —
-    the executable form of append_ivf_index's docstring promise
-    (freshness/change detection applied to the index itself,
-    requirements.yaml:91-93). Callers that get True should re-fit the
-    quantizer (ivf_fit_assign) and rebuild via write_ivf_index; False
-    means keep appending against the frozen centroids.
+    the executable form of the frozen-quantizer ingestion contract
+    (``streaming/ivf.py::ingest_epoch``; freshness/change detection
+    applied to the index itself, requirements.yaml:91-93). Callers that
+    get True should re-fit the quantizer (``refit_ivf_index``); False
+    means keep ingesting against the frozen centroids.
 
     Small-sample caveat: PSI's sampling noise scales like
     (n_cells − 1)/n_batch, so tiny batches trip the 0.2 bar on noise

@@ -1,8 +1,8 @@
 """Streaming IVF-index ingestion: micro-batches of new embeddings are
 assigned to cells from the SAVED centroid table, landed as epoch-keyed
 deltas, drift-checked against the index's cell-occupancy distribution,
-and periodically compacted back into the bucketed base — the always-on
-ingestion form of sources/maintenance.py's batch IVF path.
+and periodically compacted back into the bucketed base that
+sources/maintenance.py's ``write_ivf_index`` builds.
 
 Grounding: the reference's vector-index assets demand a MAINTAINED
 index under continuous ingestion (vector_index_coverage /
@@ -12,15 +12,14 @@ retrieval_recall_compliance, /root/reference/factors/requirements.yaml:66-68,
 one broadcast nested-loop over cells x batch rows — so steady-state
 cost scales with ingest rate, never index size.
 
-Replay safety: ``append_ivf_index`` (the batch helper) appends to the
-bucketed table, so a crashed-and-replayed epoch would DOUBLE its rows.
-This loop instead runs the shared epoch-delta lifecycle
-(streaming/lifecycle.py): each epoch lands as an idempotent OVERWRITE
-of ``delta_dir/epoch=N``, probes read base ∪ runs ∪ deltas (delta rows
-are not bucketed, so probes against them shuffle — the documented cost
-of recency, bounded by compaction cadence), and compaction folds them
-into a run or, once the runs reach the base's size, a new base —
-either way one file set per cell bucket.
+Replay safety: an epoch appended straight to the bucketed table would
+DOUBLE its rows when replayed after a crash. This loop instead runs the
+shared epoch-delta lifecycle (streaming/lifecycle.py): each epoch lands
+as an idempotent OVERWRITE of ``delta_dir/epoch=N``, probes read base ∪
+runs ∪ deltas (delta rows are not bucketed, so probes against them
+shuffle — the documented cost of recency, bounded by compaction
+cadence), and compaction folds them into a run or, once the runs reach
+the base's size, a new base — either way one file set per cell bucket.
 
 Refit signal: every epoch can evaluate ``ivf_refit_needed`` (PSI of
 cell occupancy, batch vs index) and append a one-row drift record to

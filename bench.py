@@ -1,175 +1,14 @@
-"""Benchmark harness: runs the headline declared queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints the FULL record line followed by a
-compact summary line (always < ~1.3 KB — the driver captures only the
-last ~2000 chars of stdout and parses the JSON found there):
-    {"metric": ..., "value": N, "unit": "sec", ..., "queries": {...}}
-Full per-query detail also lands in BENCH_DETAIL.json, which doubles
-as the sf-matched regression baseline for the next run.
+"""Measurement helpers shared by the benchmark (``perfbench/``).
 
-Each query is forced end-to-end with a noop sink (full execution, no
-driver-side collect bottleneck), timed after a warmup of the session.
-
-Each query records BOTH wall time and process-tree CPU time (VERDICT
-r8 #1): the regression guard flags on CPU ratio when the baseline has
-it, wall otherwise — CPU is load-immune, so a contended host can no
-longer flag untouched queries (the round-8 host-drift failure mode).
+``force`` executes a plan end-to-end into a noop sink (full execution,
+no driver-side collect). ``process_tree_cpu_snapshot`` and
+``process_tree_cpu_delta`` read the CPU time burned by this process and
+every descendant from ``/proc``.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import sys
-import time
-
-REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
-if REPO_ROOT not in sys.path:
-    sys.path.insert(0, REPO_ROOT)
-
-from ai_ready_data_framework_spark import registry
-from ai_ready_data_framework_spark.session import get_spark
-
-# Headline set: one per operator family; anything registered but not
-# listed here still runs under t2 correctness, just not in the bench.
-HEADLINE = [
-    "q_agg_group",
-    "q_agg_distinct",
-    "q_agg_rollup",
-    "q_agg_percentile",
-    "q_filter_pred",
-    "q_topk",
-    "q_join_inner",
-    "q_join_broadcast",
-    "q_join_left",
-    "q_join_range",
-    "q_window_rank",
-    "q_window_lag",
-    "q_window_running",
-    "q_json_extract",
-    "q_join_asof",
-    "q_sessionize",
-    "q_window_tumbling",
-    "q_dedup_exact",
-    "q_dedup_near",
-    "q_chunk",
-    "q_text_stats",
-    "q_vector_topk",
-    "q_vector_ann_ivf",
-    "q_text_quality",
-    "q_token_bpe",
-    "q_sample_stratified",
-    "q_contamination",
-    "q_profile",
-    "q_pivot",
-    # round-2 additions
-    "q_profile_approx",
-    "q_agg_percentile_approx",
-    "q_tfidf_topterms",
-    "q_pack_sequences",
-    "q_mix_weighted",
-    "q_cdc_apply",
-    "q_embed_centroids",
-    "q_quality_gopher",
-    "q_repetition",
-    "q_heavy_hitters",
-    "q_pii_redact",
-    "q_group_sample",
-    "q_funnel",
-    "q_ewma",
-    "q_mv_incremental",
-    "q_embed_quantize",
-    "q_bm25",
-    "q_hybrid_rrf",
-    "q_split_assign",
-    "q_anomaly_zscore",
-    "q_histogram",
-    "q_join_skew",
-    "q_time_rollup",
-    "q_perplexity",
-    "q_retention",
-    "q_dedup_latest",
-    "q_period_over_period",
-    # round-3 additions
-    "q_source_divergence",
-    "q_mix_temperature",
-    "q_token_entropy",
-    "q_cluster_assign",
-    "q_pipeline_e2e",
-    "q_corr_matrix",
-    "q_skew_profile",
-    "q_bpe_train",
-    "q_drift_psi",
-    "q_sample_quality",
-    "q_dedup_incremental",
-    "q_bpe_encode",
-    "q_drift_psi_value",
-    # round-4 additions: the tagged-union graded slots (their single
-    # legs stay listed above for per-leg regression tracking) + DSIR
-    "q_check_battery",
-    "q_histogram_bins",
-    "q_dsir_weights",
-    "q_dedup_semantic",
-    "q_dedup_lines",
-    "q_feature_backfill",
-    "q_quality_classifier",
-    "q_datacard",
-    "q_vector_ann_pq",
-    "q_split_leakage_safe",
-    "q_distinct_sketch",
-    "q_join_interval",
-    "q_mix_schedule",
-    "q_length_buckets",
-    "q_dp_counts",
-    "q_ht_estimate",
-    "q_cooccur_pmi",
-    "q_dedup_media",
-    # round-5 additions: the new hard-graded union slot + the
-    # normalized-form dedup stage
-    "q_key_history",
-    "q_dedup_normalized",
-    "q_multimodal_decode",
-    "q_mix_budget",
-    # round-6 additions: graded union slots that previously only ran
-    # through their standalone legs
-    "q_mask_pii",
-    "q_fingerprint",
-    # round-9 addition
-    "q_snapshot_diff",
-    # round-10 additions: the column-level twin (schema-version diff),
-    # the hashing-trick featurizer, and ExactSubstr span dedup
-    "q_schema_diff",
-    "q_vectorize_hash",
-    "q_dedup_spans",
-    "q_decontam_spans",
-    "q_quality_compress",
-    # q_retrieval_prep intentionally absent: the end-to-end serving
-    # audit pipeline (chunk -> vectorize -> IVF fit -> probe -> recall
-    # vs exact). Its component stages are each benched standalone
-    # (q_chunk via unions, q_vectorize_hash, q_vector_ann_ivf); the
-    # composition adds a KMeans fit + an exact-top-k audit pass over
-    # the 140k-chunk derived corpus (~10s at sf0.1) whose cost is the
-    # AUDIT's, not a representative operator's — the q_embed_dup
-    # exclusion rationale applied to the serving path.
-    # q_split_cluster_safe absent: it composes q_dedup_clusters (the
-    # iterative component closure, itself never benched — 37s at sf0.1
-    # is the closure's cost, not the split's ~0.2s projection).
-    # q_knn_graph and q_label_noise absent for q_embed_dup_lsh's
-    # reason: their candidates
-    # come from the same SRP bands, which on THIS random corpus cover
-    # ~2/3 of all pairs (~26s at sf0.1) — the documented
-    # corpus-adversarial case, not representative operator cost.
-    # q_embed_dup intentionally absent: it is the exact all-pairs
-    # (quadratic) oracle for the approx paths; benching it would
-    # headline a shape we tell users NOT to run at scale.
-    # q_embed_dup_lsh also absent: on THIS corpus the dup threshold
-    # sits barely above background cosine, so band candidates cover
-    # ~2/3 of all pairs (~15s at sf0.1) — the corpus-adversarial case
-    # its docstring documents, not representative operator cost.
-]
-
-
-BENCH_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
 
 
 def force(df) -> None:
@@ -178,30 +17,25 @@ def force(df) -> None:
 
 
 # ---------------------------------------------------------------------------
-# Per-query CPU time (VERDICT r8 #1): wall-clock regression flags are
-# load-dependent — the round-8 host-drift saga (a monotonic
-# 103.5->115.5s afternoon climb flagging a DIFFERENT untouched query
-# each run) showed the wall guard breaking down exactly when the
-# signal matters. CPU time is load-immune: a contended host stretches
-# wall while CPU stays put. In local[*] mode the ENTIRE engine — the
-# driver JVM (which is also every executor) and the Python UDF worker
-# daemons — runs as descendants of this benchmark process, so /proc
-# utime+stime deltas over the process tree between t0 and t1 ARE the
-# query's executor CPU time, with no SparkListener plumbing and no
-# metrics race (stage completion events can land after the job
-# returns; /proc reads are synchronous truth).
+# Process-tree CPU time. CPU time is load-immune where wall time is
+# not: a contended host stretches wall while CPU stays put. In local[*]
+# mode the ENTIRE engine — the driver JVM (which is also every
+# executor) and the Python UDF worker daemons — runs as descendants of
+# the measuring process, so /proc utime+stime deltas over the process
+# tree between t0 and t1 ARE the operation's executor CPU time, with no
+# SparkListener plumbing and no metrics race (stage completion events
+# can land after the job returns; /proc reads are synchronous truth).
 #
 # The delta is computed PER PID, not from tree totals: pyspark's
 # worker daemon ignores SIGCHLD, so exited python workers are
 # kernel-auto-reaped and their CPU time is DISCARDED — it never lands
 # in any parent's cutime. A tree-total delta therefore goes NEGATIVE
 # whenever idle workers from an earlier query time out mid-measurement
-# (observed: two queries at -8..-10s in the first r9 runs, a ~15s
-# worker cohort vanishing during an innocent query). Summing
-# (now - then) over pids PRESENT at the end keeps the delta exact for
-# survivors and new processes and loses only a dead worker's
-# in-interval burn — which is ~0, since a worker only exits because it
-# sat idle past its timeout.
+# (observed: -8..-10s on single queries when a ~15s worker cohort
+# vanished). Summing (now - then) over pids PRESENT at the end keeps
+# the delta exact for survivors and new processes and loses only a
+# dead worker's in-interval burn — which is ~0, since a worker only
+# exits because it sat idle past its timeout.
 # ---------------------------------------------------------------------------
 
 _CLK_TCK = os.sysconf("SC_CLK_TCK")
@@ -232,9 +66,7 @@ def process_tree_cpu_snapshot(
     children: dict[int, list[int]] = {}
     info: dict[int, tuple[int, int]] = {}
     if not os.path.isdir("/proc"):
-        # non-procfs host: no CPU column — deltas degrade to 0.0 and
-        # the guard's wall fallback takes over (cpu_now below the
-        # noise floor never flags)
+        # non-procfs host: no CPU reading — deltas degrade to 0.0
         return {}
     for entry in os.listdir("/proc"):
         if not entry.isdigit():
@@ -269,416 +101,3 @@ def process_tree_cpu_delta(
     nothing (their in-interval burn is unrecoverable and ~0 — see the
     module comment above)."""
     return sum(t - before.get(k, 0) for k, t in after.items()) / _CLK_TCK
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    # read BEFORE the session exists: JVM startup spins 32 threads for
-    # several seconds and alone pushes the 1-min loadavg to ~2.7 (r10,
-    # measured 0.26 at launch vs 2.74 after get_spark) — recording it
-    # after would brand every quiet run as loaded
-    load_start = [round(x, 2) for x in os.getloadavg()]
-    registry.load_all()
-    spark = get_spark(app_name="ai-ready-bench")
-
-    names = [n for n in HEADLINE if n in registry.QUERIES]
-    # warmup: JVM + codegen + parquet footer caches
-    force(registry.QUERIES["q_agg_group"](spark, sf_dir))
-
-    # Best-of-N timing: single-shot numbers charge whole-stage-codegen
-    # compilation and JIT warmup to whichever query touches a codepath
-    # first (measured: first touch of the minhash pipeline costs ~2x its
-    # steady state). Min over runs is the standard steady-state metric
-    # and is what a long-running cluster actually experiences.
-    per_query: dict[str, float] = {}
-    per_query_cpu: dict[str, float] = {}
-    for name in names:
-        best = float("inf")
-        best_cpu = float("inf")
-        for _ in range(BENCH_RUNS):
-            c0 = process_tree_cpu_snapshot()
-            t0 = time.perf_counter()
-            force(registry.QUERIES[name](spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
-            best_cpu = min(
-                best_cpu, process_tree_cpu_delta(c0, process_tree_cpu_snapshot())
-            )
-        per_query[name] = round(best, 3)
-        per_query_cpu[name] = round(best_cpu, 3)
-
-    total = round(sum(per_query.values()), 3)
-    out = {
-        "metric": "headline_queries_total_wall",
-        "value": total,
-        "unit": "sec",
-        "value_cpu": round(sum(per_query_cpu.values()), 3),
-        "queries": per_query,
-        "queries_cpu": per_query_cpu,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        # host load at start and completion (1/5/15-min): context for
-        # reading flags — CPU time is load-resistant but SMT/cache
-        # contention can still inflate it ~1.5x (measured r9); a
-        # record whose START load is >> 0 should be re-measured, not
-        # trusted (the end load includes the bench's own execution)
-        "loadavg_start": load_start,
-        "loadavg": [round(x, 2) for x in os.getloadavg()],
-    }
-    # Baseline must be read BEFORE overwriting BENCH_DETAIL.json below.
-    regressions = compare_to_previous(per_query, out["sf"], per_query_cpu)
-    if regressions is not None:
-        out["regressions_vs_prev"] = regressions
-
-    # The driver captures only the LAST ~2000 chars of stdout and parses
-    # the JSON line found there. With 87+ queries the full record is
-    # ~2.5 KB, which truncated the head of the line in round 4 and left
-    # the driver with parsed:null (VERDICT r4 gap #1). So: full detail
-    # goes to a file + an early stdout line (for humans/logs), and the
-    # FINAL line is a compact summary guaranteed to fit the tail window.
-    detail_path = os.path.join(REPO_ROOT, "BENCH_DETAIL.json")
-    persist_baseline(
-        out,
-        regressions,
-        detail_path,
-        force="--force-baseline" in sys.argv,
-    )
-    print(json.dumps(out))
-    print(json.dumps(build_compact(out, regressions)))
-
-
-def persist_baseline(
-    out: dict, regressions: dict | None, detail_path: str, force: bool
-) -> bool:
-    """Write the run record where it belongs: over the baseline when
-    ``baseline_write_decision`` allows it, else to the sibling
-    ``.candidate.json`` (the measurement is still recorded, just not
-    AS the baseline). Mutates ``out`` with the decision so the stdout
-    record carries it. Returns whether the baseline was replaced."""
-    stored = None
-    try:
-        with open(detail_path) as f:
-            stored = json.load(f)
-    except (OSError, json.JSONDecodeError):
-        stored = None
-    flagged_n = len((regressions or {}).get("flagged", {}))
-    write, reason = baseline_write_decision(out, stored, flagged_n, force)
-    out["baseline_written"] = write
-    if write:
-        with open(detail_path, "w") as f:
-            json.dump(out, f)
-    else:
-        out["baseline_kept_reason"] = reason
-        root, ext = os.path.splitext(detail_path)
-        with open(root + ".candidate" + ext, "w") as f:
-            json.dump(out, f)
-        print(
-            f"bench BASELINE GUARD: keeping stored BENCH_DETAIL.json ({reason});"
-            " full record written to BENCH_DETAIL.candidate.json —"
-            " rerun with --force-baseline to override",
-            file=sys.stderr,
-        )
-    return write
-
-
-# --- Baseline-overwrite guard (VERDICT r10 #1) -------------------------
-# Two consecutive rounds ended with a host-loaded run committed over the
-# quiet BENCH_DETAIL.json baseline (r9: working-tree slip; r10: commit
-# dd06 replaced the 87.8s/269.8-CPU zero-flag record with a 124.6s run
-# taken at loadavg 6.77), silently loosening the next round's per-query
-# regression guard by ~20-40%. Discipline failed twice, so the refusal
-# is now mechanical: main() keeps the stored baseline and writes the
-# measurement to BENCH_DETAIL.candidate.json instead whenever the run
-# is provably untrustworthy as a BASELINE (it is still a fine
-# measurement — the driver's stdout record is unaffected).
-BASELINE_MAX_LOAD1 = 1.0  # quiet records start at ~0.1; loaded at 1.8-6.8
-# 5-min average catches a recently-busy host whose 1-min figure has
-# already decayed (measured r11: load [0.9, 1.08, 3.33] at start still
-# produced a 2x-slow run — the box was cooling down, not quiet)
-BASELINE_MAX_LOAD5 = 1.0
-BASELINE_MAX_WALL_RATIO = 1.2  # materially slower than stored = suspect
-
-
-def baseline_write_decision(
-    out: dict, stored: dict | None, flagged_n: int, force: bool
-) -> tuple[bool, str]:
-    """Pure decision core (unit-tested): may this run replace the
-    committed BENCH_DETAIL.json baseline? Refuses when (a) the host
-    was loaded at bench start (1- OR 5-min average — a cooling-down
-    box fools the 1-min figure), (b) the run is at a different scale
-    factor than the stored baseline (a local sf0.01 iteration must not
-    destroy the committed sf0.1 record), or (c) total wall exceeds
-    1.2x the stored record — host drift usually, and even a genuine
-    mass regression must not silently LOOSEN the guard for the next
-    round (the flags still land in the run record either way; r10's
-    slip was a flagged-but-loaded run committed over the quiet
-    baseline). --force-baseline overrides all three. ``flagged_n``
-    rides along in the refusal reason so the candidate record explains
-    itself."""
-    if force:
-        return True, "forced"
-    load = (out.get("loadavg_start") or [0.0])[:2]
-    load1 = load[0]
-    load5 = load[1] if len(load) > 1 else 0.0
-    if load1 > BASELINE_MAX_LOAD1 or load5 > BASELINE_MAX_LOAD5:
-        return False, (
-            f"loadavg_start {load1}/{load5} (1m/5m) exceeds"
-            f" {BASELINE_MAX_LOAD1}/{BASELINE_MAX_LOAD5}"
-        )
-    if stored is None:
-        return True, "no stored baseline"
-    if stored.get("sf") is not None and stored.get("sf") != out.get("sf"):
-        return False, f"sf mismatch (stored {stored.get('sf')}, run {out.get('sf')})"
-    prev_wall = stored.get("value")
-    if prev_wall and out.get("value", 0.0) > BASELINE_MAX_WALL_RATIO * prev_wall:
-        return False, (
-            f"wall {out.get('value')}s > {BASELINE_MAX_WALL_RATIO}x stored"
-            f" {prev_wall}s ({flagged_n} flags) — requalify on a quiet box"
-        )
-    return True, "ok"
-
-
-COMPACT_BUDGET_CHARS = 1200  # hard cap, < the driver's ~2000-char tail
-# Sub-budget for the flagged-regression name list inside the compact
-# line (ADVICE r5): leaves headroom for the slowest-queries dict.
-FLAGGED_BUDGET_CHARS = 700
-
-
-def build_compact(out: dict, regressions: dict | None) -> dict:
-    """The driver-facing summary line: headline total + flags + the
-    slowest queries, truncated to a hard length budget so the line
-    stays inside the driver's stdout tail window no matter how large
-    the headline set grows (the round-4 full record outgrew it and the
-    driver recorded no headline number; pinned in
-    tests/test_bench_contract.py)."""
-    compact = {
-        "metric": out["metric"],
-        "value": out["value"],
-        "unit": out["unit"],
-        "sf": out["sf"],
-        "n_queries": len(out["queries"]),
-        "detail": "BENCH_DETAIL.json",
-    }
-    if "value_cpu" in out:
-        compact["value_cpu"] = out["value_cpu"]
-    if regressions is not None:
-        flagged = sorted(regressions.get("flagged", {}))
-        # flagged participates in the SAME length budget (ADVICE r5):
-        # a mass-regression round (a loaded box can flag most of the
-        # 90+ queries) would otherwise make this list alone ~2KB and
-        # push the line past the driver's tail window — the exact
-        # parsed:null failure this function exists to prevent.
-        # flagged_n always reports the true count; the name list is
-        # trimmed first so some slowest-queries context still fits.
-        compact["flagged_n"] = len(flagged)
-        compact["flagged"] = flagged
-        while (
-            len(json.dumps(compact)) > FLAGGED_BUDGET_CHARS and compact["flagged"]
-        ):
-            compact["flagged"].pop()
-    slowest = sorted(out["queries"].items(), key=lambda kv: -kv[1])
-    # top CPU burners ride the summary too (VERDICT r8 #1: the round
-    # record should carry both columns); capped small so the wall dict
-    # below keeps most of the budget
-    cpu = out.get("queries_cpu") or {}
-    if cpu:
-        compact["queries_cpu"] = dict(
-            sorted(cpu.items(), key=lambda kv: -kv[1])[:8]
-        )
-    compact["queries"] = {}
-    for name, secs in slowest:
-        compact["queries"][name] = secs
-        if len(json.dumps(compact)) > COMPACT_BUDGET_CHARS:
-            del compact["queries"][name]
-            break
-    return compact
-
-
-# Queries whose wall time legitimately changed vs the committed
-# BENCH_DETAIL.json baseline: the guard records the reason instead of
-# flagging. Entries are pruned once the change is >= 2 rounds old (the
-# refreshed baseline then already prices it in — VERDICT r7 #6); the
-# dated archive below records what was pruned so a returning flag can
-# be re-diagnosed quickly.
-#
-# ARCHIVE (pruned at r8; change is baked into the r7 baseline):
-#   r2 union merges: q_agg_distinct/q_agg_rollup/q_join_asof/
-#     q_join_semi ran both strategies per slot.
-#   r4: q_window_tumbling absorbed the sliding leg; q_pipeline_e2e
-#     cache-leak fix (r3 best-of-2 timed cached stage reads);
-#     q_dedup_incremental/q_dedup_near hot-bucket cap + checkpointed
-#     bands.
-#   r5: q_drift_psi absorbed value_bin leg; q_set_ops absorbed
-#     q_set_union; q_join_interval incident derivation departitioned
-#     (VERDICT r4 #4).
-#   r6: q_vector_topk bm25+rrf arms; q_mask_pii span-redact leg;
-#     q_fingerprint winnow-summary leg + single-pass rewrite;
-#     q_time_rollup PoP leg; q_split_leakage_safe per-doc assign leg.
-#   r7 waves (pruned at r9; baked into the r9 baseline): q_window_lag
-#     (lag+running+zscore legs), q_dedup_exact (raw+normalized+lines),
-#     q_text_stats (lang-ID+datacard+HT legs off one pinned scan),
-#     q_profile (corr+keyskew legs), q_histogram_bins (length_bucket
-#     leg), q_join_inner (star+broadcast strategies + the brute salted
-#     equivalence leg), q_text_quality (cheap+gopher+perplexity legs —
-#     the r9 ladder placement made the perplexity model tables carry
-#     the ln stages, bench-neutral).
-# Slots whose change is <2 rounds old keep a live entry below.
-#
-# ARCHIVE (pruned at r11; the r9 ladder/layout changes are baked into
-# the r10-quiet committed baseline):
-#   r6-r8 q_sample_stratified waves (stratified+weighted+group+quality
-#     legs, mix_temperature/mix_budget planner legs, schedule leg).
-#   r9: q_dedup_incremental one-file-per-bucket build layout;
-#     q_dsir_weights / q_source_divergence / q_drift_psi /
-#     q_vector_topk integer-ln/exp ladder restatements; q_token_bpe's
-#     six-leg tf-frame stack + entropy/divergence/pmi/tfidf ladders.
-#   r11 (retired at the r12 single-epoch re-baseline, VERDICT r11 #1 —
-#     both costs are now PRICED INTO the stored record, so the guard
-#     is re-armed on these two heaviest graded slots):
-#     q_contamination exact_spans leg (~+2.5s at sf0.1);
-#     q_dedup_exact spans leg (~+3s at sf0.1, the full ExactSubstr
-#     pipeline under the driver's hash gate).
-EXPECTED_CHANGES = {}
-REGRESSION_FACTOR = 1.5
-# Below this, per-query wall time is dominated by fixed Spark job
-# overhead plus host scheduling noise (measured: identical code swings
-# 0.4s -> 0.7s run-to-run on a quiet box); only flag queries where the
-# signal can exceed that noise.
-MIN_REGRESSION_SECONDS = 0.8
-# ... and require the ABSOLUTE slowdown to clear the same noise band:
-# a 0.6s query drifting to 0.95s under host load is not a regression,
-# a 2s query hitting 4s is.
-MIN_REGRESSION_DELTA_SECONDS = 0.8
-# CPU-side noise floor: on local[32] CPU totals run ~5-15x wall, so
-# the absolute bands scale up accordingly. Run-to-run CPU scatter on
-# identical code is dominated by JIT/GC placement (~1-2s observed);
-# require both the level and the delta to clear it.
-MIN_REGRESSION_CPU_SECONDS = 2.0
-MIN_REGRESSION_CPU_DELTA_SECONDS = 2.0
-
-
-def flag_regressions(
-    per_query: dict[str, float],
-    prev_wall: dict[str, float],
-    per_query_cpu: dict[str, float] | None = None,
-    prev_cpu: dict[str, float] | None = None,
-) -> dict[str, dict]:
-    """Pure flagging core (unit-tested against a synthetic noisy
-    host). CPU-ratio first, wall second (VERDICT r8 #1): when BOTH the
-    current run and the baseline carry CPU time for a query, the CPU
-    ratio decides — host load stretches wall but not CPU, so a loaded
-    box stops flagging untouched queries. Wall decides only when CPU
-    data is missing on either side (pre-r9 baselines)."""
-    flagged: dict[str, dict] = {}
-    for name, secs in per_query.items():
-        p = prev_wall.get(name)
-        if p is None:
-            continue
-        cpu_now = (per_query_cpu or {}).get(name)
-        cpu_prev = (prev_cpu or {}).get(name)
-        if cpu_prev is not None and cpu_prev <= 0:
-            # corrupted baseline sample (the pre-fix /proc tree delta
-            # could go negative when a worker cohort died mid-query);
-            # a garbage denominator must not flag — fall back to wall
-            cpu_prev = None
-        if cpu_now is not None and cpu_now <= 0:
-            # absent/zero CURRENT CPU (non-procfs host degrades every
-            # delta to 0.0) must not silently pass the noise floor and
-            # disable the guard — fall back to the wall signal
-            cpu_now = None
-        if cpu_now is not None and cpu_prev is not None:
-            if cpu_now < MIN_REGRESSION_CPU_SECONDS:
-                continue
-            if cpu_now - cpu_prev < MIN_REGRESSION_CPU_DELTA_SECONDS:
-                continue
-            ratio = cpu_now / cpu_prev if cpu_prev > 0 else float("inf")
-            if ratio > REGRESSION_FACTOR:
-                flagged[name] = {
-                    "prev": p,
-                    "now": secs,
-                    "prev_cpu": cpu_prev,
-                    "now_cpu": cpu_now,
-                    "ratio": round(ratio, 2),
-                    "signal": "cpu",
-                }
-        else:
-            if secs < MIN_REGRESSION_SECONDS:
-                continue
-            if secs - p < MIN_REGRESSION_DELTA_SECONDS:
-                continue
-            ratio = secs / p if p > 0 else float("inf")
-            if ratio > REGRESSION_FACTOR:
-                flagged[name] = {
-                    "prev": p,
-                    "now": secs,
-                    "ratio": round(ratio, 2),
-                    "signal": "wall",
-                }
-    return flagged
-
-
-def compare_to_previous(
-    per_query: dict[str, float],
-    sf,
-    per_query_cpu: dict[str, float] | None = None,
-) -> dict | None:
-    """Per-query regression guard vs the newest BENCH_r{N}.json: flag
-    anything slower than REGRESSION_FACTOR x its previous CPU time
-    (wall time for pre-CPU baselines; ignoring sub-overhead timings
-    and known semantic merges). Loud on stderr; structured in the JSON
-    tail for the round record."""
-    import glob
-    import re
-
-    # Primary baseline: our own full-detail record (the driver's
-    # BENCH_r*.json "parsed" now holds only the compact summary whose
-    # "queries" is a truncated slowest-first subset — fine for the
-    # headline number, too lossy for per-query regression tracking).
-    benches = sorted(
-        glob.glob(os.path.join(REPO_ROOT, "BENCH_r*.json")),
-        key=lambda p: int(re.search(r"r(\d+)", os.path.basename(p)).group(1)),
-    )
-    # checked first by the reversed() scan below
-    benches.append(os.path.join(REPO_ROOT, "BENCH_DETAIL.json"))
-    # newest bench that actually recorded per-query data (a crashed
-    # round writes rc!=0 with parsed:null — compare against the last
-    # good one instead of silently comparing against nothing)
-    prev_path, prev, prev_cpu = None, {}, None
-    for cand in reversed(benches):
-        try:
-            with open(cand) as f:
-                data = json.load(f)
-            # the driver wraps bench stdout under "parsed"
-            got = data.get("queries") or (data.get("parsed") or {}).get("queries")
-            got_cpu = data.get("queries_cpu") or (data.get("parsed") or {}).get(
-                "queries_cpu"
-            )
-            # never compare across scale factors (a local sf0.01
-            # iteration must not become the baseline for an sf0.1 run)
-            prev_sf = data.get("sf")
-            if prev_sf is None:
-                prev_sf = (data.get("parsed") or {}).get("sf")
-            if prev_sf is not None and prev_sf != sf:
-                continue
-        except (OSError, json.JSONDecodeError):
-            continue
-        if got:
-            prev_path, prev, prev_cpu = cand, got, got_cpu
-            break
-    if prev_path is None:
-        return None
-    flagged = flag_regressions(per_query, prev, per_query_cpu, prev_cpu)
-    for name, entry in flagged.items():
-        if name in EXPECTED_CHANGES:
-            entry["expected"] = EXPECTED_CHANGES[name]
-        else:
-            print(
-                f"bench REGRESSION[{entry['signal']}]: {name} "
-                f"{entry['prev']:.2f}s -> {entry['now']:.2f}s "
-                f"({entry['ratio']:.1f}x, vs {os.path.basename(prev_path)})",
-                file=sys.stderr,
-            )
-    return {"baseline": os.path.basename(prev_path), "flagged": flagged}
-
-
-if __name__ == "__main__":
-    main()

@@ -1,137 +1,9 @@
-"""The driver captures only the last ~2000 chars of bench stdout and
-parses the JSON line found there; round 4's single full-record line
-outgrew that window and the driver recorded no headline number. These
-pins keep the final summary line inside the window forever."""
+"""The per-pid ``/proc`` CPU sampler in ``bench.py``, which the
+benchmark uses for its ``cpu_s_per_op`` and per-process CPU counters."""
 
 from __future__ import annotations
 
-import json
-
 import bench
-
-
-def _fake_out(n_queries: int) -> dict:
-    return {
-        "metric": "headline_queries_total_wall",
-        "value": 123.456,
-        "unit": "sec",
-        "sf": 0.1,
-        "queries": {
-            f"q_very_long_operator_name_{i:04d}": round(0.1 * i, 3)
-            for i in range(n_queries)
-        },
-    }
-
-
-def test_compact_line_fits_tail_window_at_any_scale():
-    for n in (0, 1, 50, 91, 500, 2000):
-        out = _fake_out(n)
-        regs = {"flagged": {k: {} for k in list(out["queries"])[:5]}}
-        line = json.dumps(bench.build_compact(out, regs))
-        assert len(line) <= bench.COMPACT_BUDGET_CHARS + 200, (n, len(line))
-        parsed = json.loads(line)
-        # the headline fields the driver needs survive truncation
-        assert parsed["value"] == 123.456
-        assert parsed["n_queries"] == n
-        assert len(parsed["flagged"]) == min(5, n)
-        assert parsed["flagged_n"] == min(5, n)
-
-
-def test_compact_line_survives_mass_regression_round():
-    """ADVICE r5: a loaded box can flag most of the 90+ queries; the
-    flagged list must be trimmed inside the same budget or the final
-    line outgrows the driver's tail window (the parsed:null failure
-    mode all over again). flagged_n keeps the true count visible."""
-    for n_flagged in (90, 500):
-        out = _fake_out(max(n_flagged, 91))
-        regs = {"flagged": {k: {} for k in list(out["queries"])[:n_flagged]}}
-        line = json.dumps(bench.build_compact(out, regs))
-        assert len(line) <= bench.COMPACT_BUDGET_CHARS + 200, (n_flagged, len(line))
-        parsed = json.loads(line)
-        assert parsed["value"] == 123.456
-        assert parsed["flagged_n"] == n_flagged
-        assert 0 < len(parsed["flagged"]) < n_flagged
-        # trimming flagged must leave room for at least one slow query
-        assert parsed["queries"]
-
-
-def test_compact_line_budget_holds_with_cpu_column():
-    """r9: the queries_cpu top-burner dict rides the same budget — the
-    final line must stay inside the driver's tail window with it."""
-    out = _fake_out(300)
-    out["value_cpu"] = 999.999
-    out["queries_cpu"] = {
-        k: round(v * 11.1, 3) for k, v in out["queries"].items()
-    }
-    regs = {"flagged": {k: {} for k in list(out["queries"])[:30]}}
-    line = json.dumps(bench.build_compact(out, regs))
-    assert len(line) <= bench.COMPACT_BUDGET_CHARS + 200, len(line)
-    parsed = json.loads(line)
-    assert parsed["value_cpu"] == 999.999
-    assert len(parsed["queries_cpu"]) == 8
-    assert parsed["queries"], "wall dict must keep at least one entry"
-
-
-def test_compact_keeps_slowest_queries_first():
-    out = _fake_out(300)
-    compact = bench.build_compact(out, None)
-    kept = list(compact["queries"].values())
-    assert kept == sorted(kept, reverse=True)
-    assert kept and kept[0] == max(out["queries"].values())
-
-
-def test_headline_names_resolve_in_registry():
-    """Every HEADLINE entry must exist in the registry — a renamed
-    query silently dropping out of the bench is a coverage leak."""
-    from ai_ready_data_framework_spark import registry
-
-    registry.load_all()
-    missing = [n for n in bench.HEADLINE if n not in registry.QUERIES]
-    assert not missing, missing
-
-
-def test_cpu_guard_quiet_on_noisy_host_where_wall_flags():
-    """VERDICT r8 #1: the synthetic noisy host — every wall time
-    doubles (host contention) while CPU stays put. The CPU-primary
-    guard must stay quiet; the wall-only fallback (pre-r9 baseline
-    without queries_cpu) flags the same data."""
-    prev_wall = {f"q{i}": 2.0 for i in range(20)}
-    prev_cpu = {f"q{i}": 20.0 for i in range(20)}
-    noisy_wall = {k: v * 2.2 for k, v in prev_wall.items()}  # load-stretched
-    stable_cpu = {k: v * 1.02 for k, v in prev_cpu.items()}  # CPU unchanged
-    assert bench.flag_regressions(noisy_wall, prev_wall, stable_cpu, prev_cpu) == {}
-    wall_only = bench.flag_regressions(noisy_wall, prev_wall, None, None)
-    assert len(wall_only) == 20
-    assert all(e["signal"] == "wall" for e in wall_only.values())
-
-
-def test_cpu_guard_flags_real_cpu_regression():
-    """...and a genuine regression (CPU and wall both up 3x) flags on
-    the CPU signal, carrying both measurements in the entry."""
-    prev_wall, prev_cpu = {"q": 2.0}, {"q": 20.0}
-    flagged = bench.flag_regressions(
-        {"q": 6.0}, prev_wall, {"q": 60.0}, prev_cpu
-    )
-    assert flagged["q"]["signal"] == "cpu"
-    assert flagged["q"]["ratio"] == 3.0
-    assert flagged["q"]["now_cpu"] == 60.0
-    # sub-noise-floor CPU work never flags regardless of ratio
-    assert bench.flag_regressions(
-        {"q": 0.3}, {"q": 0.1}, {"q": 1.5}, {"q": 0.4}
-    ) == {}
-    # a corrupted (non-positive) CPU baseline falls back to the wall
-    # signal instead of flagging with a garbage Infinity ratio
-    got = bench.flag_regressions(
-        {"q": 6.0}, {"q": 2.0}, {"q": 60.0}, {"q": -10.3}
-    )
-    assert got["q"]["signal"] == "wall"
-    # ...and zero CURRENT CPU (non-procfs host: every delta degrades
-    # to 0.0) must not pass the CPU noise floor and disable the guard
-    # — the wall fallback engages (ADVICE r9)
-    got = bench.flag_regressions(
-        {"q": 6.0}, {"q": 2.0}, {"q": 0.0}, {"q": 20.0}
-    )
-    assert got["q"]["signal"] == "wall"
 
 
 def test_process_tree_cpu_delta_measures_own_burn():
@@ -161,127 +33,3 @@ def test_process_tree_cpu_delta_ignores_vanished_pids():
     # pid reuse: same pid, new starttime => new process, counted from 0
     s2 = {(111, 5): 4_100, (222, 77): 300}
     assert bench.process_tree_cpu_delta(s0, s2) == 400 / tck
-
-
-def test_expected_changes_keys_unique():
-    """A Python dict literal silently keeps only the LAST duplicate
-    key: round 7 shipped two "q_join_inner" entries and the r4
-    annotation became dead text (ADVICE r7). Parse the source AST so
-    a duplicate can never silently mask a live annotation again."""
-    import ast
-
-    tree = ast.parse(open(bench.__file__).read())
-    decls = [
-        node.value
-        for node in ast.walk(tree)
-        if isinstance(node, ast.Assign)
-        and any(getattr(t, "id", None) == "EXPECTED_CHANGES" for t in node.targets)
-    ]
-    assert len(decls) == 1
-    keys = [k.value for k in decls[0].keys if isinstance(k, ast.Constant)]
-    dupes = sorted({k for k in keys if keys.count(k) > 1})
-    assert not dupes, f"duplicate EXPECTED_CHANGES keys: {dupes}"
-    # and every annotated query must still exist — a stale key for a
-    # renamed query would silently annotate nothing
-    from ai_ready_data_framework_spark import registry
-
-    registry.load_all()
-    missing = [k for k in keys if k not in registry.QUERIES]
-    assert not missing, missing
-
-
-# --- Baseline-overwrite guard (VERDICT r10 #1) ----------------------
-# Two consecutive rounds committed a host-loaded run over the quiet
-# BENCH_DETAIL.json record; the refusal is now mechanical and these
-# pins keep it that way.
-
-
-def _run(load1=0.1, wall=88.0, sf=0.1):
-    return {"loadavg_start": [load1, 0.0, 0.0], "value": wall, "sf": sf}
-
-
-def test_baseline_guard_refuses_loaded_host():
-    # the exact r10 slip: loadavg_start 6.77, flags present
-    write, reason = bench.baseline_write_decision(
-        _run(load1=6.77, wall=124.557), {"value": 87.761, "sf": 0.1}, 5, False
-    )
-    assert not write and "loadavg" in reason
-
-
-def test_baseline_guard_refuses_zero_flag_drift():
-    # globally slow but nothing flagged = host drift, not a regression
-    write, reason = bench.baseline_write_decision(
-        _run(wall=120.0), {"value": 87.761, "sf": 0.1}, 0, False
-    )
-    assert not write and "1.2x stored" in reason
-
-
-def test_baseline_guard_allows_quiet_comparable_run():
-    write, reason = bench.baseline_write_decision(
-        _run(wall=88.5), {"value": 87.761, "sf": 0.1}, 0, False
-    )
-    assert write, reason
-
-
-def test_baseline_guard_refuses_materially_slower_run_even_with_flags():
-    # the r11 lesson: a cooling-down host produced a 2x-slow run with
-    # real-looking flags and low 1-min load — a >1.2x-wall run never
-    # silently loosens the guard, flagged or not
-    write, reason = bench.baseline_write_decision(
-        _run(wall=120.0), {"value": 87.761, "sf": 0.1}, 2, False
-    )
-    assert not write and "2 flags" in reason
-
-
-def test_baseline_guard_refuses_warm_five_minute_load():
-    # load [0.9, 1.08, 3.33] at start still measured 2x slow (r11)
-    write, reason = bench.baseline_write_decision(
-        {"loadavg_start": [0.9, 1.08, 3.33], "value": 88.0, "sf": 0.1},
-        {"value": 87.761, "sf": 0.1},
-        0,
-        False,
-    )
-    assert not write and "1m/5m" in reason
-
-
-def test_baseline_guard_refuses_cross_sf_overwrite():
-    # a local sf0.01 iteration must not destroy the committed sf0.1 record
-    write, reason = bench.baseline_write_decision(
-        _run(wall=9.0, sf=0.01), {"value": 87.761, "sf": 0.1}, 0, False
-    )
-    assert not write and "sf mismatch" in reason
-
-
-def test_baseline_guard_force_overrides_everything():
-    write, reason = bench.baseline_write_decision(
-        _run(load1=6.77, wall=200.0, sf=0.01), {"value": 87.761, "sf": 0.1}, 0, True
-    )
-    assert write and reason == "forced"
-
-
-def test_baseline_guard_writes_when_no_stored_baseline():
-    write, _ = bench.baseline_write_decision(_run(), None, 0, False)
-    assert write
-
-
-def test_persist_baseline_routes_refused_run_to_candidate(tmp_path):
-    """The refusal path must leave the stored baseline byte-identical
-    and land the full record in the sibling .candidate.json with the
-    decision recorded; an allowed run replaces the baseline in place."""
-    detail = tmp_path / "BENCH_DETAIL.json"
-    stored = {"value": 87.761, "sf": 0.1, "queries": {"q": 1.0}}
-    detail.write_text(json.dumps(stored))
-
-    loaded = {"loadavg_start": [6.77, 5.1, 4.4], "value": 124.5, "sf": 0.1}
-    wrote = bench.persist_baseline(loaded, None, str(detail), force=False)
-    assert not wrote
-    assert json.loads(detail.read_text()) == stored  # untouched
-    cand = json.loads((tmp_path / "BENCH_DETAIL.candidate.json").read_text())
-    assert cand["baseline_written"] is False
-    assert "loadavg" in cand["baseline_kept_reason"]
-
-    quiet = {"loadavg_start": [0.1, 0.2, 0.3], "value": 88.0, "sf": 0.1}
-    wrote = bench.persist_baseline(quiet, None, str(detail), force=False)
-    assert wrote
-    assert json.loads(detail.read_text())["value"] == 88.0
-    assert json.loads(detail.read_text())["baseline_written"] is True

@@ -669,6 +669,32 @@ def test_lineage_checks_follow_the_registries(monkeypatch):
     assert E._downstream({"b1"}) == {"b1", "b2"}
 
 
+def test_query_backed_checks_score_without_the_registry(
+    spark, sf_smoke, monkeypatch
+):
+    """chunk_readiness and field_masking call their operators directly,
+    so a bare CheckContext scores them whether or not the declared-query
+    registry is loaded: with it emptied they score what they score with
+    it loaded."""
+    from ai_ready_data_framework_spark import registry
+    from ai_ready_data_framework_spark.checks import engine as E
+    from ai_ready_data_framework_spark.io import load_tables
+
+    def scores() -> tuple[float, float]:
+        ctx = E.CheckContext(
+            spark=spark, sf_dir=sf_smoke, tables=load_tables(spark, sf_smoke)
+        )
+        try:
+            return E.chunk_readiness(ctx), E.field_masking(ctx)
+        finally:
+            ctx.close()
+
+    registry.load_all()
+    loaded = scores()
+    monkeypatch.setattr(registry, "QUERIES", {})
+    assert scores() == loaded
+
+
 def test_batch_throughput_runs_only_its_timed_scan(spark, sf_smoke):
     """Once the lineitem profile exists, the throughput check runs the
     jobs of its timed scan and nothing else: the row count comes from

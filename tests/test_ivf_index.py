@@ -117,86 +117,6 @@ def test_assign_cells_plan_is_aggregate_not_window(spark, sf_correctness):
     assert "partial_min_by" in post, plan
 
 
-def test_write_append_compact_probe_identity(
-    spark, sf_correctness, persisted_ivf, tmp_path
-):
-    """VERDICT r8 #2 — the maintenance half: write -> append x3 ->
-    compact must conserve every row, leave probe results IDENTICAL,
-    collapse the per-bucket file sets back to one generation, and keep
-    the exchange-free probe plan pin alive (the band-index compaction
-    contract applied to the IVF index)."""
-    import glob as _glob
-
-    from ai_ready_data_framework_spark.sources.maintenance import (
-        IVF_INDEX_BUCKETS,
-        append_ivf_index,
-        compact_ivf_index,
-    )
-
-    index, centroids = persisted_ivf
-    name, vec_dir = "ivf_index_test", str(tmp_path / "ivf" / "vectors")
-    n0 = index.count()
-    for gen in range(3):
-        batch = (
-            index.filter(F.col("vec_id") % 7 == gen)
-            .select(
-                (F.col("vec_id") + 1_000_000 * (gen + 1)).alias("vec_id"),
-                "embedding",
-            )
-        )
-        append_ivf_index(batch, centroids, name)
-    spark.catalog.refreshTable(name)
-    grown = spark.table(name)
-    n_grown = grown.count()
-    assert n_grown > n0
-    files_before = len(_glob.glob(f"{vec_dir}/*.parquet"))
-    assert files_before > IVF_INDEX_BUCKETS, files_before  # N generations
-
-    queries = grown.filter(F.col("vec_id") < ai.IVF_N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    before = {
-        tuple(r) for r in ai.ivf_probe(grown, centroids, queries).collect()
-    }
-
-    compact_ivf_index(spark, name, str(tmp_path / "ivf"))
-    spark.catalog.refreshTable(name)
-    compacted = spark.table(name)
-    # row conservation
-    assert compacted.count() == n_grown
-    # single file set per bucket restored — counted at the table's NEW
-    # location (r10: compaction publishes a fresh generation directory
-    # and deletes the old one instead of rewriting in place)
-    from ai_ready_data_framework_spark.sources.maintenance import (
-        _table_location,
-    )
-
-    new_dir = _table_location(spark, name).removeprefix("file:")
-    assert new_dir != vec_dir  # a fresh generation, not an in-place rewrite
-    assert not _glob.glob(f"{vec_dir}/*.parquet")  # old generation cleaned
-    files_after = len(_glob.glob(f"{new_dir}/*.parquet"))
-    assert 0 < files_after <= IVF_INDEX_BUCKETS, (files_before, files_after)
-    # probe identity (queries re-derived from the compacted table —
-    # the pre-compaction frame's file listing is gone by design)
-    queries = compacted.filter(F.col("vec_id") < ai.IVF_N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    after = {
-        tuple(r)
-        for r in ai.ivf_probe(compacted, centroids, queries).collect()
-    }
-    assert after == before and after
-    # the exchange-free plan pin survives compaction
-    df = ai.ivf_probe(compacted, centroids, queries)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-    plan = plan.split("== Initial Plan ==")[0]
-    assert "Bucketed: true" in plan, plan
-    for ln in plan.splitlines():
-        if "Exchange hashpartitioning" in ln:
-            assert "vec_id" not in ln, ln
-
-
 def test_ivf_refit_gate_fires_on_shift_only(spark, sf_correctness, persisted_ivf):
     """VERDICT r8 #3: a batch drawn from the index's own distribution
     must NOT trigger a refit; a displaced batch (every embedding
@@ -225,48 +145,3 @@ def test_ivf_refit_gate_fires_on_shift_only(spark, sf_correctness, persisted_ivf
     )
     assert refit_shift, psi_shift
     assert psi_shift > psi_same >= 0.0
-
-
-def test_append_then_probe_covers_both_generations(
-    spark, sf_correctness, persisted_ivf, tmp_path
-):
-    """Ingesting a batch through append_ivf_index must leave the table
-    probe-able over BOTH generations: appended vectors land in their
-    nearest cells (no refit) and a probe whose nprobe covers a new
-    vector's cell can return it as a neighbor."""
-    from ai_ready_data_framework_spark.sources.maintenance import (
-        append_ivf_index,
-        assign_cells,
-    )
-
-    index, centroids = persisted_ivf
-    n_before = index.count()
-    # synthetic batch: clones of three existing vectors under fresh ids
-    batch = (
-        index.filter(F.col("vec_id") < 3)
-        .select((F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding")
-    )
-    append_ivf_index(batch, centroids, "ivf_index_test")
-    spark.catalog.refreshTable("ivf_index_test")
-    after = spark.table("ivf_index_test")
-    assert after.count() == n_before + 3
-    # a clone must sit in the SAME cell as its original (identical
-    # embedding -> identical argmin)
-    orig = {r.vec_id: r.cell for r in index.filter(F.col("vec_id") < 3).collect()}
-    appended = {
-        r.vec_id - 1_000_000: r.cell
-        for r in after.filter(F.col("vec_id") >= 1_000_000).collect()
-    }
-    assert appended == orig
-    # probing the grown index with the original queries now surfaces
-    # the clones as top neighbors (cosine 1.0 with their originals)
-    queries = after.filter(F.col("vec_id") < ai.IVF_N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    res = ai.ivf_probe(after, centroids, queries)
-    top = {
-        (r.q_id, r.vec_id)
-        for r in res.filter(F.col("rk") == 1).collect()
-    }
-    for q in range(3):
-        assert (q, q + 1_000_000) in top, top

@@ -209,15 +209,16 @@ def test_recover_ivf_table_reissues_create(spark, sf_correctness, refit_env):
 
 
 def test_compaction_preserves_centroids_pointer_and_fold_manifest(
-    spark, refit_env, tmp_path
+    spark, refit_env, tmp_path, monkeypatch
 ):
     """Code-review r13: a ROUTINE compaction after a refit must not
     drop idx.centroids_path — read_ivf_index would silently fall back
     to the stale build-time quantizer while serving refit cell
-    assignments, collapsing recall with no error — nor reset the
-    folded-epoch manifest. idx.* side-artifact props and the folded
-    set now carry over through publish_bucketed_generation by default,
-    for every publish that does not explicitly replace them."""
+    assignments, collapsing recall with no error — nor lose the
+    folded-epoch manifest. idx.* side-artifact props carry over through
+    publish_bucketed_generation by default, for every publish that does
+    not explicitly replace them, and either compaction tier records
+    the epochs it folded."""
     name, path, assigned, centroids = refit_env
     delta_dir = str(tmp_path / "deltas")
     SI.ingest_epoch(
@@ -233,18 +234,10 @@ def test_compaction_preserves_centroids_pointer_and_fold_manifest(
         spark.read.parquet(cen_path).collect()
     }
 
-    # plain small-files compaction (passes neither pointer nor manifest)
-    M.compact_ivf_index(spark, name, path)
-    spark.catalog.refreshTable(name)
-    assert M.table_properties(spark, name)["idx.centroids_path"] == cen_path
-    assert M.folded_epochs_of(spark, name) == {0}
-    _, resolved = M.read_ivf_index(spark, name, path)
-    assert {
-        (r.cell, tuple(r.centroid)) for r in resolved.collect()
-    } == refit_cen
-
-    # delta compaction after the refit keeps the pointer too
+    # a merge into a new base generation (passes no pointer) keeps it
     new_cen = spark.read.parquet(cen_path)
+    gen = M._generation_of(spark, name)
+    monkeypatch.setattr(L, "MERGE_RATIO", 0)
     SI.ingest_epoch(
         spark,
         _displaced(assigned, keep_mod=4),
@@ -253,8 +246,29 @@ def test_compaction_preserves_centroids_pointer_and_fold_manifest(
         delta_dir,
         epoch_id=1,
     )
+    assert SI.compact_ivf_index_deltas(spark, name, path, delta_dir) == [1]
+    spark.catalog.refreshTable(name)
+    assert M._generation_of(spark, name) == gen + 1
+    assert M.table_properties(spark, name)["idx.centroids_path"] == cen_path
+    assert M.folded_epochs_of(spark, name) == {1}
+    _, resolved = M.read_ivf_index(spark, name, path)
+    assert {
+        (r.cell, tuple(r.centroid)) for r in resolved.collect()
+    } == refit_cen
+
+    # a run publish (one ALTER TABLE) keeps the pointer too
+    monkeypatch.undo()
+    SI.ingest_epoch(
+        spark,
+        _displaced(assigned, keep_mod=8),
+        new_cen,
+        name,
+        delta_dir,
+        epoch_id=2,
+    )
     SI.compact_ivf_index_deltas(spark, name, path, delta_dir)
     spark.catalog.refreshTable(name)
+    assert M.runs_of(spark, name)
     assert M.table_properties(spark, name)["idx.centroids_path"] == cen_path
 
 

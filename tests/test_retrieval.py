@@ -1,7 +1,7 @@
 """DuckDB oracles for the retrieval family (BM25, hybrid RRF), split
 assignment, and the round-2 relational stats ops (anomaly z-score,
-histogram, skew join). All SQL-expressible but registered rows-only
-(the driver's 50 graded slots are full)."""
+histogram, skew join). All SQL-expressible but registered rows-only,
+so their DuckDB oracles run here."""
 
 from __future__ import annotations
 
