@@ -369,10 +369,8 @@ def lang_marker_scores(text: Column | str) -> dict[str, Column]:
     length delta / marker length). Split out so plan-conscious callers
     (q_text_stats' graded lang_id leg) can BIND each score once in a
     projection and run the argmax cascade over the bound attributes —
-    the in-place fold in :func:`lang_id` nests each score expression
-    into every later comparison (the expression tree doubles per
-    language), which re-evaluates the 25 replace() calls many times
-    per row (measured 3.5s vs ~1s at sf0.1)."""
+    unbound, each score expression appears in the cascade twice (its
+    ``greatest`` argument and its own comparison)."""
     t = F.lower(F.col(text) if isinstance(text, str) else text)
     return {
         lang: sum(
@@ -387,9 +385,8 @@ def lang_marker_scores(text: Column | str) -> dict[str, Column]:
 def lang_id_from_scores(score_cols: dict[str, Column]) -> Column:
     """Argmax cascade over already-BOUND score columns: winner = first
     language in sorted order achieving the maximal score, 'en' when
-    every score is zero — the exact semantics of :func:`lang_id`
-    (strict-> replacement fold) and of the generated DuckDB twin
-    :func:`lang_id_sql`."""
+    every score is zero — the semantics of :func:`lang_id` and of the
+    generated DuckDB twin :func:`lang_id_sql`."""
     langs = sorted(score_cols)
     g = F.greatest(*[score_cols[lang] for lang in langs])
     first = None
@@ -406,23 +403,14 @@ def lang_id_from_scores(score_cols: dict[str, Column]) -> Column:
 def lang_id(text: Column | str) -> Column:
     """Heuristic language ID: count marker-ngram hits per language,
     pick the max (ties break by language code order). Pure expression —
-    a case/when cascade over instr counts. NOTE: the inline fold nests
-    score expressions (fine for ad-hoc projections); hot paths should
-    bind :func:`lang_marker_scores` in a projection and apply
-    :func:`lang_id_from_scores` (see q_text_stats)."""
-    scores = lang_marker_scores(text)
-    langs = sorted(scores)
-    best = None
-    best_score = None
-    for lang in langs:
-        s = scores[lang]
-        if best is None:
-            best, best_score = F.lit(lang), s
-        else:
-            cond = s > best_score
-            best = F.when(cond, F.lit(lang)).otherwise(best)
-            best_score = F.when(cond, s).otherwise(best_score)
-    return F.when(best_score > 0, best).otherwise(F.lit("en"))
+    the argmax cascade of :func:`lang_id_from_scores` over the inline
+    :func:`lang_marker_scores`. A strict-> fold (replace the winner
+    while a later score is greater) nests every score into each later
+    comparison, so its tree doubles per language: its generated code
+    outgrows the JVM's 64 KB method limit, fails to compile on every
+    job and runs interpreted. Hot paths should still bind the scores
+    in a projection first (see q_text_stats)."""
+    return lang_id_from_scores(lang_marker_scores(text))
 
 
 def lang_id_sql(lower_col: str) -> str:
@@ -433,8 +421,8 @@ def lang_id_sql(lower_col: str) -> str:
     sum over markers of occurrence count (length delta / marker
     length, float division in both engines, marker order preserved);
     winner = FIRST language in sorted order achieving the maximal
-    score (the Python fold replaces only on strict >); zero max falls
-    back to 'en'."""
+    score, as in :func:`lang_id_from_scores`; zero max falls back to
+    'en'."""
     langs = sorted(_LANG_MARKERS)
     score = {
         lang: " + ".join(

@@ -588,7 +588,7 @@ lang_texts = st.lists(
 @given(text=lang_texts)
 @SETTINGS
 def test_lang_id_twins_agree(spark, text):
-    """lang_id (inline fold), lang_id_from_scores (bound columns — the
+    """lang_id (inline scores), lang_id_from_scores (bound columns — the
     graded q_text_stats leg's plan shape), and the GENERATED DuckDB
     twin lang_id_sql must agree on ANY marker-soup text, including tie
     and zero-score cases."""
