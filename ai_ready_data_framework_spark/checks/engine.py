@@ -21,11 +21,12 @@ run and read by every check that needs it. A table that scans as exactly
 one split is profiled in one task: the frame is coalesced to its one
 partition (no data moves) and the plan needs no exchange; a table of
 several splits shuffles only its keys (``_profile_aggs``). The
-embeddings label counts, the hourly feature aggregate and the
-k-anonymity group count follow the same rule. The remaining data-level
-checks are their own aggregate queries. At 100 TB these are plain scans
-with conditional aggregates; nothing collects row-level data to the
-driver.
+embeddings label counts, the hourly feature aggregate, the k-anonymity
+group count, the point-in-time as-of join, the inverted index and the
+per-language document count follow the same rule. The remaining
+data-level checks are their own aggregate queries. At 100 TB these are
+plain scans with conditional aggregates; nothing collects row-level data
+to the driver.
 
 Two materializations are shared artifacts with their own builders:
 ``clustered_tables`` (a copy of each large table sorted within its input
@@ -199,14 +200,16 @@ def _whole_table(df: DataFrame) -> tuple[DataFrame, bool]:
     of one job. A scan of no splits stays as it is: there the final
     exchange is what yields a global aggregate's one row.
 
-    Used only by the whole-table aggregates: ``table_profile``,
+    Used only by the whole-table keyed operators: ``table_profile``,
     ``label_counts``, the hourly feature aggregate of
     ``feature_materialization_coverage`` and
-    ``feature_refresh_compliance``, and ``anonymization_effectiveness``;
-    and by ``serving_store``, which skips its bucket exchange for a
-    one-split customer. Coalescing every table read would also take the
-    reduce-side parallelism from the checks' joins and grouped
-    aggregates."""
+    ``feature_refresh_compliance``, ``anonymization_effectiveness``, the
+    as-of join of ``point_in_time_correctness``, the inverted index of
+    ``search_optimization`` and the per-language count of
+    ``bias_testing_coverage``; and by ``serving_store``, which skips its
+    bucket exchange for a one-split customer. Coalescing every table
+    read would also take the reduce-side parallelism from the checks'
+    joins and grouped aggregates."""
     if df.rdd.getNumPartitions() == 1:
         return df.coalesce(1), True
     return df, False
@@ -400,7 +403,7 @@ def search_optimization(ctx: CheckContext) -> float:
     text_assets = ["documents"]
 
     def build() -> set[str]:
-        docs = ctx.table("documents")
+        docs, _ = _whole_table(ctx.table("documents"))
         inv = (
             docs.select(
                 "doc_id", F.explode(F.split(F.col("text"), " ")).alias("token")
@@ -705,8 +708,11 @@ def propagation_latency_compliance(ctx: CheckContext) -> float:
 @check("point_in_time_correctness", "current", "training", "D", ":103-105")
 def point_in_time_correctness(ctx: CheckContext) -> float:
     """Leakage audit over the as-of-joined training matrix: fraction of
-    rows whose feature_ts <= label_ts (must be 1.0 by construction)."""
-    events = ctx.table("events")
+    rows whose feature_ts <= label_ts (must be 1.0 by construction).
+    Labels and features come from one ``_whole_table(events)`` frame, so
+    when events scans as one split the as-of join plans no exchange and
+    the check runs as one task."""
+    events, _ = _whole_table(ctx.table("events"))
     labels = events.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("ts").alias("lts")
     )
@@ -983,7 +989,8 @@ def bias_testing_coverage(ctx: CheckContext) -> float:
 
     def build() -> set[str]:
         label_counts(ctx)
-        ctx.table("documents").groupBy("lang").count().collect()
+        docs, _ = _whole_table(ctx.table("documents"))
+        docs.groupBy("lang").count().collect()
         return {"embeddings", "documents"}
 
     reports: set[str] = ctx.artifact("bias_reports", build)  # type: ignore[assignment]

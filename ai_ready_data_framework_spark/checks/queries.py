@@ -220,7 +220,7 @@ LDIV_L = 3  # required distinct sensitive values per quasi-identifier group
 LDIV_BAL_BUCKET = 1000.0  # account-balance bucket width (the sensitive attr)
 
 
-@query("q_check_ldiversity")  # rows-only: graded window full; DuckDB
+@query("q_check_ldiversity")  # rows-only; DuckDB
 # oracle runs in tests/test_corpus_ops.py
 def q_check_ldiversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """anonymization_effectiveness, l-diversity form (complements

@@ -2970,7 +2970,7 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 TFIDF_TOP_K = 5
 
 
-@query("q_tfidf_topterms")  # rows-only: graded window full; DuckDB
+@query("q_tfidf_topterms")  # rows-only; DuckDB
 # oracle runs in tests/test_ai_ops.py
 def q_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L5 (keyword extraction): top-k TF-IDF terms per document —
@@ -3554,7 +3554,7 @@ def q_vector_ann(
     return neighbors.select("vec_id", F.round("l2_dist", 4).alias("l2_dist"))
 
 
-@query("q_embed_centroids")  # rows-only: graded window full; DuckDB
+@query("q_embed_centroids")  # rows-only; DuckDB
 # oracle (tolerance compare) runs in tests/test_ai_ops.py
 def q_embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector AGGREGATION across rows (class prototypes): per-label
@@ -3777,7 +3777,7 @@ def ivf_probe(
 QUANT_MAX = 127  # symmetric int8 range
 
 
-@query("q_embed_quantize")  # rows-only: graded window full; DuckDB
+@query("q_embed_quantize")  # rows-only; DuckDB
 # oracle + reconstruction invariants run in tests/test_ai_ops.py
 def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """North star (embedding storage): symmetric int8 quantization —
@@ -3958,7 +3958,7 @@ SPLIT_TRAIN_FRAC = 0.8
 SPLIT_VAL_FRAC = 0.1
 
 
-@query("q_split_assign")  # rows-only: graded window full; DuckDB
+@query("q_split_assign")  # rows-only; DuckDB
 # oracle runs in tests/test_retrieval.py
 def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """North star (dataset mixing): deterministic train/val/test split
@@ -3984,7 +3984,7 @@ def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the top of the module (the q_dedup_ngram union oracle needs it too).
 
 
-@query("q_containment_pairs")  # rows-only: graded window full; DuckDB
+@query("q_containment_pairs")  # rows-only; DuckDB
 # oracle runs in tests/test_ai_ops.py
 def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """North star (dedup family, asymmetric form): containment pairs —
@@ -4050,7 +4050,7 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 BATCH_QUERY_VECS = 5  # vec_id 0..4 act as the query batch
 
 
-@query("q_vector_topk_batch")  # rows-only: graded window full; DuckDB
+@query("q_vector_topk_batch")  # rows-only; DuckDB
 # oracle runs in tests/test_ai_ops.py
 def q_vector_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L3 (batch form): exact cosine top-k for a BATCH of query

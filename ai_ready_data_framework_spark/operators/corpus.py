@@ -604,7 +604,7 @@ def bpe_word_histogram(docs: DataFrame, min_count: int = BPE_MIN_COUNT) -> DataF
     )
 
 
-@query("q_bpe_train")  # rows-only: graded window full; cross-engine
+@query("q_bpe_train")  # rows-only; cross-engine
 # oracle (DuckDB word histogram -> same merge loop) + invariants run in
 # tests/test_corpus_ops.py
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -722,7 +722,7 @@ def q_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("q_bpe_encode")  # rows-only: graded window full; cross-engine
+@query("q_bpe_encode")  # rows-only; cross-engine
 # oracle (DuckDB corpus walk + same encoder) runs in
 # tests/test_corpus_ops.py
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -817,7 +817,7 @@ def _dsir_bucket(term) -> "F.Column":
     return F.pmod(F.crc32(F.encode(term, "UTF-8")), F.lit(DSIR_BUCKETS))
 
 
-@query("q_dsir_weights")  # rows-only: graded window full; cross-engine
+@query("q_dsir_weights")  # rows-only; cross-engine
 # oracle (DuckDB corpus walk + Python model recompute) runs in
 # tests/test_corpus_ops.py
 def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -926,7 +926,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("q_datacard")  # rows-only: graded window full; DuckDB oracle
+@query("q_datacard")  # rows-only; DuckDB oracle
 # runs in tests/test_corpus_ops.py::test_datacard_matches_duckdb_oracle
 def q_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source data card: the one-row-per-source summary a dataset

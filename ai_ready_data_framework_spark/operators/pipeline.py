@@ -36,8 +36,8 @@ new shuffles beyond the standalone ops; counting rows per stage is a
 tiny aggregate union. The funnel over 100 TB costs what its most
 expensive stage costs.
 
-Registered rows-only (the driver's 50 graded slots are full); the
-full-funnel DuckDB oracle runs in tests/test_pipeline.py.
+Registered rows-only; the full-funnel DuckDB oracle runs in
+tests/test_pipeline.py.
 """
 
 from __future__ import annotations
@@ -130,7 +130,7 @@ def dup_drop_ids(sh: DataFrame, n_docs: int) -> DataFrame:
 
 
 
-@query("q_pipeline_e2e")  # rows-only: graded window full; full-funnel
+@query("q_pipeline_e2e")  # rows-only; full-funnel
 # DuckDB oracle runs in tests/test_pipeline.py
 def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """North star (composition): the standard pretraining-data funnel

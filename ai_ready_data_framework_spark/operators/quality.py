@@ -176,7 +176,7 @@ def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pandas import udx pulls at module scope.
 
 
-@query("q_quality_compress")  # rows-only: graded window full; exact
+@query("q_quality_compress")  # rows-only; exact
 # Python-zlib oracle + monotonicity fixtures in tests/test_quality_ops.py
 def q_quality_compress(spark: SparkSession, sf_dir: str) -> DataFrame:
     """North star (quality filtering): per-document zlib compression
@@ -209,7 +209,7 @@ def q_quality_compress(spark: SparkSession, sf_dir: str) -> DataFrame:
 HEAVY_MIN_COUNT = 2
 
 
-@query("q_heavy_hitters")  # rows-only: graded window full; DuckDB
+@query("q_heavy_hitters")  # rows-only; DuckDB
 # oracle runs in tests/test_quality_ops.py
 def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """North star (corpus profiling): the top-{K} most frequent tokens
@@ -662,7 +662,7 @@ DP_HASH_MOD = 4294967296  # 16^8: md5's first 8 hex chars
 DP_LN_SPECS = [("__dp", "(1 - 2 * abs(u - 0.5))")]
 
 
-@query("q_dp_counts")  # rows-only: graded window full; DuckDB oracle
+@query("q_dp_counts")  # rows-only; DuckDB oracle
 # runs in tests/test_quality_ops.py
 def q_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compliance (anonymization_effectiveness's aggregate-release

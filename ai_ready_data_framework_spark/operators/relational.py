@@ -1779,7 +1779,7 @@ def q_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 SKEW_TOP_KEYS = 5
 
 
-@query("q_skew_profile")  # rows-only: graded window full; DuckDB oracle
+@query("q_skew_profile")  # rows-only; DuckDB oracle
 # runs in tests/test_corpus_ops.py
 def q_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew diagnosis — the profile you run BEFORE choosing a
@@ -2127,7 +2127,7 @@ def q_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 HIST_BUCKETS = 20
 
 
-@query("q_histogram")  # rows-only: graded window full; DuckDB oracle
+@query("q_histogram")  # rows-only; DuckDB oracle
 # runs in tests/test_retrieval.py
 def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-width histogram of order totals: global (min, max) from a
@@ -2230,7 +2230,7 @@ def q_join_skew(
     )
 
 
-@query("q_feature_bins")  # rows-only: graded window full; DuckDB
+@query("q_feature_bins")  # rows-only; DuckDB
 # oracle runs in tests/test_retrieval.py
 def q_feature_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature discretization (quantile binning): per-priority exact
@@ -2472,7 +2472,7 @@ SNAPDIFF_DROP_MOD = 13
 SNAPDIFF_NEWDROP_MOD = 17
 
 
-@query("q_snapshot_diff")  # rows-only: graded window full; DuckDB
+@query("q_snapshot_diff")  # rows-only; DuckDB
 # oracle + null-semantics edge tests run in tests/test_snapshot_diff.py
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """What changed between two versions of the orders table: per
@@ -2644,7 +2644,7 @@ def schema_diff(spark: SparkSession, old_schema, new_schema) -> DataFrame:
     )
 
 
-@query("q_schema_diff")  # rows-only: graded window full; DuckDB
+@query("q_schema_diff")  # rows-only; DuckDB
 # oracle + nested/nullability edge tests run in tests/test_schema_diff.py
 def q_schema_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """What changed between two schema VERSIONS of the orders table —
@@ -2718,7 +2718,7 @@ def schema_history_log(spark: SparkSession, versions) -> DataFrame:
     return out
 
 
-@query("q_schema_history")  # rows-only: graded window full; the
+@query("q_schema_history")  # rows-only; the
 # operator's expected-set oracle runs in tests/test_schema_diff.py
 def q_schema_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The change LOG across three schema versions of the orders table

@@ -47,7 +47,9 @@ def as_of_join(
     on ties (a feature at exactly label_ts is visible, matching the
     ``<=`` bound), then propagate the last non-null feature value with
     ``last(..., ignorenulls=True)`` over an unbounded-preceding frame.
-    One shuffle on ``key``; no label x feature blowup; ties among
+    One shuffle on ``key``, none when both inputs are one partition (a
+    union of one-partition children is one partition, which the window
+    already satisfies); no label x feature blowup; ties among
     features at identical ts resolve to the largest ordering suffix
     (we append the feature's natural order columns to the sort).
     """
@@ -360,7 +362,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("q_scd2_history")  # rows-only: graded window full; DuckDB
+@query("q_scd2_history")  # rows-only; DuckDB
 # oracle runs in tests/test_asof.py
 def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporal versioning (SCD Type 2): treat each user's event stream
@@ -911,7 +913,7 @@ def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("q_dedup_latest")  # rows-only: graded window full; DuckDB
+@query("q_dedup_latest")  # rows-only; DuckDB
 # oracle runs in tests/test_temporal_ops.py
 def q_dedup_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Latest-snapshot dedup: keep each user's most recent event (by
@@ -1016,7 +1018,7 @@ def q_key_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     return latest.unionByName(scd2)
 
 
-@query("q_period_over_period")  # rows-only: graded window full; DuckDB
+@query("q_period_over_period")  # rows-only; DuckDB
 # oracle runs in tests/test_temporal_ops.py
 def q_period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Period-over-period report: daily event totals with previous-day
@@ -1147,7 +1149,7 @@ def psi_category_drift(events: DataFrame) -> DataFrame:
 PSI_VALUE_BINS = 10
 
 
-@query("q_drift_psi_value")  # rows-only: graded window full; DuckDB
+@query("q_drift_psi_value")  # rows-only; DuckDB
 # oracle runs in tests/test_corpus_ops.py
 def q_drift_psi_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-drift monitoring, continuous form: PSI of the
@@ -1335,7 +1337,7 @@ def q_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 BACKFILL_HORIZONS_H = (1, 6, 24)
 
 
-@query("q_feature_backfill")  # rows-only: graded window full; DuckDB
+@query("q_feature_backfill")  # rows-only; DuckDB
 # oracle runs in tests/test_temporal_ops.py
 def q_feature_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-feature backfill: at EVERY event, the user's trailing

@@ -169,8 +169,8 @@ def test_simhash_deterministic_and_bounded(spark, sf_smoke):
 
 
 def test_tfidf_topterms_matches_duckdb_oracle(spark, sf_correctness):
-    """q_tfidf_topterms is SQL-expressible but the graded window is
-    full, so its DuckDB oracle runs here: identical (doc, term, score,
+    """q_tfidf_topterms is SQL-expressible but registers rows-only,
+    so its DuckDB oracle runs here: identical (doc, term, score,
     rank) sets from both engines."""
     import duckdb
 
@@ -239,7 +239,7 @@ def test_tfidf_scores_clear_rounding_boundaries(spark, sf_correctness):
 
 
 def test_mix_weighted_matches_duckdb_oracle(spark, sf_correctness):
-    """q_mix_weighted is SQL-expressible but the graded window is full,
+    """q_mix_weighted is SQL-expressible but registers rows-only,
     so its DuckDB oracle runs here: identical row set from both engines
     using the same per-source md5-prefix thresholds."""
     import duckdb
@@ -957,7 +957,7 @@ def test_dedup_semantic_matches_coclustered_exact_pairs(spark, sf_correctness):
 
 def test_dedup_lines_matches_duckdb_oracle(spark, sf_correctness):
     """q_dedup_lines (C4/RefinedWeb duplicated-segment removal) is
-    SQL-expressible but the graded window is full, so its DuckDB oracle
+    SQL-expressible but registers rows-only, so its DuckDB oracle
     runs here: identical (doc, counts, reassembled text) sets."""
     import duckdb
 

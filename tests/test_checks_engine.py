@@ -545,9 +545,10 @@ def test_profile_only_checks_run_no_spark_job(spark, sf_smoke):
 
 def test_one_split_aggregates_run_as_one_job_without_shuffle(spark, sf_smoke):
     """Every fixture table scans as one split, so its profile,
-    label_counts, and (once the profiles exist) the feature-refresh and
-    k-anonymity checks each run as one Spark job that writes no
-    shuffle bytes."""
+    label_counts, (once the profiles exist) the feature-refresh and
+    k-anonymity checks, the point-in-time as-of join, the inverted index
+    and (once label_counts exists) the per-language bias report each run
+    as one Spark job that writes no shuffle bytes."""
     from ai_ready_data_framework_spark.checks import engine as E
     from ai_ready_data_framework_spark.io import load_tables
 
@@ -559,7 +560,13 @@ def test_one_split_aggregates_run_as_one_job_without_shuffle(spark, sf_smoke):
     builds = [(t, lambda t=t: E.table_profile(ctx, t)) for t in ctx.tables]
     checks = [
         (key, lambda key=key: getattr(E, key)(ctx))
-        for key in ("feature_refresh_compliance", "anonymization_effectiveness")
+        for key in (
+            "feature_refresh_compliance",
+            "anonymization_effectiveness",
+            "point_in_time_correctness",
+            "search_optimization",
+            "bias_testing_coverage",
+        )
     ]
     for name, build in (
         builds + [("label_counts", lambda: E.label_counts(ctx))] + checks
@@ -598,6 +605,44 @@ def test_point_in_time_counts_leaks_in_one_aggregate(spark, monkeypatch):
     monkeypatch.setattr(E, "as_of_join", leaky_join)
     # user 1 is clean, user 2's later click leaks, user 3 has no click
     assert E.point_in_time_correctness(ctx) == 2 / 3
+
+
+def test_point_in_time_on_three_files_keeps_its_exchange(
+    spark, sf_smoke, tmp_path, monkeypatch
+):
+    """Events written as three Parquet files scan as three splits, so
+    the as-of join keeps its exchange on the key and writes shuffle
+    bytes; the score equals the one-file layout's."""
+    from ai_ready_data_framework_spark.checks import engine as E
+    from ai_ready_data_framework_spark.io import load_tables
+
+    tables = load_tables(spark, sf_smoke)
+    one_file = E.point_in_time_correctness(
+        E.CheckContext(spark=spark, sf_dir=sf_smoke, tables=tables)
+    )
+    tables["events"].repartition(3).write.parquet(f"{tmp_path}/events")
+    as_of_join, joins = E.as_of_join, []
+
+    def recording_join(*args):
+        joins.append(as_of_join(*args))
+        return joins[-1]
+
+    monkeypatch.setattr(E, "as_of_join", recording_join)
+    # every file its own split, whatever the session's core count
+    cost = "spark.sql.files.openCostInBytes"
+    old_cost = spark.conf.get(cost)
+    spark.conf.set(cost, str(128 << 20))
+    try:
+        tables["events"] = spark.read.parquet(f"{tmp_path}/events")
+        assert tables["events"].rdd.getNumPartitions() == 3
+        ctx = E.CheckContext(spark=spark, sf_dir=sf_smoke, tables=tables)
+        s0 = _shuffle_written(spark)
+        assert E.point_in_time_correctness(ctx) == one_file
+        assert _shuffle_written(spark) > s0
+        plan = joins[0]._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange hashpartitioning(__k" in plan, plan
+    finally:
+        spark.conf.set(cost, old_cost)
 
 
 def test_run_assessment_leaves_no_scratch_dir(spark, sf_smoke):

@@ -1,6 +1,6 @@
 """DuckDB oracles + invariants for the corpus-statistics family
-(operators/corpus.py). The SQL-expressible queries replicate the
-driver's set-equality contract here (graded window is full); k-means
+(operators/corpus.py). The SQL-expressible queries register rows-only,
+so their set-equality oracles run here; k-means
 clustering gets determinism + conservation invariants instead (no ANSI
 oracle can exist for an iterative fitted model)."""
 
@@ -732,8 +732,8 @@ def test_dsir_weights_matches_python_oracle(spark, sf_correctness):
 
 
 def test_datacard_matches_duckdb_oracle(spark, sf_correctness):
-    """q_datacard (per-source data card) is SQL-expressible but the
-    graded window is full, so its DuckDB oracle runs here."""
+    """q_datacard (per-source data card) is SQL-expressible but
+    registers rows-only, so its DuckDB oracle runs here."""
     docs = table_path(sf_correctness, "documents")
     sql = f"""
         WITH base AS (

@@ -52,8 +52,8 @@ def test_load_all_leaves_a_loaded_registry_untouched(monkeypatch):
 
 
 def test_cdc_apply_matches_duckdb_oracle(spark, sf_correctness, oracle_con):
-    """q_cdc_apply is SQL-expressible but the graded window is full, so
-    its DuckDB oracle runs here: identical merged snapshots."""
+    """q_cdc_apply is SQL-expressible but registers rows-only, so its
+    DuckDB oracle runs here: identical merged snapshots."""
     from ai_ready_data_framework_spark.operators import relational as rel
 
     sql = f"""

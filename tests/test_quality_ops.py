@@ -1,7 +1,6 @@
 """DuckDB oracles + invariants for the quality-filter family
 (operators/quality.py). These queries are SQL-expressible but register
-rows-only (the driver's 50 graded slots are full), so their oracles run
-here, replicating the driver's set-equality contract."""
+rows-only, so their set-equality oracles run here."""
 
 from __future__ import annotations
 

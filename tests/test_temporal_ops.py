@@ -263,7 +263,7 @@ def test_time_rollup_pop_leg_single_day(spark, tmp_path):
 
 def test_feature_backfill_matches_duckdb_oracle(spark, sf_correctness):
     """q_feature_backfill (multi-horizon trailing features) is
-    SQL-expressible but the graded window is full, so its DuckDB
+    SQL-expressible but registers rows-only, so its DuckDB
     oracle runs here: identical per-event feature rows at all three
     horizons."""
     ev = table_path(sf_correctness, "events")
