@@ -51,6 +51,7 @@ import tempfile
 import time
 import threading
 from dataclasses import dataclass, field
+from decimal import ROUND_HALF_UP, Decimal
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
@@ -1189,14 +1190,25 @@ def run_assessment(
 
 def factor_scores(scores: DataFrame) -> DataFrame:
     """Rollup to factor and overall scores (A4 shape — the 'automated
-    assessments or dashboards' aggregation, README.md:45)."""
-    return (
-        scores.rollup("factor")
-        .agg(F.round(F.avg("value"), 4).alias("score"), F.count("*").alias("n_checks"))
-        .select(
-            F.coalesce("factor", F.lit("(overall)")).alias("factor"),
-            "score",
-            "n_checks",
-        )
-        .orderBy("factor")
+    assessments or dashboards' aggregation, README.md:45). The score
+    table is one driver-side row per check, so the roll-up runs on the
+    driver: collecting the LocalRelation runs no job, where a Spark
+    rollup paid an exchange and its jobs for six rows. The mean is
+    exact decimal arithmetic rounded HALF_UP to 4 places, so a tie
+    rounds up whatever order the scores are summed in."""
+    rows = scores.select("factor", "value").collect()
+    groups: dict[str, list[float]] = {}
+    for r in rows:
+        groups.setdefault(r.factor, []).append(r.value)
+    if rows:
+        groups["(overall)"] = [r.value for r in rows]
+    return local_df(
+        scores.sparkSession,
+        [(f, _mean_4dp(v), len(v)) for f, v in sorted(groups.items())],
+        "factor string, score double, n_checks long",
     )
+
+
+def _mean_4dp(values: list[float]) -> float:
+    mean = sum(Decimal(repr(v)) for v in values) / len(values)
+    return float(mean.quantize(Decimal("0.0001"), ROUND_HALF_UP))

@@ -11,7 +11,7 @@ list — every node adopts the smallest label in its closed neighborhood
 until a fixpoint. Each round is one equi-join + one aggregate (both
 shuffle on node id); rounds needed = graph diameter, and near-dup
 clusters are near-cliques (diameter ~2), so 3-5 rounds in practice.
-At 100 TB the same loop runs with per-round ``localCheckpoint`` (done
+At 100 TB the same loop runs with a per-round ``stage_pin`` (done
 here) to truncate lineage — without it the iterated plan nests one
 join deeper per round and Catalyst re-optimizes the whole history each
 time. The classic refinement for adversarial long-chain graphs is
@@ -69,13 +69,6 @@ def connected_components(
             .filter(F.col("n.label") != F.col("o.label"))
             .count()
         )
-        # release the superseded round's pin: a no-op for the default
-        # localCheckpoint branch (blocks are ContextCleaner-managed),
-        # but the durable persist branch holds CacheManager entries
-        # until unpersist — without this, every closure round leaks
-        # corpus-keyed cached blocks for the session's lifetime
-        # (round-6 review)
-        labels.unpersist()
         labels = new_labels
         if changed == 0:
             break

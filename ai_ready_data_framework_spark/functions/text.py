@@ -293,7 +293,7 @@ def banded_minhash_pairs(
     # the minhash subtree, and Catalyst's per-branch filter pushdown
     # makes the branches canonically different, so no exchange reuse
     # happens — recomputing cost ~25% extra at sf0.1 (measured).
-    # localCheckpoint materializes the bands ONCE for all three — the
+    # The stage pin materializes the bands ONCE for all three — the
     # in-session analogue of what the production path does durably by
     # probing the PERSISTED index (sources/maintenance.py::
     # write_band_index). Bands are (id, sig, band, bk) rows: narrow,
@@ -302,18 +302,16 @@ def banded_minhash_pairs(
     # checkpointed RDD, so its partitions compute once at first action
     # — eager would instead run the full minhash job at plan-CONSTRUCTION
     # time, charging schema inspection and plan-only tests for it.
-    # DURABILITY TRADEOFF (ADVICE r4, toggle added r6): by default
-    # localCheckpoint blocks are executor-local and non-replicated — on
-    # a real cluster an executor loss during the job FAILS it (no
-    # recompute) and it must be resubmitted. The cluster deployment
-    # flips spark.aird.durableStageCache=true (functions/cache.py) to
-    # use persist(MEMORY_AND_DISK) instead: recompute-safe, at the cost
-    # of CacheManager plan-dedup letting repeated identical calls read
-    # the first call's cache (fine in production, a measurement leak in
-    # a bench loop — which is why the LOCAL default stays checkpoint,
-    # ADVICE r3). Production at 100 TB usually takes neither path: it
-    # probes the durably PERSISTED band index (sources/maintenance.py::
-    # write_band_index), where a lost executor re-reads parquet.
+    # DURABILITY TRADEOFF (ADVICE r4): without a checkpoint directory
+    # the pin is a localCheckpoint, whose blocks are executor-local and
+    # non-replicated — on a real cluster an executor loss during the
+    # job FAILS it (no recompute) and it must be resubmitted. A cluster
+    # deployment sets spark.sparkContext.setCheckpointDir on shared
+    # storage, and every stage_pin then takes a reliable checkpoint
+    # there (functions/cache.py). Production at 100 TB usually takes
+    # neither path: it probes the durably PERSISTED band index
+    # (sources/maintenance.py::write_band_index), where a lost
+    # executor re-reads parquet.
     bands = stage_pin(minhash_bands(sig, id_col, n_hashes, n_bands), eager=False)
     hot = (
         bands.groupBy("band", "bk")

@@ -4326,9 +4326,10 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = T.minhash_signatures(sh, "doc_id", "s")
     # inline rebuild: checkpoint the bands so the hot-bucket aggregate
     # and both probe-join sides share ONE minhash pass (~25% measured;
-    # same rationale — and the same executor-loss durability tradeoff,
-    # documented at functions/text.py::banded_minhash_pairs — as that
-    # function; production probes the durable persisted index instead).
+    # same rationale — and the same checkpoint-directory rule for
+    # executor-loss safety, documented at functions/cache.py — as
+    # functions/text.py::banded_minhash_pairs; production probes the
+    # durable persisted index instead).
     # The checkpoint lives HERE, not in incremental_band_probe — the
     # persisted-index path must keep the bucketed table's partitioning
     # metadata, which a checkpoint would erase.

@@ -141,9 +141,10 @@ def source_divergence_from_st(st: DataFrame) -> DataFrame:
     Values unchanged: the pin only truncates lineage.
 
     Pin contract: ``st`` must be an aggregated, bounded frame
-    (vocabulary x sources), because this function stage-pins it (a
-    localCheckpoint by default) — a lazily derived corpus-sized frame would be materialized whole
-    to executor storage, where an executor loss cannot recompute it."""
+    (vocabulary x sources), because this function stage-pins it — a
+    lazily derived corpus-sized frame would be materialized whole to
+    the checkpoint (executor storage without a checkpoint directory,
+    where an executor loss cannot recompute it)."""
     st = stage_pin(st)
     src_tot = st.groupBy("source").agg(
         F.sum("c_st").alias("n_s"),
@@ -854,7 +855,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # build, the scoring join, and the top-k selection all consume this
     # frame, and without a materialization barrier each consumer would
     # re-run the corpus-sized explode+aggregate (measured: the explode
-    # pass dominated the operator 3x over). localCheckpoint is the
+    # pass dominated the operator 3x over). The stage pin is the
     # in-query form of what production does anyway — persist the
     # featurized table, then fit/score against it (same pattern as
     # functions/graph.py's per-round checkpoint).

@@ -146,9 +146,10 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate, the dup min-join's posting side, the eval-fold
     # shingle set, and the survivor shingles for decontam — and
     # per-branch filter pushdown makes the branches canonically
-    # different, so nothing reuses without materializing. Same lazy-checkpoint recipe (and the same
-    # executor-loss durability tradeoff, documented at
-    # functions/text.py::banded_minhash_pairs) as the minhash bands.
+    # different, so nothing reuses without materializing. Same lazy
+    # stage_pin recipe as the minhash bands (functions/text.py::
+    # banded_minhash_pairs; executor-loss safe only with a checkpoint
+    # directory, functions/cache.py).
     n_docs = docs.count()
     sh_raw = stage_pin(doc_shingles(docs))
     # Stage outputs feed BOTH the next stage and the funnel's counts,
@@ -159,17 +160,15 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subset of docs by construction), so the full-text "deduped"
     # frame is never materialized at all; the anti-join fuses straight
     # into the gopher filter in ONE uncached pass over the corpus.
-    # r14: the three stage caches are stage_pin (localCheckpoint), not
-    # .cache() — a cached plan is compiled WITHOUT AQE output
+    # r14: the three stage caches are stage_pin, not .cache() — a
+    # cached plan is compiled WITHOUT AQE output
     # coalescing (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
     # defaults false), so each id-list landed on the static 32 shuffle
     # partitions and every count/broadcast over it scheduled 32
     # near-empty tasks (three 32-task stages, ~0.2 cpu-s against
-    # ~1.3 s rt each — plans/r14 stage profile). localCheckpoint
-    # captures the AQE-coalesced output (1-2 partitions here,
-    # byte-sized at any scale); values are unchanged. ``unpersist`` is
-    # a no-op on a localCheckpoint pin: these blocks are freed only
-    # when their RDDs are garbage-collected.
+    # ~1.3 s rt each — plans/r14 stage profile). A checkpoint captures
+    # the AQE-coalesced output (1-2 partitions here, byte-sized at any
+    # scale); values are unchanged.
     dup_drop = stage_pin(dup_drop_ids(sh_raw, n_docs))
     n_dedup = n_docs - dup_drop.count()
 
@@ -220,27 +219,16 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     h8 = F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 8)
     mixed = clean.filter(h8 < thr)
 
-    # Materialize the funnel EAGERLY and unpersist the stage caches
-    # before returning: a lazily-returned plan over still-cached frames
-    # would (a) leak cached blocks into the session until LRU eviction
-    # and (b) let a re-run (bench best-of-2) silently time cached reads
-    # instead of the funnel itself (ADVICE r3). Counts are driver-side
-    # actions on the cached id frames; the division stays in a Spark
-    # expression so keep_frac rounds HALF_UP exactly like the DuckDB
-    # oracle (Python round() is banker's — a silent oracle mismatch at
-    # .00005 boundaries).
-    try:
-        counts = [
-            ("1_dedup_near", n_docs, n_dedup),
-            ("2_quality", n_dedup, quality.count()),
-        ]
-        counts.append(("3_decontam", counts[-1][2], clean.count()))
-        counts.append(("4_mix", counts[-1][2], mixed.count()))
-    finally:
-        for frame in (dup_drop, quality, clean, sh_raw):
-            # sh_raw included: no-op under the default localCheckpoint
-            # pin, required under the durable persist branch
-            frame.unpersist()
+    # Counts are driver-side actions on the pinned id frames; the
+    # division stays in a Spark expression so keep_frac rounds HALF_UP
+    # exactly like the DuckDB oracle (Python round() is banker's — a
+    # silent oracle mismatch at .00005 boundaries).
+    counts = [
+        ("1_dedup_near", n_docs, n_dedup),
+        ("2_quality", n_dedup, quality.count()),
+    ]
+    counts.append(("3_decontam", counts[-1][2], clean.count()))
+    counts.append(("4_mix", counts[-1][2], mixed.count()))
     # keep_frac guards the empty-stage denominator (r13): a corpus
     # whose quality gate drops EVERYTHING hands stage 3 rows_in = 0,
     # and under ANSI 0/0 is an error, not NULL. The old pickled-RDD

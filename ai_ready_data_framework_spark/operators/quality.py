@@ -406,8 +406,8 @@ def perplexity_per_doc(docs: DataFrame) -> DataFrame:
     )
     # tf feeds BOTH the model derivation and the scoring join; without
     # materialization the explode+aggregate runs twice (Catalyst keeps
-    # two scans — measured ~10% at sf0.1). Same checkpoint durability
-    # tradeoff note as functions/text.py::banded_minhash_pairs; the
+    # two scans — measured ~10% at sf0.1). The pin is executor-loss-safe
+    # only with a checkpoint directory set (functions/cache.py); the
     # alternative at 100 TB is a second full corpus scan + shuffle.
     tf = (
         grams.groupBy("doc_id", "w1", "w2")

@@ -73,24 +73,6 @@ def write_epoch(df: DataFrame, root: str, epoch_id: int) -> None:
     df.write.mode("overwrite").parquet(f"{root}/epoch={epoch_id}")
 
 
-def unfolded_deltas(
-    spark: SparkSession,
-    index_table: str,
-    delta_dir: str,
-    before_epoch: int | None = None,
-) -> DataFrame | None:
-    """Delta rows neither the base nor a run holds yet: epochs below
-    ``before_epoch`` minus those the table manifest lists as folded
-    (their files can outlive a compaction that crashed before its
-    cleanup)."""
-    return read_epoch_deltas(
-        spark,
-        delta_dir,
-        before_epoch,
-        exclude_epochs=folded_epochs_of(spark, index_table),
-    )
-
-
 def probe_view(
     spark: SparkSession,
     index_table: str,

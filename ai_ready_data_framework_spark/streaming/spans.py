@@ -49,8 +49,8 @@ from ai_ready_data_framework_spark.streaming.lifecycle import (
     compact,
     forget,
     maintain,
+    probe_view,
     run_stream,
-    unfolded_deltas,
     write_epoch,
 )
 
@@ -81,7 +81,9 @@ def probe_and_fold_spans(
     scrubbed_out: str | None = None,
 ) -> None:
     """One micro-batch step: semi-join the batch's grams against
-    (base index ∪ earlier deltas), merge the hits into maximal spans
+    (base ∪ runs ∪ earlier deltas, lifecycle.probe_view — one read of
+    the table properties, so a run published mid-probe can never drop
+    its epochs from both sides), merge the hits into maximal spans
     per new doc, overwrite this epoch's spans partition, then
     overwrite this epoch's gram delta so the NEXT epoch sees these
     docs as corpus. Both writes are epoch-keyed overwrites — replays
@@ -103,10 +105,8 @@ def probe_and_fold_spans(
     # build runs once per epoch, not once per action
     batch_grams = stage_pin(gram_postings(batch_docs, min_run=min_run))
     spans = probe_spans(
-        spark,
         batch_grams,
-        index_table,
-        earlier=unfolded_deltas(spark, index_table, delta_dir, epoch_id),
+        probe_view(spark, index_table, delta_dir, epoch_id),
         min_run=min_run,
         exclude_ids=batch_docs.select("doc_id").distinct(),
     )
@@ -136,34 +136,26 @@ def _write_spans(
 
 
 def probe_spans(
-    spark: SparkSession,
     batch_grams: DataFrame,
-    index_table: str,
-    earlier: DataFrame | None = None,
+    corpus: DataFrame,
     min_run: int = SPAN_MIN_RUN,
     exclude_ids: DataFrame | None = None,
 ) -> DataFrame:
     """The probe plan itself (pure, so tests can pin its physical
-    shape): batch grams LEFT SEMI join the hash-bucketed index, base ∪
-    runs (the corpus-sized side claims HashPartitioning(h) from its
-    buckets and never reshuffles; only the rate-sized batch side
-    moves), then the
+    shape): batch grams LEFT SEMI join the corpus postings — the
+    hash-bucketed index, base ∪ runs (``index_view``), plus any earlier
+    deltas (``probe_view``); the bucketed side claims
+    HashPartitioning(h) from its buckets and never reshuffles, only the
+    rate-sized batch side moves — then the
     per-doc interval merge. ``exclude_ids`` (a doc_id frame) drops
-    those documents' postings from BOTH index sides before the hash
+    those documents' postings from the corpus before the hash
     projection — a broadcast anti-join, so the bucketed side's
     partitioning survives (plan-pinned). Callers pass the batch's own
     ids: self-provenance must never count as corpus (ADVICE r10
     replay/compaction race; see probe_and_fold_spans)."""
-
-    def _without_own(postings: DataFrame) -> DataFrame:
-        if exclude_ids is None:
-            return postings
-        return postings.join(F.broadcast(exclude_ids), "doc_id", "left_anti")
-
-    probe = _without_own(index_view(spark, index_table)).select("h")
-    if earlier is not None:
-        probe = probe.unionByName(_without_own(earlier).select("h"))
-    hits = batch_grams.join(probe, "h", "left_semi")
+    if exclude_ids is not None:
+        corpus = corpus.join(F.broadcast(exclude_ids), "doc_id", "left_anti")
+    hits = batch_grams.join(corpus.select("h"), "h", "left_semi")
     ints = hits.select(
         "doc_id",
         F.col("pos").alias("s"),
@@ -250,7 +242,9 @@ def run_decontam_stream(
 
     def step(batch_df: DataFrame, epoch_id: int) -> None:
         grams = gram_postings(batch_df, min_run=min_run)
-        spans = probe_spans(spark, grams, benchmark_table, min_run=min_run)
+        spans = probe_spans(
+            grams, index_view(spark, benchmark_table), min_run=min_run
+        )
         _write_spans(batch_df, spans, spans_out, scrubbed_out, epoch_id)
 
     run_stream(

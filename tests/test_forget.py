@@ -30,6 +30,8 @@ def _ids(spark, *vals):
 
 
 def test_forget_documents_gram_erases_probe_matches(spark, tmp_path):
+    from ai_ready_data_framework_spark.sources import maintenance as M
+
     index_docs = spark.createDataFrame(
         [(d, _text(f"base{d}_")) for d in range(1, 11)],
         "doc_id long, text string",
@@ -76,9 +78,8 @@ def test_forget_documents_gram_erases_probe_matches(spark, tmp_path):
         got = {
             r.doc_id
             for r in SS.probe_spans(
-                spark,
                 gram_postings(probe, min_run=MIN_RUN),
-                table,
+                M.index_view(spark, table),
                 min_run=MIN_RUN,
             ).collect()
         }

@@ -10,6 +10,9 @@ choices (broadcast conversion, coalescing) are what we assert on.
 
 from __future__ import annotations
 
+import contextlib
+import os
+
 import pytest
 
 from ai_ready_data_framework_spark import registry
@@ -562,35 +565,56 @@ def test_key_history_prunes_latest_leg_before_exchange(spark, sf_smoke):
     ), plan
 
 
-def test_stage_pin_durable_branch_selection(spark):
-    """VERDICT r5 #3: the stage-cache helper picks localCheckpoint by
-    default and persist(MEMORY_AND_DISK) under the session toggle."""
-    from pyspark import StorageLevel
-
-    from ai_ready_data_framework_spark.functions.cache import (
-        DURABLE_CACHE_CONF,
-        stage_pin,
-    )
-
-    local = stage_pin(spark.range(10))
-    assert local.storageLevel == StorageLevel.NONE  # checkpoint, not persist
-    assert local.count() == 10
-    spark.conf.set(DURABLE_CACHE_CONF, "true")
+@contextlib.contextmanager
+def _checkpoint_dir(spark, path):
+    """Give the session a checkpoint directory for the block, so every
+    stage_pin takes a reliable checkpoint there, then clear it through
+    the Scala setter: a leftover directory would switch every later
+    test's pins to reliable checkpoints."""
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(path))
     try:
-        durable = stage_pin(spark.range(10, 20), eager=True)
-        assert durable.storageLevel == StorageLevel.MEMORY_AND_DISK
-        assert durable.count() == 10
-        durable.unpersist()
+        yield
     finally:
-        spark.conf.set(DURABLE_CACHE_CONF, "false")
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(spark._jvm.scala.Option.empty())
+        assert not sc._jsc.sc().getCheckpointDir().isDefined()
+
+
+def _checkpoint_files(path) -> int:
+    return sum(len(files) for _, _, files in os.walk(path))
+
+
+def _pinned_rdd(df):
+    """The RDD a stage_pin output reads (its plan is a LogicalRDD)."""
+    return df._jdf.queryExecution().logical().rdd()  # noqa: SLF001
+
+
+def test_stage_pin_durable_branch_selection(spark, tmp_path):
+    """VERDICT r5 #3: stage_pin takes a localCheckpoint without a
+    checkpoint directory and a reliable checkpoint, written under the
+    directory, with one."""
+    from ai_ready_data_framework_spark.functions.cache import stage_pin
+
+    local = stage_pin(spark.range(10), eager=True)
+    assert _pinned_rdd(local).isCheckpointed()
+    assert not _pinned_rdd(local).getCheckpointFile().isDefined()
+    assert local.count() == 10
+    ckpt = tmp_path / "ckpt"
+    with _checkpoint_dir(spark, ckpt):
+        durable = stage_pin(spark.range(10, 20), eager=True)
+        rdd = _pinned_rdd(durable)
+        assert rdd.getCheckpointFile().isDefined()
+        assert rdd.getCheckpointFile().get().startswith(f"file:{ckpt}")
+        assert _checkpoint_files(ckpt) > 0
+        assert durable.count() == 10
 
 
 # Every stage_pin call site in the engine (functions/cache.py), keyed
 # by the registered query that executes it (VERDICT r6 #3: drive ALL
-# sites through the durable persist branch, not one representative):
+# sites through the reliable checkpoint, not one representative):
 #   functions/text.py::banded_minhash_pairs   -> q_dedup_near
 #   functions/graph.py iterative closure (x3) -> q_dedup_clusters (and
-#                                                 the leak test below)
+#                                                 the closure test below)
 #   operators/ai.py winnowed shingle frame    -> q_fingerprint
 #   operators/ai.py shared bm25 score frame   -> q_vector_topk
 #   operators/ai.py inline band rebuild       -> q_dedup_incremental
@@ -634,65 +658,41 @@ DURABLE_SITE_QUERIES = [
 
 
 @pytest.mark.parametrize("name", DURABLE_SITE_QUERIES)
-def test_durable_stage_cache_identical_results(spark, sf_smoke, name):
-    """Each stage_pin site through the persist branch: identical rows
-    with the durability toggle on, and bounded plan retention — the
-    persist branch keeps lineage (that is its point: executor-loss
-    recovery), so the final plan may grow vs the checkpoint-truncated
-    default, but must stay within a fixed factor, not explode with
-    data size or (for the iterative sites) with iteration count."""
-    from ai_ready_data_framework_spark.functions.cache import DURABLE_CACHE_CONF
+def test_durable_stage_cache_identical_results(spark, sf_smoke, tmp_path, name):
+    """Each stage_pin site through a reliable checkpoint: identical
+    rows with a checkpoint directory as without one, and the site's
+    pin really wrote its checkpoint under that directory. A lazy
+    reliable checkpoint recomputes its frame to write it, so a site
+    whose pinned frame is not deterministic would show here as a row
+    difference."""
     from ai_ready_data_framework_spark.registry import QUERIES
 
-    def plan_len(df) -> int:
-        return len(
-            df._jdf.queryExecution().optimizedPlan().toString()
-        )
+    def rows() -> list[tuple]:
+        got = QUERIES[name](spark, sf_smoke).collect()
+        return sorted(map(tuple, got), key=_null_safe_row_key)
 
-    base_df = QUERIES[name](spark, sf_smoke)
-    baseline = sorted(map(tuple, base_df.collect()), key=_null_safe_row_key)
-    base_plan = plan_len(base_df)
-    spark.conf.set(DURABLE_CACHE_CONF, "true")
-    try:
-        durable_df = QUERIES[name](spark, sf_smoke)
-        durable = sorted(
-            map(tuple, durable_df.collect()), key=_null_safe_row_key
-        )
+    baseline = rows()
+    ckpt = tmp_path / "ckpt"
+    with _checkpoint_dir(spark, ckpt):
+        durable = rows()
         assert durable == baseline, name
         assert durable, name
-        durable_plan = plan_len(durable_df)
-        # lineage retention is bounded. Lazy single-pin sites re-grow
-        # by one pinned subtree (constant factor + allowance). The
-        # iterative closure is the documented worst case of the
-        # persist FALLBACK (no checkpoint dir): each round's plan
-        # embeds the previous round's, exponential in rounds but
-        # hard-capped by the loop bound (measured ~1.1 MB at the
-        # fixture's depth; the reliable-checkpoint branch below is
-        # the production answer and stays truncated)
-        cap = (
-            2_000_000
-            if name == "q_dedup_clusters"
-            else 20 * base_plan + 100_000
-        )
-        assert durable_plan < cap, (name, base_plan, durable_plan)
-    finally:
-        spark.conf.set(DURABLE_CACHE_CONF, "false")
-        spark.catalog.clearCache()
+        assert _checkpoint_files(ckpt) > 0, name
 
 
 def _null_safe_row_key(row: tuple) -> tuple:
     return tuple((v is None, 0 if v is None else v) for v in row)
 
 
-def test_durable_stage_cache_component_closure_releases_rounds(spark, sf_smoke):
+def test_durable_stage_cache_component_closure_releases_rounds(
+    spark, sf_smoke, tmp_path
+):
     """The connected-components closure (functions/graph.py, the
-    iterative stage_pin site, driven by q_dedup_clusters) through the
-    persist branch: the clusters must be identical, and the per-round
-    unpersist must leave no CacheManager entries behind (the durable
-    branch would otherwise leak one pin per round). Leak accounting is
-    a DELTA — getPersistentRDDs also tracks not-yet-GC'd
-    localCheckpoint blocks from earlier tests."""
-    from ai_ready_data_framework_spark.functions.cache import DURABLE_CACHE_CONF
+    iterative stage_pin site, driven by q_dedup_clusters) with a
+    checkpoint directory: identical clusters, every round's pin is a
+    file under the directory, and no round holds executor storage.
+    Storage accounting is a DELTA — getPersistentRDDs also tracks
+    not-yet-GC'd localCheckpoint blocks from earlier tests."""
     from ai_ready_data_framework_spark.registry import QUERIES
 
     def clusters() -> list[tuple]:
@@ -700,63 +700,44 @@ def test_durable_stage_cache_component_closure_releases_rounds(spark, sf_smoke):
         return sorted(map(tuple, rows))
 
     base = clusters()
-    spark.catalog.clearCache()
     jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    spark.conf.set(DURABLE_CACHE_CONF, "true")
-    try:
+    ckpt = tmp_path / "ckpt"
+    with _checkpoint_dir(spark, ckpt):
+        before = jsc.getPersistentRDDs().size()
         durable = clusters()
         assert durable == base
         assert durable
-        # the loop unpersists superseded rounds; only the symmetrized
-        # edge pin and the final labels pin may be newly registered
-        assert jsc.getPersistentRDDs().size() - before <= 2, (
+        assert jsc.getPersistentRDDs().size() <= before, (
             before,
             jsc.getPersistentRDDs().size(),
         )
-    finally:
-        spark.conf.set(DURABLE_CACHE_CONF, "false")
-        spark.catalog.clearCache()
+        # the symmetrized edges, the seed labels and one labels frame
+        # per round (at least one round)
+        rdds = [d for d in os.listdir(next(ckpt.iterdir())) if d.startswith("rdd-")]
+        assert len(rdds) >= 3, rdds
 
 
 def test_durable_reliable_checkpoint_truncates_iterative_plans(
     spark, sf_smoke, tmp_path
 ):
     """With a checkpoint dir configured (the cluster-production setup),
-    the durable branch switches to RELIABLE checkpoints: identical
-    results AND truncated lineage even for the iterative closure —
-    the persist fallback's exponential-in-rounds plan (the r6 VERDICT
-    #3 hazard) disappears. Runs LAST among the durable tests: the
-    checkpoint dir is session state, restored via the scala setter in
-    the finally (with a documented best-effort fallback)."""
-    from ai_ready_data_framework_spark.functions.cache import DURABLE_CACHE_CONF
+    stage_pin takes RELIABLE checkpoints: identical results AND
+    truncated lineage even for the iterative closure, whose rounds
+    would otherwise nest each previous round's plan (the r6 VERDICT
+    #3 hazard)."""
     from ai_ready_data_framework_spark.registry import QUERIES
 
     base = sorted(
         map(tuple, QUERIES["q_dedup_clusters"](spark, sf_smoke).collect())
     )
-    sc = spark.sparkContext
-    spark.conf.set(DURABLE_CACHE_CONF, "true")
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
-    try:
+    with _checkpoint_dir(spark, tmp_path / "ckpt"):
         ck_df = QUERIES["q_dedup_clusters"](spark, sf_smoke)
         assert sorted(map(tuple, ck_df.collect())) == base
         plan = ck_df._jdf.queryExecution().optimizedPlan().toString()
         # reliable checkpoints truncate: the closure's final plan is
-        # scan-of-checkpoint sized, nowhere near the persist
-        # fallback's ~1.1 MB retained lineage
+        # scan-of-checkpoint sized, nowhere near the ~1.1 MB an
+        # untruncated 20-round closure retains
         assert len(plan) < 50_000, len(plan)
-    finally:
-        spark.conf.set(DURABLE_CACHE_CONF, "false")
-        spark.catalog.clearCache()
-        try:  # clear the checkpoint dir (scala Option setter)
-            getattr(sc._jsc.sc(), "checkpointDir_$eq")(
-                spark._jvm.scala.Option.empty()
-            )
-        except Exception:
-            # best effort: a left-over checkpoint dir only changes
-            # WHICH durable branch later tests take, never results
-            pass
 
 
 def test_round6_unions_are_single_scan(spark, sf_smoke):

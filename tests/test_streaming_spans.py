@@ -177,7 +177,9 @@ def test_probe_index_side_needs_no_exchange(spark, span_env, tmp_path):
     (to doc_id for the interval merge), NEVER the index."""
     index_docs, b1, _, table = span_env
     df = SS.probe_spans(
-        spark, gram_postings(b1, min_run=MIN_RUN), table, min_run=MIN_RUN
+        gram_postings(b1, min_run=MIN_RUN),
+        M.index_view(spark, table),
+        min_run=MIN_RUN,
     )
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
@@ -185,6 +187,39 @@ def test_probe_index_side_needs_no_exchange(spark, span_env, tmp_path):
     assert "Bucketed: true" in plan, plan
     # batch->h + hits->doc_id are the only permissible hash exchanges
     assert plan.count("Exchange hashpartitioning") <= 2, plan
+
+
+def test_span_probe_reads_table_properties_once(
+    spark, span_env, tmp_path, monkeypatch
+):
+    """The span probe takes its runs and its folded epochs from ONE
+    snapshot of the table properties (lifecycle.probe_view): a run
+    published between two reads would drop that run's epochs from both
+    the run list and the delta read, and their spans would be missed."""
+    _, b1, b2, table = span_env
+    delta_dir = str(tmp_path / "deltas")
+    spans_out = str(tmp_path / "spans")
+    calls = []
+
+    def counting(real):
+        def table_properties(spark, name):
+            calls.append(name)
+            return real(spark, name)
+
+        return table_properties
+
+    SS.probe_and_fold_spans(
+        spark, b1, table, delta_dir, spans_out, 0, min_run=MIN_RUN
+    )
+    monkeypatch.setattr(M, "table_properties", counting(M.table_properties))
+    monkeypatch.setattr(L, "table_properties", counting(L.table_properties))
+    SS.probe_and_fold_spans(
+        spark, b2, table, delta_dir, spans_out, 1, min_run=MIN_RUN
+    )
+    assert calls == [table]
+    assert _span_set(spark, spans_out, 1) == _batch_oracle(
+        b2, span_env[0].union(b1)
+    )
 
 
 def test_gram_index_recovers_after_swap_crash(
@@ -218,9 +253,8 @@ def test_gram_index_recovers_after_swap_crash(
     got = {
         r.doc_id
         for r in SS.probe_spans(
-            spark,
             gram_postings(b1, min_run=MIN_RUN),
-            table,
+            M.index_view(spark, table),
             min_run=MIN_RUN,
         ).collect()
     }
@@ -496,9 +530,8 @@ def test_probe_exclusion_broadcasts_never_reshuffles_index(
     exchange."""
     index_docs, b1, _, table = span_env
     df = SS.probe_spans(
-        spark,
         gram_postings(b1, min_run=MIN_RUN),
-        table,
+        M.index_view(spark, table),
         min_run=MIN_RUN,
         exclude_ids=b1.select("doc_id").distinct(),
     )
